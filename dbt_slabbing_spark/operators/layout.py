@@ -333,20 +333,27 @@ def _manifest_unlock(p, fd: int) -> None:
     os.close(fd)
 
 
+# table metadata each commit carries forward from the previous snapshot
+# unless the caller passes a replacement in ``_commit_manifest(replace=)``
+_CARRIED = (
+    "dv",
+    "bloom_cfg",
+    "staged",
+    "constraints",
+    "clustered",
+    "column_map",
+    "dropped_columns",
+    "added_columns",
+)
+
+
 def _commit_manifest(
     p,
     files: list[str],
     expected_version: int | None = None,
     stats: dict | None = None,
-    dv: dict | None = None,
-    bloom_cfg: dict | None = None,
-    staged: dict | None = None,
-    constraints: dict | None = None,
-    clustered: dict | None = None,
-    column_map: dict | None = None,
-    dropped_columns: list | None = None,
-    added_columns: dict | None = None,
     cdc: dict | None = None,
+    replace: dict | None = None,
 ) -> int:
     """Atomically publish the live file list: write a temp file, then
     ``os.replace`` over ``_manifest.json`` — the single commit point of
@@ -382,6 +389,10 @@ def _commit_manifest(
     data-file footer; the footer+sidecar path remains only as the
     fallback for pre-r11 tables and commits that didn't pass stats.
 
+    ``replace`` maps keys of :data:`_CARRIED` to their new value; every
+    carried key not in it keeps the previous snapshot's value. An empty
+    or ``None`` replacement drops the key.
+
     ``dv`` is the deletion-vector mapping to publish
     (``{data_file: [dv_file, ...]}``, Delta's DV sidecar contract):
     positions listed in a file's DV parquets are dead at read time.
@@ -394,9 +405,9 @@ def _commit_manifest(
     DV mapping — O(files-with-deletes) per entry, small by
     construction — so time travel restores row-level content exactly.
 
-    ``bloom_cfg`` replaces the bloom-index registry
+    ``bloom_cfg`` is the bloom-index registry
     (``{col: {"m": bits, "k": hashes}}`` — see
-    :func:`create_bloom_index`); carried forward when not passed. The
+    :func:`create_bloom_index`). The
     BITSETS themselves live in the ``_bloom.json`` SIDECAR, not the
     manifest: at real sizing (~1 bit/key × keys/file × files) they are
     megabytes, and an inline copy would make every manifest read —
@@ -406,18 +417,17 @@ def _commit_manifest(
     the file (conservative, still exact), so sidecar staleness is
     harmless and history entries never record bitsets.
 
-    ``staged`` replaces the write-audit-publish registry
+    ``staged`` is the write-audit-publish registry
     (``{audit_id: [file, ...]}`` — see :func:`stage_append`): files
     parked in the table dir that NO read sees until their audit
     passes and :func:`publish_staged` moves them into ``files``.
-    Carried forward verbatim when not passed (staged names are not in
-    the live list, so the live-set filters never touch them).
+    Staged names are not in the live list, so only empty batches are
+    filtered out.
 
-    ``constraints`` replaces the CHECK-constraint registry
-    (``{name: sql_expr}`` — see :func:`add_constraint`); carried
-    forward verbatim when not passed.
+    ``constraints`` is the CHECK-constraint registry
+    (``{name: sql_expr}`` — see :func:`add_constraint`).
 
-    ``clustered`` replaces the clustering state
+    ``clustered`` is the clustering state
     (``{"by": [col, ...], "files": [...]}`` — which live files were
     produced by a clustering rewrite, see :func:`compact_table` /
     :func:`compact_incremental`); its file list carries forward
@@ -427,31 +437,19 @@ def _commit_manifest(
     """
     import json
     import os
+    import time
 
+    unknown = set(replace or ()) - set(_CARRIED)
+    if unknown:
+        raise ValueError(f"not a carried manifest key: {sorted(unknown)}")
     mf = p / _MANIFEST
     fd = _manifest_lock(p)
     try:
-        version, history, prev_stats, prev_dv = 1, [], {}, {}
-        prev_bloom_cfg, prev_staged = {}, {}
-        prev_constraints, prev_clustered, prev_column_map = {}, {}, {}
-        prev_dropped = []
-        prev_added = {}
-        prev_rows = {}
+        prev, cur, history = {}, 0, []
         if mf.exists():
             prev = json.loads(mf.read_text())
             cur = int(prev.get("version", 1))
-            version = cur + 1
             history = prev.get("history", [])
-            prev_stats = prev.get("stats", {})
-            prev_rows = prev.get("rows", {})
-            prev_dv = prev.get("dv", {})
-            prev_bloom_cfg = prev.get("bloom_cfg", {})
-            prev_staged = prev.get("staged", {})
-            prev_constraints = prev.get("constraints", {})
-            prev_clustered = prev.get("clustered", {})
-            prev_column_map = prev.get("column_map", {})
-            prev_dropped = prev.get("dropped_columns", [])
-            prev_added = prev.get("added_columns", {})
             # DELTA-encoded history entry (r9): store what the NEW
             # commit adds/removes relative to the displaced snapshot,
             # not the displaced snapshot's full file list. Full-list
@@ -470,8 +468,8 @@ def _commit_manifest(
             }
             if prev.get("ts") is not None:  # displaced commit's wall time
                 entry["ts"] = prev["ts"]
-            if prev_dv:  # record displaced snapshot's DV state (small)
-                entry["dv"] = prev_dv
+            if prev.get("dv"):  # record displaced snapshot's DV state (small)
+                entry["dv"] = prev["dv"]
             # commit-time CDC record for the cur -> cur+1 transition
             # (Delta CDF's _change_data contract): {"type": "append"}
             # (inserts = this entry's added files), {"type": "noop"}
@@ -483,8 +481,6 @@ def _commit_manifest(
             if cdc is not None:
                 entry["cdc"] = cdc
             history.append(entry)
-        else:
-            cur = 0
         if expected_version is not None and cur != expected_version:
             raise ManifestConflictError(
                 f"manifest at version {cur}, expected {expected_version}: "
@@ -492,9 +488,10 @@ def _commit_manifest(
                 "snapshot (nothing was published)"
             )
         live_set = set(files)
-        merged_stats = {n: s for n, s in prev_stats.items() if n in live_set}
-        if stats:
-            merged_stats.update({n: s for n, s in stats.items() if n in live_set})
+        merged_stats = {
+            n: s for n, s in {**prev.get("stats", {}), **(stats or {})}.items()
+            if n in live_set
+        }
         # per-file ROW COUNTS (r15, separate key from "stats" — a pseudo
         # column inside the stats records would break the schema-set
         # comparison of _schema_heterogeneous): carried forward for
@@ -504,7 +501,9 @@ def _commit_manifest(
         # count() job over the table (Delta/Iceberg record exactly this
         # in their add-file actions). A file whose footer can't be read
         # here simply stays uncovered; readers fall back per file.
-        merged_rows = {n: r for n, r in prev_rows.items() if n in live_set}
+        merged_rows = {
+            n: r for n, r in prev.get("rows", {}).items() if n in live_set
+        }
         uncounted = [n for n in files if n not in merged_rows]
         if uncounted:
             import pyarrow.parquet as _pq
@@ -514,13 +513,9 @@ def _commit_manifest(
                     merged_rows[n] = int(_pq.ParquetFile(str(p / n)).metadata.num_rows)
                 except Exception:
                     pass  # footer unreadable now: reader falls back
-        base_dv = dv if dv is not None else prev_dv
-        merged_dv = {n: d for n, d in base_dv.items() if n in live_set and d}
-        import time as _time
-
         doc = {
             "files": sorted(files),
-            "version": version,
+            "version": cur + 1,
             "history": history,
             "stats": merged_stats,
             # commit wall time: the anchor for time-based retention
@@ -528,40 +523,28 @@ def _commit_manifest(
             # column. Informational for OCC (the version number is the
             # ordering authority); pre-r13 manifests lack it and their
             # snapshots count as older than any horizon.
-            "ts": _time.time(),
+            "ts": time.time(),
         }
         if merged_rows:
             doc["rows"] = merged_rows
-        if merged_dv:
-            doc["dv"] = merged_dv
-        cfg = bloom_cfg if bloom_cfg is not None else prev_bloom_cfg
-        if cfg:
-            doc["bloom_cfg"] = cfg
-        stg = staged if staged is not None else prev_staged
-        stg = {a: fs for a, fs in stg.items() if fs}
-        if stg:
-            doc["staged"] = stg
-        cns = constraints if constraints is not None else prev_constraints
-        if cns:
-            doc["constraints"] = cns
-        clu = clustered if clustered is not None else prev_clustered
-        if clu:
-            kept = [n for n in clu.get("files", []) if n in live_set]
-            if kept:
-                doc["clustered"] = {"by": clu["by"], "files": kept}
-        cm = column_map if column_map is not None else prev_column_map
-        if cm:
-            doc["column_map"] = cm
-        dc = dropped_columns if dropped_columns is not None else prev_dropped
-        if dc:
-            doc["dropped_columns"] = dc
-        ac = added_columns if added_columns is not None else prev_added
-        if ac:
-            doc["added_columns"] = ac
+        for key in _CARRIED:
+            val = (replace or {}).get(key, prev.get(key))
+            # live-set filters: DV entries and clustering membership
+            # follow their data files out of the live list; empty
+            # staged batches drop
+            if key == "dv" and val:
+                val = {n: d for n, d in val.items() if n in live_set and d}
+            elif key == "staged" and val:
+                val = {a: fs for a, fs in val.items() if fs}
+            elif key == "clustered" and val:
+                kept = [n for n in val.get("files", []) if n in live_set]
+                val = {"by": val["by"], "files": kept} if kept else None
+            if val:
+                doc[key] = val
         tmp = p / (_MANIFEST + ".tmp")
         tmp.write_text(json.dumps(doc))
         os.replace(str(tmp), str(mf))
-        return version
+        return cur + 1
     finally:
         _manifest_unlock(p, fd)
 
@@ -838,7 +821,7 @@ def _scan_with_dv(
     return _to_logical(out, cmap, dropped, added)
 
 
-def _live_row_count(p, live: list[str], dv_map: dict) -> int:
+def _live_row_count(p, live: list[str], dv_map: dict, spark=None) -> int:
     """Live row count of a snapshot WITHOUT a Spark job (r15; guide §7
     driver cost — every mutation paid a full-table ``count()`` for its
     ``rows_before``): base rows from the manifest's per-file ``rows``
@@ -849,7 +832,9 @@ def _live_row_count(p, live: list[str], dv_map: dict) -> int:
     inlines/broadcasts the same set on every scan; big deletes take
     mode="cow" and rewrite). Matches ``_scan_with_dv(...).count()``
     exactly: clean files count whole, dirty files subtract the distinct
-    positions of the DV parquets they reference."""
+    positions of the DV parquets they reference. A file with neither a
+    ``rows`` record nor a readable footer makes the whole count fall
+    back to that Spark count when ``spark`` is given (raises without)."""
     import json
 
     import pyarrow.parquet as pq
@@ -865,7 +850,12 @@ def _live_row_count(p, live: list[str], dv_map: dict) -> int:
     for n in live:
         r = rows_rec.get(n)
         if r is None:
-            r = int(pq.ParquetFile(str(p / n)).metadata.num_rows)
+            try:
+                r = int(pq.ParquetFile(str(p / n)).metadata.num_rows)
+            except (OSError, ValueError):
+                if spark is None:
+                    raise
+                return _scan_with_dv(spark, p, live, dv_map).count()
         base += int(r)
     live_set = set(live)
     dv_files = sorted({d for n, lst in dv_map.items() if n in live_set for d in lst})
@@ -1489,8 +1479,9 @@ def create_bloom_index(
     for _ in range(10):
         try:
             version = _commit_manifest(
-                p, live, expected_version=vers, bloom_cfg=cfg,
+                p, live, expected_version=vers,
                 cdc={"type": "noop", "op": "CREATE INDEX"},
+                replace={"bloom_cfg": cfg},
             )
             break
         except ManifestConflictError:
@@ -1726,7 +1717,6 @@ def _stage_change_rows(
     reclaims unreferenced change files past the grace window).
     Returns the staged names relative to the table root."""
     import pathlib
-    import shutil
 
     frames = []
     for df, tag in parts:
@@ -1740,20 +1730,40 @@ def _stage_change_rows(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
-    staging = pathlib.Path(str(p) + f".cdc-{token}")
-    out.write.mode("overwrite").parquet(str(staging))
     cdir = p / _CHANGES_DIR
     cdir.mkdir(exist_ok=True)
-    names = []
-    moved = 0
-    for f in sorted(staging.glob("*.parquet")):
-        if f.stat().st_size and _parquet_has_rows(f):
-            name = f"{_CHANGES_DIR}/cdc-{token}-{moved:05d}.parquet"
-            f.rename(cdir / f"cdc-{token}-{moved:05d}.parquet")
+    names = _write_and_rename(
+        out, pathlib.Path(str(p) + f".cdc-{token}"), cdir, f"cdc-{token}-",
+        skip_empty=True,
+    )
+    return [f"{_CHANGES_DIR}/{n}" for n in names]
+
+
+def _write_and_rename(
+    df: DataFrame, staging, dest, prefix: str, skip_empty: bool = False
+) -> list[str]:
+    """Write ``df`` as parquet into ``staging`` (a directory beside the
+    table, so on the same filesystem), then rename each part file into
+    ``dest`` as ``{prefix}{i:05d}.parquet`` — the one way every writer
+    lands files in a table. Renamed files stay invisible until a
+    manifest commit lists them; a crash before it leaves orphans for
+    :func:`vacuum_orphans`. ``skip_empty`` drops part files without
+    rows. The staging directory is removed on success and on failure.
+    Returns the new names, in part order."""
+    import shutil
+
+    try:
+        df.write.mode("overwrite").parquet(str(staging))
+        names = []
+        for f in sorted(staging.glob("*.parquet")):
+            if skip_empty and not (f.stat().st_size and _parquet_has_rows(f)):
+                continue
+            name = f"{prefix}{len(names):05d}.parquet"
+            f.rename(dest / name)
             names.append(name)
-            moved += 1
-    shutil.rmtree(str(staging), ignore_errors=True)
-    return names
+        return names
+    finally:
+        shutil.rmtree(str(staging), ignore_errors=True)
 
 
 def _parquet_has_rows(f) -> bool:
@@ -2348,7 +2358,6 @@ def append_files(
     readers never see a partial append. Returns ``{"n_files_added",
     "n_files_total"}``."""
     import pathlib
-    import shutil
     import uuid
 
     p = pathlib.Path(path)
@@ -2371,14 +2380,9 @@ def append_files(
     # appended file names embed it, making "was this logical append
     # already committed?" answerable from the live list alone.
     token = token or uuid.uuid4().hex[:12]
-    staging = pathlib.Path(str(p) + f".append-{token}")
-    df.write.mode("overwrite").parquet(str(staging))
-    added = []
-    for i, f in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"append-{token}-{i:05d}.parquet"
-        shutil.move(str(f), str(p / name))
-        added.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
+    added = _write_and_rename(
+        df, pathlib.Path(str(p) + f".append-{token}"), p, f"append-{token}-"
+    )
     # OCC with blind-append auto-rebase (Delta's AppendOnly resolution):
     # an append removes nothing, so a conflicting commit is resolved by
     # re-reading the new snapshot and re-attaching our uniquely-named
@@ -2386,7 +2390,7 @@ def append_files(
     added_stats = _stats_for_added(p, added)
     for _ in range(10):
         try:
-            kw = {}
+            replace = {}
             if cluster_by:
                 prev_clu = _clustered_state(p)
                 if prev_clu and prev_clu["by"] != list(cluster_by):
@@ -2399,13 +2403,13 @@ def append_files(
                     for n in (prev_clu["files"] if prev_clu else [])
                     if n in set(live)
                 ]
-                kw["clustered"] = {
+                replace["clustered"] = {
                     "by": list(cluster_by),
                     "files": base + added,
                 }
             _commit_manifest(
                 p, live + added, expected_version=vers, stats=added_stats,
-                cdc={"type": "append", "op": "WRITE"}, **kw
+                cdc={"type": "append", "op": "WRITE"}, replace=replace,
             )
             break
         except ManifestConflictError:
@@ -2647,10 +2651,8 @@ def rename_column(path, old: str, new: str) -> dict:
         p,
         live,
         expected_version=vers,
-        bloom_cfg=bloom_cfg,
-        clustered=clustered,
-        column_map=cmap,
         cdc={"type": "noop", "op": "RENAME COLUMN"},
+        replace={"bloom_cfg": bloom_cfg, "clustered": clustered, "column_map": cmap},
     )
     side = _bloom_sidecar(p)
     if old in side:  # re-key the sidecar too (best effort, lock-held)
@@ -2711,10 +2713,10 @@ def drop_column(path, col: str) -> dict:
         p,
         live,
         expected_version=vers,
-        column_map=cmap,
-        dropped_columns=dropped,
-        added_columns=added,
         cdc={"type": "noop", "op": "DROP COLUMN"},
+        replace={
+            "column_map": cmap, "dropped_columns": dropped, "added_columns": added
+        },
     )
     return {"col": col, "physical": physical, "version": version}
 
@@ -2763,8 +2765,9 @@ def add_column(path, col: str, dtype: str) -> dict:
         raise ValueError(f"column {col!r} already exists")
     added[col] = dtype
     version = _commit_manifest(
-        p, live, expected_version=vers, added_columns=added,
+        p, live, expected_version=vers,
         cdc={"type": "noop", "op": "ADD COLUMN"},
+        replace={"added_columns": added},
     )
     return {"col": col, "dtype": dtype, "version": version}
 
@@ -2841,8 +2844,9 @@ def add_constraint(spark, path, name: str, expr: str) -> dict:
     for _ in range(10):
         try:
             version = _commit_manifest(
-                p, live, expected_version=vers, constraints=cons,
+                p, live, expected_version=vers,
                 cdc={"type": "noop", "op": "ADD CONSTRAINT"},
+                replace={"constraints": cons},
             )
             break
         except ManifestConflictError:
@@ -2893,7 +2897,9 @@ def drop_constraint(path, name: str) -> dict:
         raise ValueError(f"no constraint {name!r}")
     cons.pop(name)
     version = _commit_manifest(
-        p, live, expected_version=vers, constraints=cons, cdc={"type": "noop", "op": "DROP CONSTRAINT"}
+        p, live, expected_version=vers,
+        cdc={"type": "noop", "op": "DROP CONSTRAINT"},
+        replace={"constraints": cons},
     )
     return {"name": name, "version": version}
 
@@ -3050,7 +3056,6 @@ def stage_append(spark, path, df: DataFrame, audit_id: str | None = None) -> dic
     BEFORE this commit leaves plain orphans inside the grace window.
     Returns ``{"audit_id", "n_files_staged", "version"}``."""
     import pathlib
-    import shutil
     import uuid
 
     p = pathlib.Path(path)
@@ -3062,14 +3067,9 @@ def stage_append(spark, path, df: DataFrame, audit_id: str | None = None) -> dic
     _enforce_constraints(p, df)  # CHECK constraints gate staging too
     df = _to_physical(p, df)
     _reject_dropped_collisions(p, df)  # dropped-name reuse = silent loss
-    staging = pathlib.Path(str(p) + f".stage-{audit_id}")
-    df.write.mode("overwrite").parquet(str(staging))
-    added = []
-    for i, f in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"staged-{audit_id}-{i:05d}.parquet"
-        shutil.move(str(f), str(p / name))
-        added.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
+    added = _write_and_rename(
+        df, pathlib.Path(str(p) + f".stage-{audit_id}"), p, f"staged-{audit_id}-"
+    )
     for _ in range(10):  # blind-append rebase: staging removes nothing
         try:
             reg = dict(_staged_registry(p))
@@ -3082,8 +3082,8 @@ def stage_append(spark, path, df: DataFrame, audit_id: str | None = None) -> dic
                 raise ValueError(f"audit_id {audit_id!r} already staged")
             reg[audit_id] = added
             version = _commit_manifest(
-                p, live, expected_version=vers, staged=reg,
-                cdc={"type": "noop", "op": "WAP STAGE"},
+                p, live, expected_version=vers,
+                cdc={"type": "noop", "op": "WAP STAGE"}, replace={"staged": reg},
             )
             break
         except ManifestConflictError:
@@ -3148,7 +3148,8 @@ def publish_staged(spark, path, audit_id: str) -> dict:
         try:
             version = _commit_manifest(
                 p, live + added, expected_version=vers, stats=stats,
-                staged=reg, cdc={"type": "append", "op": "WAP PUBLISH"},
+                cdc={"type": "append", "op": "WAP PUBLISH"},
+                replace={"staged": reg},
             )
             break
         except ManifestConflictError:
@@ -3179,8 +3180,8 @@ def discard_staged(path, audit_id: str) -> dict:
     for _ in range(10):
         try:
             _commit_manifest(
-                p, live, expected_version=vers, staged=reg,
-                cdc={"type": "noop", "op": "WAP DISCARD"},
+                p, live, expected_version=vers,
+                cdc={"type": "noop", "op": "WAP DISCARD"}, replace={"staged": reg},
             )
             break
         except ManifestConflictError:
@@ -3255,7 +3256,6 @@ def compact_table(
     Returns ``{"n_files_before", "n_files_after", "version"}``.
     """
     import pathlib
-    import shutil
     import uuid
 
     p = pathlib.Path(path)
@@ -3285,7 +3285,6 @@ def compact_table(
     total = sum((p / n).stat().st_size for n in scope)
     n_files = max(1, -(-total // target_file_bytes))  # ceil
     token = uuid.uuid4().hex[:12]
-    staging = pathlib.Path(str(p) + f".compact-{token}")
     # DV-applied read: compaction MATERIALIZES deletion vectors — the
     # rewritten files hold only live rows, and the commit's carry-
     # forward drops the displaced files' DV entries (OPTIMIZE's
@@ -3296,14 +3295,11 @@ def compact_table(
         df = df.sortWithinPartitions(*cluster_by)
     else:
         df = df.repartition(int(n_files))
-    _to_physical(p, df).write.mode("overwrite").parquet(str(staging))
-    new_names = []
-    for i, f in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"compact-{token}-{i:05d}.parquet"
-        f.rename(p / name)
-        new_names.append(name)
-    shutil.rmtree(str(staging), ignore_errors=True)
-    clustered = None
+    new_names = _write_and_rename(
+        _to_physical(p, df), pathlib.Path(str(p) + f".compact-{token}"), p,
+        f"compact-{token}-",
+    )
+    replace = {}
     if cluster_by:
         # a clustered rewrite records its output as the table's
         # clustering state (compact_incremental's baseline); a SCOPED
@@ -3315,7 +3311,7 @@ def compact_table(
             if prev_clu and prev_clu["by"] == list(cluster_by)
             else []
         )
-        clustered = {"by": list(cluster_by), "files": base + new_names}
+        replace["clustered"] = {"by": list(cluster_by), "files": base + new_names}
     version = _commit_manifest(  # ATOMIC + OCC; an unclustered FULL
         # rewrite displaces every file, so carry-forward drops any
         # previous clustering state automatically
@@ -3323,8 +3319,8 @@ def compact_table(
         untouched + new_names,
         expected_version=vers,
         stats=_stats_for_added(p, new_names),
-        clustered=clustered,
         cdc={"type": "noop", "op": "OPTIMIZE"},
+        replace=replace,
     )
     return {
         "n_files_before": len(live),
@@ -3360,7 +3356,6 @@ def compact_incremental(
     "version"}``."""
     import json
     import pathlib
-    import shutil
     import uuid
 
     p = pathlib.Path(path)
@@ -3383,18 +3378,14 @@ def compact_incremental(
     total = sum((p / n).stat().st_size for n in unclustered)
     n_files = max(1, -(-total // target_file_bytes))  # ceil
     token = uuid.uuid4().hex[:12]
-    staging = pathlib.Path(str(p) + f".inccompact-{token}")
     df = _scan_with_dv(
         spark, p, unclustered, _dv_at_version(p), merge_schema=True
     )
     df = df.repartitionByRange(int(n_files), *by).sortWithinPartitions(*by)
-    _to_physical(p, df).write.mode("overwrite").parquet(str(staging))
-    new_names = []
-    for i, f in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"inccompact-{token}-{i:05d}.parquet"
-        f.rename(p / name)
-        new_names.append(name)
-    shutil.rmtree(str(staging), ignore_errors=True)
+    new_names = _write_and_rename(
+        _to_physical(p, df), pathlib.Path(str(p) + f".inccompact-{token}"), p,
+        f"inccompact-{token}-",
+    )
     gone = set(unclustered)
     kept = [n for n in live if n not in gone]
     version = _commit_manifest(  # ATOMIC + OCC
@@ -3402,8 +3393,10 @@ def compact_incremental(
         kept + new_names,
         expected_version=vers,
         stats=_stats_for_added(p, new_names),
-        clustered={"by": by, "files": sorted(clustered_files | set(new_names))},
         cdc={"type": "noop", "op": "OPTIMIZE"},
+        replace={
+            "clustered": {"by": by, "files": sorted(clustered_files | set(new_names))}
+        },
     )
     for n in unclustered:  # post-commit cleanup; failure → orphans only
         _unlink_quiet(p / n)
@@ -3606,6 +3599,167 @@ def _unlink_quiet(f) -> None:
         pass
 
 
+# columns a staged changed-row artifact carries beyond the table's own:
+# the scan's attribution columns plus the classification tag
+_STAGE_COLS = _META_COLS + ("__action",)
+
+
+def _row_images(df: DataFrame) -> DataFrame:
+    """``df`` without the mutation kernel's attribution/tag columns."""
+    return df.drop(*_STAGE_COLS)
+
+
+def _mutate(
+    spark, p, op: str, mode: str, retain: bool, vers: int, live: list[str],
+    dv_prev: dict, cand: list[str], keys: tuple, changed, rewrite, derive,
+    insert_tag: str | None = None,
+) -> dict:
+    """The one write path of DELETE, UPDATE and MERGE: the caller
+    classifies, this kernel does everything else.
+
+    1. ONE DV-applied scan ``tgt`` of the candidate files ``cand`` (a
+       DV'd row is neither changed nor kept), attributed by ``_file``
+       under cow and by ``__dv_name``/``__dv_pos`` under dv.
+    2. ``changed(tgt)`` — the target rows the mutation changes, tagged
+       ``__action`` ("D"/"X" deleted, any other tag replaced by a new
+       image) — is staged ONCE under ``{table}.{op}-{token}``; the
+       per-file counts, the DV, the CDC rows and the new images all
+       derive from that O(changed rows) artifact ``m``, never from a
+       second candidate scan.
+    3. One ``groupBy`` attributes ``m`` to files and actions.
+    4. ``derive(tgt, m)`` returns ``(appends, changes, stats)``: the
+       ``(frame, tag)`` new rows to append, the CDC parts for
+       :func:`_stage_change_rows`, and any stats the op counts itself.
+    5. cow rewrites the affected files' kept rows, ``rewrite(tgt,
+       uris)``; dv writes ONE deletion-vector parquet of the changed
+       positions instead — zero data files rewritten.
+    6. ONE OCC :func:`_commit_manifest`: a conflicting commit raises
+       before anything is published, leaving the staged files as
+       invisible orphans for :func:`vacuum_orphans`. Only then does
+       ``retain=False`` (cow) unlink the displaced files.
+
+    New files are named ``part-{op}-{token}-{tag}NNNNN.parquet`` (a
+    merge's rewrite is tagged ``r``, delete/update rewrites are not)
+    and ``dv-{token}-00000.parquet``; appends tagged ``insert_tag`` are
+    the commit's ``insert_files`` CDC pointer. The staging directory is
+    removed however the call ends. A delete/update that changes no row
+    commits nothing. Returns the stats named in ``keys`` (plus
+    ``n_dv_files_added`` under dv)."""
+    import pathlib
+    import shutil
+    import uuid
+
+    cow = mode == "cow"
+    keys = keys if cow else keys + ("n_dv_files_added",)
+    rows_before = _live_row_count(p, live, dv_prev, spark)
+    st = {
+        "rows_before": rows_before, "rows_deleted": 0, "rows_updated": 0,
+        "rows_inserted": 0, "rows_after": rows_before, "n_files_total": len(live),
+        "n_files_rewritten": 0, "n_files_added": 0, "n_dv_files_added": 0,
+    }
+
+    def result() -> dict:
+        return {k: int(st[k]) for k in keys}
+
+    # only a MERGE adds rows that no target row produced: the others
+    # commit nothing when no target row changes
+    adds_rows = op == "merge"
+    if not cand and not adds_rows:
+        return result()
+    tgt = _scan_with_dv(
+        spark, p, cand or live, dv_prev, merge_schema=False,
+        keep_file_col=cow, keep_pos_col=not cow,
+    )
+    if not cand:
+        tgt = tgt.limit(0)
+    token = uuid.uuid4().hex[:12]
+    stage = pathlib.Path(str(p) + f".{op}-{token}")
+    gone: set = set()
+    try:
+        changed(tgt).write.mode("overwrite").parquet(str(stage / "matched"))
+        m = _read_staged_or_none(spark, stage / "matched")
+        if m is None:
+            m = changed(tgt).limit(0)
+        fcol = "_file" if cow else "__dv_name"
+        # bounded: one row per affected file and action
+        per_file = m.groupBy(fcol, "__action").count().collect()
+        if not per_file and not adds_rows:
+            return result()
+        uris = sorted({r[fcol] for r in per_file})
+        affected = sorted({_uri_to_name(u) for u in uris})
+        appends, changes, extra = derive(tgt, m)
+        new_names, ins_names = [], []
+        if cow and affected:
+            gone = set(affected)
+            kept = _row_images(rewrite(tgt, uris)).repartition(len(affected))
+            rtag = "r" if op == "merge" else ""
+            new_names += _write_and_rename(
+                _to_physical(p, kept), stage / "rewrite", p,
+                f"part-{op}-{token}-{rtag}",
+            )
+        for df, tag in appends:
+            names = _write_and_rename(
+                _to_physical(p, df), stage / tag, p, f"part-{op}-{token}-{tag}"
+            )
+            new_names += names
+            if tag == insert_tag:
+                ins_names += names
+        new_dv = dv_prev
+        if not cow and affected:
+            dead = m.select(
+                F.col("__dv_name").alias("file"), F.col("__dv_pos").alias("pos")
+            )
+            # one sidecar per mutation (the Delta DV granularity): the DV
+            # is O(changed rows) — a change touching half the table is
+            # what mode="cow" is for
+            dv_name = _write_and_rename(
+                dead.coalesce(1), stage / "dv", p, f"dv-{token}-"
+            )[0]
+            new_dv = {n: list(lst) for n, lst in dv_prev.items()}
+            for n in affected:
+                new_dv.setdefault(n, []).append(dv_name)
+        cdc = {
+            "type": "rows",
+            "files": _stage_change_rows(p, changes, token),
+            "op": op.upper(),
+        }
+        if ins_names:
+            cdc["insert_files"] = ins_names
+        files = [n for n in live if n not in gone] + new_names
+        n_deleted = sum(r["count"] for r in per_file if r["__action"] in ("D", "X"))
+        st.update(
+            rows_deleted=n_deleted,
+            rows_updated=sum(r["count"] for r in per_file) - n_deleted,
+            rows_after=_live_row_count(p, files, new_dv, spark),
+            n_files_rewritten=len(gone),
+            n_files_added=len(new_names),
+            n_dv_files_added=int(bool(affected) and not cow),
+        )
+        # images replace their rows one for one, so what is left of the
+        # row delta is the inserts
+        st["rows_inserted"] = st["rows_after"] - rows_before + n_deleted
+        st.update(extra)
+        _commit_manifest(
+            p, files, expected_version=vers, stats=_stats_for_added(p, new_names),
+            cdc=cdc, replace=None if cow else {"dv": new_dv},
+        )
+    finally:
+        shutil.rmtree(str(stage), ignore_errors=True)
+    if not retain:  # the DEFAULT (retain=True) keeps displaced
+        # originals on disk — a CONCURRENT READER may be mid-scan of
+        # the old snapshot (the r12 multi-writer fuzz caught eager
+        # unlinks killing such readers with FILE_NOT_EXIST), and prior
+        # snapshots stay time-travel-readable until vacuum reclaims
+        # past the retention/grace windows (the Delta contract:
+        # mutations never delete data files; VACUUM is the one
+        # reclaimer). retain=False is the eager single-writer
+        # space-reclaim mode — safe only when no reader can hold an
+        # older snapshot.
+        for n in sorted(gone):  # post-commit cleanup; failure → orphans only
+            _unlink_quiet(p / n)
+    return result()
+
+
 def delete_rows(
     spark,
     path: str,
@@ -3669,138 +3823,29 @@ def delete_rows(
     than the local ``isin`` literal used here (same plan shape).
     """
     import pathlib
-    import shutil
-    import uuid
 
     p = pathlib.Path(path)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
     vers, live = _snapshot_for_update(p)
-    if not live:  # brand-new/empty table: DELETE is a zero-count no-op
-        out = {
-            "rows_before": 0,
-            "rows_deleted": 0,
-            "rows_after": 0,
-            "n_files_total": 0,
-            "n_files_rewritten": 0,
-        }
-        if mode == "dv":
-            out["n_dv_files_added"] = 0
-        return out
-    dv_prev = _dv_at_version(p)
-    if mode == "dv":
-        return _delete_rows_dv(
-            spark, p, cond, vers, live, dv_prev, predicate=predicate
-        )
-    # rows_before: manifest row record minus DV dead positions — pure
-    # driver metadata, no Spark job (r15; see _live_row_count)
-    rows_before = _live_row_count(p, live, dv_prev)
-    # file pruning (Delta's DELETE file skipping): the matching scan
-    # runs over CANDIDATE files only — files whose stats prove the
-    # predicate false everywhere can hold no matching row, so they are
-    # neither scanned nor rewritten (at 100 TB: a day-targeted DELETE
-    # on a clustered table scans O(day), not O(table))
-    cand = _candidate_files(p, live, predicate)
-    if not cand:
-        return {
-            "rows_before": int(rows_before),
-            "rows_deleted": 0,
-            "rows_after": int(rows_before),
-            "n_files_total": len(live),
-            "n_files_rewritten": 0,
-        }
-    # mergeSchema: the predicate may reference a column added by a
-    # later append_files generation; files predating it read NULL there
-    # (predicate NULL → row survives, per the DELETE semantics below)
-    df = _scan_with_dv(
-        spark, p, cand, dv_prev, merge_schema=False, keep_file_col=True
+    return _mutate(
+        spark, p, "delete", mode, retain, vers, live, _dv_at_version(p),
+        # file pruning (Delta's DELETE file skipping): files whose stats
+        # prove the predicate false everywhere are neither scanned nor
+        # rewritten (a day-targeted DELETE on a clustered table scans
+        # O(day), not O(table))
+        _candidate_files(p, live, predicate),
+        ("rows_before", "rows_deleted", "rows_after", "n_files_total",
+         "n_files_rewritten"),
+        changed=lambda tgt: tgt.filter(cond).withColumn("__action", F.lit("D")),
+        # survivors = rows of affected files where the predicate is NOT
+        # TRUE (coalesce keeps predicate-NULL rows, per DELETE semantics)
+        rewrite=lambda tgt, uris: tgt.filter(
+            F.col("_file").isin(uris) & ~F.coalesce(cond, F.lit(False))
+        ),
+        derive=lambda tgt, m: ([], [(_row_images(m), "delete")], {}),
     )
-    token = uuid.uuid4().hex[:12]
-    cdcstage = pathlib.Path(str(p) + f".delstage-{token}")
-    # ONE matching scan stages the deleted rows (with their file
-    # attribution); the per-file counts AND the commit's CDC change
-    # file derive from that O(matched rows) artifact instead of
-    # re-scanning the candidates (same discipline as _delete_rows_dv)
-    try:
-        df.filter(cond).write.mode("overwrite").parquet(
-            str(cdcstage / "matched")
-        )
-        m = _read_staged_or_none(spark, cdcstage / "matched")
-        if m is None:  # nothing matched: no rewrite, no commit
-            return {
-                "rows_before": int(rows_before),
-                "rows_deleted": 0,
-                "rows_after": int(rows_before),
-                "n_files_total": len(live),
-                "n_files_rewritten": 0,
-            }
-        per_file = (
-            m.groupBy("_file")
-            .agg(F.count(F.lit(1)).alias("_hits"))
-            .collect()  # bounded: one row per AFFECTED file
-        )
-        rows_deleted = sum(r["_hits"] for r in per_file)
-        affected_uris = [r["_file"] for r in per_file]
-        affected_names = sorted({_uri_to_name(u) for u in affected_uris})
-        stats = {
-            "rows_before": int(rows_before),
-            "rows_deleted": int(rows_deleted),
-            "rows_after": int(rows_before - rows_deleted),
-            "n_files_total": len(live),
-            "n_files_rewritten": len(affected_names),
-        }
-        if not affected_names:
-            return stats
-        cdc_files = _stage_change_rows(
-            p, [(m.drop("_file"), "delete")], token
-        )
-    finally:
-        shutil.rmtree(str(cdcstage), ignore_errors=True)
-
-    # survivors = rows of affected files where the predicate is NOT
-    # TRUE (coalesce keeps predicate-NULL rows, per DELETE semantics)
-    staging = pathlib.Path(str(p) + f".delete-{token}")
-    survivors = (
-        df.filter(F.col("_file").isin(affected_uris) & ~F.coalesce(cond, F.lit(False)))
-        .drop("_file")
-        .repartition(max(1, len(affected_names)))
-    )
-    _to_physical(p, survivors).write.mode("overwrite").parquet(str(staging))
-    # move replacements into the table dir under unique names — not yet
-    # visible to manifest readers (the manifest doesn't list them)
-    new_names = []
-    for i, f in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"part-delete-{token}-{i:05d}.parquet"
-        f.rename(p / name)  # same filesystem: staging is a sibling dir
-        new_names.append(name)
-    shutil.rmtree(str(staging), ignore_errors=True)
-    gone = set(affected_names)
-    # ATOMIC + OCC: raises ManifestConflictError (publishing nothing)
-    # if another commit landed since `vers` — critically BEFORE the
-    # unlinks below, so a losing delete can never remove files a
-    # winning concurrent commit still references. Caller retries the
-    # whole operation; the staged replacements are orphans for vacuum.
-    _commit_manifest(
-        p,
-        [n for n in live if n not in gone] + new_names,
-        expected_version=vers,
-        stats=_stats_for_added(p, new_names),
-        cdc={"type": "rows", "files": cdc_files, "op": "DELETE"},
-    )
-    if not retain:  # the DEFAULT (retain=True) keeps displaced
-        # originals on disk — a CONCURRENT READER may be mid-scan of
-        # the old snapshot (the r12 multi-writer fuzz caught eager
-        # unlinks killing such readers with FILE_NOT_EXIST), and prior
-        # snapshots stay time-travel-readable until vacuum reclaims
-        # past the retention/grace windows (the Delta contract:
-        # mutations never delete data files; VACUUM is the one
-        # reclaimer). retain=False is the eager single-writer
-        # space-reclaim mode — safe only when no reader can hold an
-        # older snapshot.
-        for n in affected_names:  # post-commit cleanup; failure → orphans only
-            _unlink_quiet(p / n)
-    return stats
 
 
 def _read_staged_or_none(spark, d) -> DataFrame | None:
@@ -3816,130 +3861,15 @@ def _read_staged_or_none(spark, d) -> DataFrame | None:
     return spark.read.parquet(str(d))
 
 
-def _delete_rows_dv(spark, p, cond, vers, live, dv_prev, predicate=None) -> dict:
-    """Merge-on-read DELETE (see :func:`delete_rows` ``mode="dv"``):
-    one DV parquet of matched (file, pos) pairs, one manifest commit
-    mapping affected files to it, ZERO data-file rewrites. Existing
-    DVs are applied to the matching scan first, so an already-dead row
-    is never re-counted and a second DELETE on the same file UNIONS
-    (the file's DV list grows; the read path unions the parquets).
-    Crash/OCC contract matches the copy-on-write path: the DV file is
-    staged into the table dir before the commit (invisible until the
-    manifest maps it; an aborted commit leaves it for vacuum)."""
-    import pathlib
-    import shutil
-    import uuid
-
-    # file pruning, same contract as the cow path: the matching scan
-    # touches candidate files only (skipped files can hold no match)
-    cand = _candidate_files(p, live, predicate) if predicate else list(live)
-    df = _scan_with_dv(
-        spark, p, cand, dv_prev, merge_schema=False, keep_pos_col=True
-    ) if cand else None
-    # rows_before WITHOUT any Spark job (r15): manifest row record minus
-    # the snapshot's dead-position cardinality (DV parquets are tiny by
-    # contract) — a DV delete's cost must stay O(matched rows)
-    rows_before = _live_row_count(p, live, dv_prev)
-    if df is None:  # every file provably unaffected
-        return {
-            "rows_before": int(rows_before),
-            "rows_deleted": 0,
-            "rows_after": int(rows_before),
-            "n_files_total": len(live),
-            "n_files_rewritten": 0,
-            "n_dv_files_added": 0,
-        }
-    token = uuid.uuid4().hex[:12]
-    staging = pathlib.Path(str(p) + f".dv-{token}")
-    # ONE candidate scan materializes the matched rows (full images +
-    # position meta) into a small staging parquet; the DV parquet, the
-    # per-file counts, AND the commit's change file all derive from
-    # that O(matched rows) artifact — the pre-r14 writer paid this
-    # same single scan for the DV alone, so commit-time CDC costs the
-    # mutation two tiny derived jobs, not a second table scan
-    # (measured: the naive re-scan doubled DV-delete cost at 10M rows)
-    try:
-        df.filter(cond).write.mode("overwrite").parquet(
-            str(staging / "matched")
-        )
-        m = _read_staged_or_none(spark, staging / "matched")
-        if m is None:  # nothing matched: no DV, no commit
-            return {
-                "rows_before": int(rows_before),
-                "rows_deleted": 0,
-                "rows_after": int(rows_before),
-                "n_files_total": len(live),
-                "n_files_rewritten": 0,
-                "n_dv_files_added": 0,
-            }
-        # the DV is O(matched rows): a handful of positions for a
-        # targeted delete — coalesce(1) is deliberate (one sidecar per
-        # DELETE, the Delta DV granularity); a predicate matching half
-        # the table is what mode="cow" is for
-        m.select(
-            F.col("__dv_name").alias("file"), F.col("__dv_pos").alias("pos")
-        ).coalesce(1).write.mode("overwrite").parquet(str(staging / "dv"))
-        part = sorted((staging / "dv").glob("*.parquet"))[0]
-        dv_name = f"dv-{token}-00000.parquet"
-        part.rename(p / dv_name)
-        per_file = (
-            m.groupBy("__dv_name")
-            .count()
-            .collect()  # bounded: one row per AFFECTED file
-        )
-        rows_deleted = int(sum(r["count"] for r in per_file))
-        affected = sorted(r["__dv_name"] for r in per_file)
-        stats = {
-            "rows_before": int(rows_before),
-            "rows_deleted": rows_deleted,
-            "rows_after": int(rows_before - rows_deleted),
-            "n_files_total": len(live),
-            "n_files_rewritten": 0,
-            "n_dv_files_added": 1 if affected else 0,
-        }
-        if not affected:  # nothing matched: no commit, drop the empty DV
-            _unlink_quiet(p / dv_name)
-            return stats
-        new_dv = {n: list(lst) for n, lst in dv_prev.items()}
-        for n in affected:
-            new_dv.setdefault(n, []).append(dv_name)
-        # commit-time CDC: dead-row images from the staged artifact
-        cdc_files = _stage_change_rows(
-            p,
-            [(m.drop("__dv_name", "__dv_pos"), "delete")],
-            token,
-        )
-    finally:
-        shutil.rmtree(str(staging), ignore_errors=True)
-    # ATOMIC + OCC: a conflicting commit raises before anything is
-    # published; the staged DV parquet is an orphan for vacuum
-    _commit_manifest(
-        p,
-        list(live),
-        expected_version=vers,
-        dv=new_dv,
-        cdc={"type": "rows", "files": cdc_files, "op": "DELETE"},
-    )
-    return stats
-
-
-def _merge_candidates(spark, p, live, src, keys, ranges=None) -> list[str]:
+def _merge_candidates(p, live, keys, ranges: dict) -> list[str]:
     """Target files that MAY hold a source join key — Delta's MERGE
-    file pruning: the min/max of each key over the (batch-sized,
-    cached) source prunes target files via write-time stats BEFORE any
-    target scan. One tiny driver-side agg (skipped when the caller
-    already computed the ``ranges`` in its combined source pass — r15);
-    conservative per key (whole-source range, intersected across keys);
-    files without stats, NULL-only ranges, and non-JSON-native key
-    types prune nothing. At 100 TB a record-key MERGE on a clustered/
-    bucketed key scans only the files overlapping the batch's key
-    range."""
-    if ranges is None:
-        aggs = []
-        for k in keys:
-            aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-        r = src.agg(*aggs).collect()[0]
-        ranges = {k: (r[f"__lo_{k}"], r[f"__hi_{k}"]) for k in keys}
+    file pruning: the per-key ``ranges`` (min, max) of the (batch-sized)
+    source, from :func:`merge_rows`'s one source pass, prune target
+    files via write-time stats BEFORE any target scan. Conservative per
+    key (whole-source range, intersected across keys); files without
+    stats, NULL-only ranges, and non-JSON-native key types prune
+    nothing. At 100 TB a record-key MERGE on a clustered/bucketed key
+    scans only the files overlapping the batch's key range."""
     keep = list(live)
     for k in keys:
         lo, hi = ranges[k]
@@ -3997,143 +3927,26 @@ def _broadcast_if_small(spark, df: DataFrame) -> DataFrame:
 _BROADCAST_ROW_CAP = 1_000_000
 
 
-def _merge_rows_dv(spark, p, src, keys, vers, live, dv_prev, n_src, ranges=None) -> dict:
-    """Merge-on-read MERGE (see :func:`merge_rows` ``mode="dv"``):
-    matched target rows die by DELETION VECTOR (one small positions
-    parquet, like :func:`_delete_rows_dv`), and the whole source —
-    updated images plus inserts — appends as fresh files; ONE OCC
-    commit publishes both. ZERO data files are rewritten: an UPDATE of
-    24 rows in a 16-file table costs O(matched positions + source
-    rows) write instead of the affected-file rewrite the copy-on-write
-    path pays (measured 6.4 s COW vs 2.1 s DV for DELETE on the same
-    adversarial layout — the identical avoidance applies here). The
-    read-side tax accrues per dirty file until :func:`compact_table` /
-    :func:`compact_incremental` materializes the DVs, and
-    :func:`read_changes(keys=)` pairs pre/post images across the
-    DV+append shape via its row-level fallback (a DV commit changes
-    rows with the file list only growing, which the file-level fast
-    path is deliberately blind to).
-
-    Crash windows: DV parquet and insert files are staged into the
-    table dir BEFORE the commit — invisible orphans if anything dies
-    pre-commit (vacuum reclaims); a conflicting commit raises before
-    anything is published."""
-    import pathlib
-    import shutil
-    import uuid
-
-    cand = _merge_candidates(spark, p, live, src, keys, ranges=ranges)
-    tgt = _scan_with_dv(
-        spark, p, cand or live, dv_prev, merge_schema=False, keep_pos_col=True
-    )
-    if not cand:
-        tgt = tgt.limit(0)
-    src_keys = _broadcast_if_small(spark, src.select(*keys))
-    token = uuid.uuid4().hex[:12]
-    staging = pathlib.Path(str(p) + f".dvmerge-{token}")
-    # ONE target scan stages the matched rows (images + positions);
-    # the DV parquet, per-file counts, matched-key count, and the
-    # commit's CDC pre-images all derive from that O(matched) artifact
-    tgt.join(src_keys, on=keys, how="left_semi").write.mode(
-        "overwrite"
-    ).parquet(str(staging / "matched"))
-    m = _read_staged_or_none(spark, staging / "matched")
-    if m is None:  # insert-only merge: empty artifact stands in
-        m = tgt.limit(0)
-    m.select(
-        F.col("__dv_name").alias("file"), F.col("__dv_pos").alias("pos")
-    ).coalesce(1).write.mode("overwrite").parquet(str(staging / "dv"))
-    part = sorted((staging / "dv").glob("*.parquet"))[0]
-    dv_name = f"dv-{token}-00000.parquet"
-    part.rename(p / dv_name)
-    per_file = (
-        m.groupBy("__dv_name")
-        .count()
-        .collect()  # bounded: one row per AFFECTED file
-    )
-    rows_updated = int(sum(r["count"] for r in per_file))
-    affected = sorted(r["__dv_name"] for r in per_file)
-    # matched SOURCE keys == distinct matched target keys (the source
-    # is duplicate-free by contract) — derived from the artifact, no
-    # second target scan
-    matched_keys = m.select(*keys).distinct().count()
-    # manifest row record minus DV dead positions — no Spark job (r15)
-    rows_before = _live_row_count(p, live, dv_prev)
-    # the whole source (updated images + inserts) lands as fresh files
-    _to_physical(p, src).write.mode("overwrite").parquet(str(staging / "insert"))
-    new_names = []
-    for i, f in enumerate(sorted((staging / "insert").glob("*.parquet"))):
-        name = f"part-merge-{token}-i{i:05d}.parquet"
-        f.rename(p / name)
-        new_names.append(name)
-    # commit-time CDC: pre-images from the staged artifact; post-images
-    # and inserts split the (cached, batch-sized) source by matched key
-    mkeys = m.select(*keys).distinct()
-    cdc_files = _stage_change_rows(
-        p,
-        [
-            (m.drop("__dv_name", "__dv_pos"), "update_preimage"),
-            (src.join(mkeys, on=keys, how="left_semi"), "update_postimage"),
-            (src.join(mkeys, on=keys, how="left_anti"), "insert"),
-        ],
-        token,
-    )
-    shutil.rmtree(str(staging), ignore_errors=True)
-    src.unpersist()
-    stats = {
-        "rows_before": int(rows_before),
-        "rows_updated": rows_updated,
-        "rows_inserted": int(n_src - matched_keys),
-        "rows_after": int(rows_before - rows_updated + n_src),
-        "n_files_total": len(live),
-        "n_files_rewritten": 0,
-        "n_files_added": len(new_names),
-        "n_dv_files_added": 1 if affected else 0,
-    }
-    new_dv = {n: list(lst) for n, lst in dv_prev.items()}
-    if affected:
-        for n in affected:
-            new_dv.setdefault(n, []).append(dv_name)
-    else:  # insert-only merge: drop the empty DV
-        _unlink_quiet(p / dv_name)
-    # ATOMIC + OCC: conflict raises before anything is published; the
-    # staged DV + insert files are orphans for vacuum
-    _commit_manifest(
-        p,
-        list(live) + new_names,
-        expected_version=vers,
-        dv=new_dv,
-        stats=_stats_for_added(p, new_names),
-        cdc={"type": "rows", "files": cdc_files, "op": "MERGE"},
-    )
-    return stats
-
-
-def _merge_rows_clauses(
-    spark, p, source, keys, vers, live, dv_prev, mode, retain,
-    upd, upd_cond, del_cond, ins, nmbs_del,
-    nmbs_upd=None, nmbs_upd_cond=None, ins_values=None,
-) -> dict:
-    """Generic MERGE clause engine (see :func:`merge_rows` for the
-    clause semantics and cost model). One declarative plan classifies
-    every DV-applied target row:
-
-    ``target LEFT JOIN broadcast(source) ON keys`` →
-    ``__action ∈ {D, U, X, K}`` (matched-delete, matched-update,
-    not-matched-by-source-delete, keep), clauses evaluated in the
-    documented order with NULL conditions false. Changed rows (D/U/X)
-    drive the write: cow rewrites ONLY files holding at least one
-    changed row (their K rows survive verbatim) and appends updated
-    images + qualifying inserts as fresh files; dv kills changed
-    positions with ONE deletion-vector parquet and appends the same
-    fresh files — zero data files rewritten. ONE OCC commit publishes
-    either shape; crash windows and retention match
-    :func:`delete_rows`."""
+def _merge_clause_plan(
+    spark, p, src, keys, upd, upd_cond, del_cond, ins, ins_values,
+    nmbs_del, nmbs_upd, nmbs_upd_cond,
+):
+    """The MERGE clause engine's classification (see :func:`merge_rows`
+    for the clause semantics and cost model), as the ``(changed,
+    rewrite, derive)`` triple :func:`_mutate` takes. One declarative
+    plan, ``target LEFT JOIN broadcast(source) ON keys``, tags every
+    DV-applied target row ``__action`` ∈ {D, U, X, S, K} (matched
+    delete, matched update, not-matched-by-source delete and update,
+    keep), clauses evaluated in the documented order with NULL
+    conditions false. The changed rows (all but K) are staged WITH
+    their new images (``__u_*`` columns for matched updates, ``__x_*``
+    for not-matched-by-source updates), so the appended images, the
+    CDC pre/post images and the DV all come from that one artifact;
+    the K rows of affected files are the cow rewrite. Qualifying
+    unmatched source rows arrive by anti join and land as the
+    ``i``-tagged insert files."""
     import functools
     import operator
-    import pathlib
-    import shutil
-    import uuid
 
     def _cond(c, default):
         if c is None:
@@ -4142,289 +3955,130 @@ def _merge_rows_clauses(
             return F.lit(c)
         return F.coalesce(F.expr(c), F.lit(False))  # NULL cond = false
 
-    src = source.cache()
-    # source-key range pruning is sound ONLY without NOT MATCHED BY
-    # SOURCE clauses (those must see every unmatched target row)
-    can_prune = nmbs_del is None and nmbs_upd is None
-    cand = (
-        _merge_candidates(spark, p, live, src, keys)
-        if can_prune
-        else list(live)
-    )
-    tgt = _scan_with_dv(
-        spark, p, cand or live, dv_prev, merge_schema=False,
-        keep_file_col=(mode == "cow"), keep_pos_col=(mode == "dv"),
-    )
-    if not cand:
-        tgt = tgt.limit(0)
-    data_cols = [c for c in tgt.columns if c not in _META_COLS]
-    for assigns in (upd, nmbs_upd):
-        if isinstance(assigns, dict):
-            unknown = [c for c in assigns if c not in data_cols]
-            if unknown:
-                raise ValueError(
-                    f"MERGE UPDATE SET references unknown columns {unknown}"
-                )
-    t = tgt.alias("t")
-    s = src.withColumn("__s_hit", F.lit(1)).alias("s")
-    jcond = functools.reduce(
-        operator.and_,
-        [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys],
-    )
     matched = F.col("s.__s_hit").isNotNull()
-    c_del = _cond(del_cond, False)
     c_upd = _cond(upd_cond, True) if upd is not None else F.lit(False)
-    c_nmbs = _cond(nmbs_del, False)
     c_nmbs_upd = (
         _cond(nmbs_upd_cond, True) if nmbs_upd is not None else F.lit(False)
     )
-    cls = t.join(_broadcast_if_small(spark, s), on=jcond, how="left").withColumn(
-        "__action",
-        F.when(matched & c_del, F.lit("D"))
+    action = (
+        F.when(matched & _cond(del_cond, False), F.lit("D"))
         .when(matched & c_upd, F.lit("U"))
-        .when(~matched & c_nmbs, F.lit("X"))
+        .when(~matched & _cond(nmbs_del, False), F.lit("X"))
         .when(~matched & c_nmbs_upd, F.lit("S"))
-        .otherwise(F.lit("K")),
-    ).cache()
+        .otherwise(F.lit("K"))
+    )
+    s = _broadcast_if_small(spark, src.withColumn("__s_hit", F.lit(1)).alias("s"))
+    jcond = functools.reduce(
+        operator.and_, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
+    )
 
-    counts = {
-        r["__action"]: int(r["count"])
-        for r in cls.groupBy("__action").count().collect()  # bounded: ≤5 rows
-    }
-    rows_updated = counts.get("U", 0) + counts.get("S", 0)
-    rows_deleted = counts.get("D", 0) + counts.get("X", 0)
-    if sorted(cand) == sorted(live):
-        rows_before = sum(counts.values())  # the scan WAS the table
-    else:  # manifest row record minus DV dead positions — no job (r15)
-        rows_before = _live_row_count(p, live, dv_prev)
+    def classify(tgt: DataFrame) -> DataFrame:
+        return tgt.alias("t").join(s, on=jcond, how="left").withColumn(
+            "__action", action
+        )
 
-    # updated images from the SAME classified join — '*' takes the
-    # source row (schema evolution allowed), a dict applies pre-image
-    # assignments over the target schema
-    u_rows = cls.filter(F.col("__action") == "U")
-    if upd == "*":
-        images = u_rows.select(
-            *[F.col(f"s.{c}").alias(c) for c in src.columns]
-        )
-    elif isinstance(upd, dict):
-        images = u_rows.select(
-            *[
-                F.expr(upd[c]).cast(tgt.schema[c].dataType).alias(c)
-                if c in upd
-                else F.col(f"t.{c}").alias(c)
-                for c in data_cols
-            ]
-        )
-    else:
-        images = None
-    # NOT MATCHED BY SOURCE UPDATE images: target columns only (there
-    # is no source row on this side of the join)
-    images_su = None
-    if nmbs_upd is not None:
-        images_su = cls.filter(F.col("__action") == "S").select(
-            *[
-                F.expr(nmbs_upd[c]).cast(tgt.schema[c].dataType).alias(c)
-                if c in nmbs_upd
-                else F.col(f"t.{c}").alias(c)
-                for c in data_cols
-            ]
-        )
-    inserts = None
-    if ins is not False:
-        # no broadcast hint: the PROBE side (src) is the small one —
-        # AQE picks the strategy for the target key set
-        inserts = src.alias("s").join(
-            tgt.select(*keys), on=keys, how="left_anti"
-        )
-        if isinstance(ins, str):
-            inserts = inserts.filter(F.coalesce(F.expr(ins), F.lit(False)))
-        if ins_values is not None:
-            # column-list INSERT (cols) VALUES (exprs): build the row
-            # from the source-side expressions, typed-NULL-fill the
-            # rest of the target schema (SQL column-list semantics)
-            unknown = [c for c in ins_values if c not in data_cols]
+    def data_cols(tgt: DataFrame) -> list[str]:
+        return [c for c in tgt.columns if c not in _META_COLS]
+
+    def images(assigns: dict, act: str, prefix: str, tgt: DataFrame) -> list:
+        # SQL UPDATE pre-image semantics: each expression sees the
+        # PRE-merge row pair, is typed like its target column, and is
+        # evaluated only on the rows its clause claims
+        return [
+            F.when(
+                F.col("__action") == act,
+                F.expr(e).cast(tgt.schema[c].dataType),
+            ).alias(prefix + c)
+            for c, e in assigns.items()
+        ]
+
+    def changed(tgt: DataFrame) -> DataFrame:
+        cols = data_cols(tgt)
+        for assigns in (upd, nmbs_upd):
+            if isinstance(assigns, dict):
+                unknown = [c for c in assigns if c not in cols]
+                if unknown:
+                    raise ValueError(
+                        f"MERGE UPDATE SET references unknown columns {unknown}"
+                    )
+        if ins is not False and ins_values is not None:
+            unknown = [c for c in ins_values if c not in cols]
             if unknown:
                 raise ValueError(
-                    f"MERGE INSERT references unknown target columns "
-                    f"{unknown}"
+                    f"MERGE INSERT references unknown target columns {unknown}"
                 )
             if not set(keys) <= set(ins_values):
                 raise ValueError(
                     "MERGE INSERT column list must include the join keys"
                 )
-            inserts = inserts.select(
-                *[
-                    F.expr(ins_values[c]).cast(tgt.schema[c].dataType).alias(c)
-                    if c in ins_values
-                    else F.lit(None).cast(tgt.schema[c].dataType).alias(c)
-                    for c in data_cols
-                ]
+        out = [F.col(f"t.{c}").alias(c) for c in tgt.columns] + ["__action"]
+        if upd == "*":  # '*' takes the source row (schema evolution allowed)
+            out += [F.col(f"s.{c}").alias(f"__u_{c}") for c in src.columns]
+        elif upd is not None:
+            out += images(upd, "U", "__u_", tgt)
+        if nmbs_upd is not None:
+            out += images(nmbs_upd, "S", "__x_", tgt)
+        return classify(tgt).filter(F.col("__action") != "K").select(*out)
+
+    def rewrite(tgt: DataFrame, uris: list[str]) -> DataFrame:
+        kept = classify(tgt.filter(F.col("_file").isin(uris)))
+        return kept.filter(F.col("__action") == "K").select(
+            *[F.col(f"t.{c}").alias(c) for c in tgt.columns]
+        )
+
+    def derive(tgt: DataFrame, m: DataFrame):
+        cols = data_cols(tgt)
+
+        def rows(*acts: str) -> DataFrame:
+            return m.filter(F.col("__action").isin(*acts))
+
+        appends = []
+        changes = [(rows("D", "X").select(*cols), "delete")]
+        if upd is not None:
+            new = (
+                [F.col(f"__u_{c}").alias(c) for c in src.columns]
+                if upd == "*"
+                else [F.col(f"__u_{c}" if c in upd else c).alias(c) for c in cols]
             )
-    for batch in (images, images_su, inserts):
-        if batch is not None:
-            _enforce_constraints(p, batch)
-            _reject_dropped_collisions(p, _to_physical(p, batch))
-
-    token = uuid.uuid4().hex[:12]
-    staging = pathlib.Path(str(p) + f".merge-{token}")
-    new_names: list[str] = []
-
-    def _stage(df, tag):
-        if df is None:
-            return 0
-        _to_physical(p, df).write.mode("overwrite").parquet(
-            str(staging / tag)
-        )
-        n0 = len(new_names)
-        for i, f in enumerate(sorted((staging / tag).glob("*.parquet"))):
-            name = f"part-merge-{token}-{tag}{i:05d}.parquet"
-            f.rename(p / name)
-            new_names.append(name)
-        return len(new_names) - n0
-
-    def _t_rows(action: str) -> DataFrame:
-        return cls.filter(F.col("__action") == action).select(
-            *[F.col(f"t.{c}").alias(c) for c in data_cols]
-        )
-
-    def _stage_cdc() -> dict:
-        """Commit-time CDC from the CACHED classified join: D/X rows
-        are deletes, U/S rows pair pre-images with their written
-        post-image files' rows, and inserts are referenced as the
-        freshly-written insert DATA files (immutable, exactly the
-        insert set — no second copy of their rows)."""
-        parts = [
-            (_t_rows("D"), "delete"),
-            (_t_rows("X"), "delete"),
-        ]
-        if images is not None:
-            parts += [
-                (_t_rows("U"), "update_preimage"),
-                (images, "update_postimage"),
+            appends.append((rows("U").select(*new), "u"))
+            changes += [
+                (rows("U").select(*cols), "update_preimage"),
+                (rows("U").select(*new), "update_postimage"),
             ]
-        if images_su is not None:
-            parts += [
-                (_t_rows("S"), "update_preimage"),
-                (images_su, "update_postimage"),
+        if nmbs_upd is not None:
+            new = [F.col(f"__x_{c}" if c in nmbs_upd else c).alias(c) for c in cols]
+            appends.append((rows("S").select(*new), "x"))
+            changes += [
+                (rows("S").select(*cols), "update_preimage"),
+                (rows("S").select(*new), "update_postimage"),
             ]
-        rec = {
-            "type": "rows",
-            "files": _stage_change_rows(p, parts, token),
-            "op": "MERGE",
-        }
-        ins_names = [n for n in new_names if f"-{token}-i" in n]
-        if ins_names:
-            rec["insert_files"] = ins_names
-        return rec
+        if ins is not False:
+            # no broadcast hint: the PROBE side (src) is the small one —
+            # AQE picks the strategy for the target key set
+            inserts = src.alias("s").join(tgt.select(*keys), on=keys, how="left_anti")
+            if isinstance(ins, str):
+                inserts = inserts.filter(F.coalesce(F.expr(ins), F.lit(False)))
+            if ins_values is not None:
+                # column-list INSERT (cols) VALUES (exprs): build the row
+                # from the source-side expressions, typed-NULL-fill the
+                # rest of the target schema (SQL column-list semantics)
+                inserts = inserts.select(
+                    *[
+                        (F.expr(ins_values[c]) if c in ins_values else F.lit(None))
+                        .cast(tgt.schema[c].dataType)
+                        .alias(c)
+                        for c in cols
+                    ]
+                )
+            # inserts are NOT staged as CDC rows: the commit points at
+            # their data files (insert_tag), exactly the insert set
+            appends.append((inserts, "i"))
+        for df, _tag in appends:
+            _enforce_constraints(p, df)
+            _reject_dropped_collisions(p, _to_physical(p, df))
+        return appends, changes, {}
 
-    if mode == "dv":
-        # changed positions → ONE DV parquet; zero files rewritten
-        dead = cls.filter(F.col("__action") != "K").select(
-            F.col("t.__dv_name").alias("file"), F.col("t.__dv_pos").alias("pos")
-        )
-        dead.coalesce(1).write.mode("overwrite").parquet(str(staging / "dv"))
-        part = sorted((staging / "dv").glob("*.parquet"))[0]
-        dv_name = f"dv-{token}-00000.parquet"
-        part.rename(p / dv_name)
-        affected = sorted(
-            r["file"]
-            for r in spark.read.parquet(str(p / dv_name))
-            .select("file").distinct().collect()  # bounded: affected files
-        )
-        _stage(images, "u")
-        _stage(images_su, "x")
-        _stage(inserts, "i")
-        shutil.rmtree(str(staging), ignore_errors=True)
-        rows_inserted = (
-            spark.read.parquet(
-                *[str(p / n) for n in new_names if f"-{token}-i" in n]
-            ).count()
-            if any(f"-{token}-i" in n for n in new_names)
-            else 0
-        )
-        new_dv = {n: list(lst) for n, lst in dv_prev.items()}
-        if affected:
-            for n in affected:
-                new_dv.setdefault(n, []).append(dv_name)
-        else:
-            _unlink_quiet(p / dv_name)
-        cdc = _stage_cdc()
-        cls.unpersist()
-        src.unpersist()
-        _commit_manifest(
-            p,
-            list(live) + new_names,
-            expected_version=vers,
-            dv=new_dv,
-            stats=_stats_for_added(p, new_names),
-            cdc=cdc,
-        )
-        return {
-            "rows_before": rows_before,
-            "rows_updated": rows_updated,
-            "rows_deleted": rows_deleted,
-            "rows_inserted": int(rows_inserted),
-            "rows_after": rows_before - rows_deleted + int(rows_inserted),
-            "n_files_total": len(live),
-            "n_files_rewritten": 0,
-            "n_files_added": len(new_names),
-            "n_dv_files_added": 1 if affected else 0,
-        }
-
-    # cow: rewrite ONLY files holding changed rows; K rows survive
-    per_file = (
-        cls.filter(F.col("__action") != "K")
-        .groupBy("t._file")
-        .count()
-        .collect()  # bounded: one row per AFFECTED file
-    )
-    affected_uris = [r[0] for r in per_file]
-    affected_names = sorted({_uri_to_name(u) for u in affected_uris})
-    if affected_names:
-        survivors = (
-            cls.filter(
-                F.col("t._file").isin(affected_uris)
-                & (F.col("__action") == "K")
-            )
-            .select(*[F.col(f"t.{c}").alias(c) for c in data_cols])
-            .repartition(max(1, len(affected_names)))
-        )
-        _stage(survivors, "r")
-    _stage(images, "u")
-    _stage(images_su, "x")
-    _stage(inserts, "i")
-    shutil.rmtree(str(staging), ignore_errors=True)
-    rows_inserted = (
-        spark.read.parquet(
-            *[str(p / n) for n in new_names if f"-{token}-i" in n]
-        ).count()
-        if any(f"-{token}-i" in n for n in new_names)
-        else 0
-    )
-    cdc = _stage_cdc()
-    cls.unpersist()
-    src.unpersist()
-    gone = set(affected_names)
-    _commit_manifest(  # ATOMIC + OCC: conflict aborts BEFORE any unlink
-        p,
-        [n for n in live if n not in gone] + new_names,
-        expected_version=vers,
-        stats=_stats_for_added(p, new_names),
-        cdc=cdc,
-    )
-    if not retain:
-        for n in affected_names:
-            _unlink_quiet(p / n)
-    return {
-        "rows_before": rows_before,
-        "rows_updated": rows_updated,
-        "rows_deleted": rows_deleted,
-        "rows_inserted": int(rows_inserted),
-        "rows_after": rows_before - rows_deleted + int(rows_inserted),
-        "n_files_total": len(live),
-        "n_files_rewritten": len(affected_names),
-        "n_files_added": len(new_names),
-    }
+    return changed, rewrite, derive
 
 
 def merge_rows(
@@ -4471,9 +4125,11 @@ def merge_rows(
 
     ``mode="dv"`` switches to merge-on-read (Delta DV MERGE): matched
     target rows die by deletion vector, the source appends as fresh
-    files, and NO data file is rewritten — see :func:`_merge_rows_dv`
-    for the cost model. ``retain`` is moot there (nothing is
-    displaced).
+    files, and NO data file is rewritten: an update of 24 rows in a
+    16-file table costs O(matched positions + source rows) write, and
+    the read-side tax accrues per dirty file until OPTIMIZE
+    materializes the DVs (see :func:`_mutate` for the shared write
+    path). ``retain`` is moot there (nothing is displaced).
 
     **Clause surface** (Delta's full MERGE grammar; defaults reproduce
     the plain upsert):
@@ -4531,14 +4187,9 @@ def merge_rows(
     not-matched-by-source-delete rows.
     """
     import pathlib
-    import shutil
-    import uuid
 
     keys = [on] if isinstance(on, str) else list(on)
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
-    dv_prev = _dv_at_version(p)
-
     if mode not in ("cow", "dv"):
         raise ValueError(f"unknown merge mode {mode!r} (cow|dv)")
     if not (
@@ -4558,139 +4209,79 @@ def merge_rows(
         and when_not_matched_by_source_delete is None
         and when_not_matched_by_source_update is None
     )
-    if rich:
-        dup = (
-            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup:
-            raise ValueError("merge source has duplicate record keys")
-        return _merge_rows_clauses(
-            spark, p, source, keys, vers, live, dv_prev, mode, retain,
-            when_matched_update, when_matched_update_condition,
-            when_matched_delete, when_not_matched_insert,
-            when_not_matched_by_source_delete,
-            when_not_matched_by_source_update,
-            when_not_matched_by_source_update_condition,
-            when_not_matched_insert_values,
-        )
+    vers, live = _snapshot_for_update(p)
+    dv_prev = _dv_at_version(p)
     src = source.cache()
-    # ONE pass over the (cached) source answers the duplicate-key gate,
-    # n_src, AND the per-key min/max ranges _merge_candidates prunes
-    # with — previously three separate source jobs (guide §7; r15)
-    _ks_aggs = [F.sum("_c").alias("_n"), F.max("_c").alias("_maxdup")]
-    for k in keys:
-        _ks_aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-    ks = (
-        src.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(*_ks_aggs)
-        .collect()[0]
-    )
-    if (ks["_maxdup"] or 0) > 1:
+    try:
+        # ONE pass over the (cached) source answers the duplicate-key
+        # gate, n_src, AND the per-key min/max ranges _merge_candidates
+        # prunes with, for the upsert and the clause engine alike
+        aggs = [F.sum("_c").alias("_n"), F.max("_c").alias("_maxdup")]
+        for k in keys:
+            aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
+        ks = (
+            src.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_c"))
+            .agg(*aggs)
+            .collect()[0]
+        )
+        if (ks["_maxdup"] or 0) > 1:
+            raise ValueError("merge source has duplicate record keys")
+        n_src = int(ks["_n"] or 0)
+        ranges = {k: (ks[f"__lo_{k}"], ks[f"__hi_{k}"]) for k in keys}
+        # source-key range pruning is sound ONLY without NOT MATCHED BY
+        # SOURCE clauses (those must see every unmatched target row)
+        cand = (
+            list(live)
+            if when_not_matched_by_source_delete is not None
+            or when_not_matched_by_source_update is not None
+            else _merge_candidates(p, live, keys, ranges)
+        )
+        stat_keys = ("rows_before", "rows_updated", "rows_inserted",
+                     "rows_after", "n_files_total", "n_files_rewritten",
+                     "n_files_added")
+        if rich:
+            return _mutate(
+                spark, p, "merge", mode, retain, vers, live, dv_prev, cand,
+                stat_keys + ("rows_deleted",),
+                *_merge_clause_plan(
+                    spark, p, src, keys, when_matched_update,
+                    when_matched_update_condition, when_matched_delete,
+                    when_not_matched_insert, when_not_matched_insert_values,
+                    when_not_matched_by_source_delete,
+                    when_not_matched_by_source_update,
+                    when_not_matched_by_source_update_condition,
+                ),
+                insert_tag="i",
+            )
+        _enforce_constraints(p, src)  # CHECK constraints gate the source
+        _reject_dropped_collisions(p, _to_physical(p, src))
+        src_keys = _broadcast_if_small(spark, src.select(*keys))
+
+        def derive(tgt, m):
+            # the whole source (updated images + inserts) lands as fresh
+            # files; CDC pre-images come from the staged artifact,
+            # post-images and inserts split the source by matched key
+            mkeys = m.select(*keys).distinct()
+            changes = [
+                (_row_images(m), "update_preimage"),
+                (src.join(mkeys, on=keys, how="left_semi"), "update_postimage"),
+                (src.join(mkeys, on=keys, how="left_anti"), "insert"),
+            ]
+            # matched SOURCE keys == distinct matched target keys (the
+            # source is duplicate-free)
+            return [(src, "i")], changes, {"rows_inserted": n_src - mkeys.count()}
+
+        return _mutate(
+            spark, p, "merge", mode, retain, vers, live, dv_prev, cand, stat_keys,
+            changed=lambda tgt: tgt.join(src_keys, on=keys, how="left_semi")
+            .withColumn("__action", F.lit("U")),
+            rewrite=lambda tgt, uris: tgt.filter(F.col("_file").isin(uris))
+            .join(src_keys, on=keys, how="left_anti"),
+            derive=derive,
+        )
+    finally:
         src.unpersist()
-        raise ValueError("merge source has duplicate record keys")
-    _enforce_constraints(p, source)  # CHECK constraints gate the source
-    _reject_dropped_collisions(p, _to_physical(p, source))
-    n_src = int(ks["_n"] or 0)
-    ranges = {k: (ks[f"__lo_{k}"], ks[f"__hi_{k}"]) for k in keys}
-    if mode == "dv":
-        return _merge_rows_dv(
-            spark, p, src, keys, vers, live, dv_prev, n_src, ranges=ranges
-        )
-
-    # DV-applied target scan over CANDIDATE files only (source-key
-    # range pruning, _merge_candidates): a DV'd (dead) row must
-    # neither count as matched nor survive a rewrite
-    cand = _merge_candidates(spark, p, live, src, keys, ranges=ranges)
-    tgt = _scan_with_dv(
-        spark, p, cand or live, dv_prev, merge_schema=False, keep_file_col=True
-    )
-    if not cand:
-        tgt = tgt.limit(0)
-    src_keys = _broadcast_if_small(spark, src.select(*keys))
-    token = uuid.uuid4().hex[:12]
-    cdcstage = pathlib.Path(str(p) + f".mergestage-{token}")
-    # ONE target scan stages the matched rows; per-file counts,
-    # matched-key count, and the commit's CDC pre-images all derive
-    # from the O(matched) artifact (no candidate re-scans)
-    tgt.join(src_keys, on=keys, how="left_semi").write.mode(
-        "overwrite"
-    ).parquet(str(cdcstage / "matched"))
-    m = _read_staged_or_none(spark, cdcstage / "matched")
-    if m is None:  # insert-only merge: empty artifact stands in
-        m = tgt.limit(0)
-    per_file = (
-        m.groupBy("_file")
-        .agg(F.count(F.lit(1)).alias("_hits"))
-        .collect()  # bounded: one row per AFFECTED file
-    )
-    rows_updated = sum(r["_hits"] for r in per_file)
-    affected_uris = [r["_file"] for r in per_file]
-    affected_names = sorted({_uri_to_name(u) for u in affected_uris})
-    matched_keys = m.select(*keys).distinct().count()
-    # manifest row record minus DV dead positions — no Spark job (r15)
-    rows_before = _live_row_count(p, live, dv_prev)
-    stats = {
-        "rows_before": int(rows_before),
-        "rows_updated": int(rows_updated),
-        "rows_inserted": int(n_src - matched_keys),
-        "rows_after": int(rows_before - rows_updated + n_src),
-        "n_files_total": len(live),
-        "n_files_rewritten": len(affected_names),
-    }
-
-    staging = pathlib.Path(str(p) + f".merge-{token}")
-    new_names = []
-    if affected_names:
-        survivors = (
-            tgt.filter(F.col("_file").isin(affected_uris))
-            .join(src_keys, on=keys, how="left_anti")
-            .drop("_file")
-            .repartition(max(1, len(affected_names)))
-        )
-        _to_physical(p, survivors).write.mode("overwrite").parquet(
-            str(staging / "rewrite")
-        )
-        for i, f in enumerate(sorted((staging / "rewrite").glob("*.parquet"))):
-            name = f"part-merge-{token}-r{i:05d}.parquet"
-            f.rename(p / name)
-            new_names.append(name)
-    # the whole source (updates + inserts) lands as fresh files
-    _to_physical(p, src).write.mode("overwrite").parquet(str(staging / "insert"))
-    for i, f in enumerate(sorted((staging / "insert").glob("*.parquet"))):
-        name = f"part-merge-{token}-i{i:05d}.parquet"
-        f.rename(p / name)
-        new_names.append(name)
-    shutil.rmtree(str(staging), ignore_errors=True)
-    # commit-time CDC: pre-images from the staged artifact; post-images
-    # and inserts split the (cached, batch-sized) source by matched key
-    mkeys = m.select(*keys).distinct()
-    cdc_files = _stage_change_rows(
-        p,
-        [
-            (m.drop("_file"), "update_preimage"),
-            (src.join(mkeys, on=keys, how="left_semi"), "update_postimage"),
-            (src.join(mkeys, on=keys, how="left_anti"), "insert"),
-        ],
-        token,
-    )
-    shutil.rmtree(str(cdcstage), ignore_errors=True)
-    src.unpersist()
-    stats["n_files_added"] = len(new_names)
-
-    gone = set(affected_names)
-    # ATOMIC + OCC: conflict aborts BEFORE any unlink (see delete_rows)
-    _commit_manifest(
-        p,
-        [n for n in live if n not in gone] + new_names,
-        expected_version=vers,
-        stats=_stats_for_added(p, new_names),
-        cdc={"type": "rows", "files": cdc_files, "op": "MERGE"},
-    )
-    if not retain:
-        for n in affected_names:
-            _unlink_quiet(p / n)
-    return stats
 
 
 def overwrite_table(spark, path, df: DataFrame) -> dict:
@@ -4708,7 +4299,6 @@ def overwrite_table(spark, path, df: DataFrame) -> dict:
     Returns ``{"n_files_before", "n_files_after", "rows_after",
     "version"}``."""
     import pathlib
-    import shutil
     import uuid
 
     p = pathlib.Path(path)
@@ -4718,20 +4308,14 @@ def overwrite_table(spark, path, df: DataFrame) -> dict:
     df = _to_physical(p, df)
     _reject_dropped_collisions(p, df)
     token = uuid.uuid4().hex[:12]
-    staging = pathlib.Path(str(p) + f".overwrite-{token}")
-    df.write.mode("overwrite").parquet(str(staging))
-    new_names = []
-    for i, f in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"overwrite-{token}-{i:05d}.parquet"
-        shutil.move(str(f), str(p / name))
-        new_names.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
+    new_names = _write_and_rename(
+        df, pathlib.Path(str(p) + f".overwrite-{token}"), p, f"overwrite-{token}-"
+    )
     version = _commit_manifest(  # ATOMIC + OCC; old files stay for vacuum
         p,
         new_names,
         expected_version=vers,
         stats=_stats_for_added(p, new_names),
-        clustered=None,
         # commit-time CDC: an overwrite's change set is the WHOLE old
         # snapshot as deletes + the new files as inserts (Delta CDF's
         # overwrite semantics) — recorded as a pointer, served by
@@ -4827,7 +4411,6 @@ def restore_table(path, version: int | None = None, spark=None, timestamp=None) 
         p,
         list(files),
         expected_version=vers,
-        dv={n: list(lst) for n, lst in dv.items() if n in set(files)},
         stats=_stats_for_added(p, statless) if statless else None,
         # commit-time CDC: a restore's change set is the INVERSE of
         # the range it undoes — recorded as a pointer, composed at
@@ -4840,6 +4423,7 @@ def restore_table(path, version: int | None = None, spark=None, timestamp=None) 
             if int(version) <= int(vers)
             else None
         ),
+        replace={"dv": dv},
     )
     return {
         "restored_version": int(version),
@@ -4896,14 +4480,9 @@ def clone_table(path, target) -> dict:
         dst,
         live,
         expected_version=0,
-        stats={n: s for n, s in doc.get("stats", {}).items() if n in set(live)},
-        dv={n: list(dv_map[n]) for n in live if dv_map.get(n)},
-        bloom_cfg=doc.get("bloom_cfg", {}),
-        constraints=doc.get("constraints", {}),
-        clustered=doc.get("clustered"),
-        column_map=doc.get("column_map", {}),
-        dropped_columns=doc.get("dropped_columns", []),
-        added_columns=doc.get("added_columns", {}),
+        stats=doc.get("stats", {}),
+        # staged WAP batches stay with the source table
+        replace={k: doc.get(k) for k in _CARRIED if k != "staged"},
     )
     # bloom bitset sidecar rides along (metadata, not data)
     if (src / _BLOOM).exists():
@@ -4951,13 +4530,10 @@ def update_rows(
     "rows_after", "n_files_total", "n_files_rewritten",
     "n_files_added"}`` (+ ``n_dv_files_added`` under ``dv``)."""
     import pathlib
-    import shutil
-    import uuid
 
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     p = pathlib.Path(path)
     vers, live = _snapshot_for_update(p)
-    dv_prev = _dv_at_version(p)
     if mode not in ("cow", "dv"):
         raise ValueError(f"unknown update mode {mode!r} (cow|dv)")
 
@@ -4982,184 +4558,29 @@ def update_rows(
                 proj.append(F.col(c))
         return df.select(*proj)
 
-    token = uuid.uuid4().hex[:12]
-    # file pruning (Delta's UPDATE file skipping): candidates only —
-    # see _candidate_files; rows_before always counts the FULL table
-    cand = _candidate_files(p, live, predicate)
-    if mode == "dv":
-        tgt = _scan_with_dv(
-            spark, p, cand or live, dv_prev, merge_schema=False,
-            keep_pos_col=True,
-        )
-        if not cand:
-            tgt = tgt.limit(0)
-        staging = pathlib.Path(str(p) + f".dvupdate-{token}")
-        # ONE candidate scan stages the matched rows (images + position
-        # meta); the DV parquet, per-file counts, updated images, and
-        # the commit's CDC pre/post files all derive from that small
-        # artifact — no second table scan (same discipline as
-        # _delete_rows_dv)
-        try:
-            tgt.filter(cond).write.mode("overwrite").parquet(
-                str(staging / "matched")
-            )
-            matched = _read_staged_or_none(spark, staging / "matched")
-            if matched is None:  # nothing matched: no DV, no commit
-                rows_before = _live_row_count(p, live, dv_prev)
-                return {
-                    "rows_before": int(rows_before),
-                    "rows_updated": 0,
-                    "rows_after": int(rows_before),
-                    "n_files_total": len(live),
-                    "n_files_rewritten": 0,
-                    "n_files_added": 0,
-                    "n_dv_files_added": 0,
-                }
-            images = _apply_set(matched, only_matched=True)
-            _enforce_constraints(p, images)
-            matched.select(
-                F.col("__dv_name").alias("file"), F.col("__dv_pos").alias("pos")
-            ).coalesce(1).write.mode("overwrite").parquet(str(staging / "dv"))
-            part = sorted((staging / "dv").glob("*.parquet"))[0]
-            dv_name = f"dv-{token}-00000.parquet"
-            part.rename(p / dv_name)
-            per_file = matched.groupBy("__dv_name").count().collect()
-            rows_updated = int(sum(r["count"] for r in per_file))
-            affected = sorted(r["__dv_name"] for r in per_file)
-            # manifest row record minus DV dead positions — no job (r15)
-            rows_before = _live_row_count(p, live, dv_prev)
-            new_names = []
-            if rows_updated:
-                _to_physical(p, images).write.mode("overwrite").parquet(
-                    str(staging / "images")
-                )
-                for i, f in enumerate(
-                    sorted((staging / "images").glob("*.parquet"))
-                ):
-                    name = f"part-update-{token}-u{i:05d}.parquet"
-                    f.rename(p / name)
-                    new_names.append(name)
-            stats = {
-                "rows_before": int(rows_before),
-                "rows_updated": rows_updated,
-                "rows_after": int(rows_before),
-                "n_files_total": len(live),
-                "n_files_rewritten": 0,
-                "n_files_added": len(new_names),
-                "n_dv_files_added": 1 if affected else 0,
-            }
-            if not affected:
-                _unlink_quiet(p / dv_name)
-                return stats
-            new_dv = {n: list(lst) for n, lst in dv_prev.items()}
-            for n in affected:
-                new_dv.setdefault(n, []).append(dv_name)
-            # commit-time CDC: pre-images = the staged matched rows,
-            # post-images = the SET projection over them
-            cdc_files = _stage_change_rows(
-                p,
-                [
-                    (
-                        matched.drop("__dv_name", "__dv_pos"),
-                        "update_preimage",
-                    ),
-                    (images, "update_postimage"),
-                ],
-                token,
-            )
-        finally:
-            shutil.rmtree(str(staging), ignore_errors=True)
-        _commit_manifest(
-            p,
-            list(live) + new_names,
-            expected_version=vers,
-            dv=new_dv,
-            stats=_stats_for_added(p, new_names),
-            cdc={"type": "rows", "files": cdc_files, "op": "UPDATE"},
-        )
-        return stats
+    def derive(tgt, m):
+        # pre-images = the staged matched rows, post-images = the SET
+        # projection over them; cow writes the images inside the
+        # rewritten files, dv appends them
+        pre = _row_images(m)
+        images = _apply_set(pre, only_matched=True)
+        _enforce_constraints(p, images)
+        appends = [(images, "u")] if mode == "dv" else []
+        return appends, [(pre, "update_preimage"), (images, "update_postimage")], {}
 
-    # copy-on-write: rewrite only affected files, scan only candidates
-    tgt = _scan_with_dv(
-        spark, p, cand or live, dv_prev, merge_schema=False, keep_file_col=True
+    return _mutate(
+        spark, p, "update", mode, retain, vers, live, _dv_at_version(p),
+        # file pruning (Delta's UPDATE file skipping): candidates only —
+        # see _candidate_files; rows_before always counts the FULL table
+        _candidate_files(p, live, predicate),
+        ("rows_before", "rows_updated", "rows_after", "n_files_total",
+         "n_files_rewritten", "n_files_added"),
+        changed=lambda tgt: tgt.filter(cond).withColumn("__action", F.lit("U")),
+        rewrite=lambda tgt, uris: _apply_set(
+            tgt.filter(F.col("_file").isin(uris)), only_matched=False
+        ),
+        derive=derive,
     )
-    if not cand:
-        tgt = tgt.limit(0)
-    cdcstage = pathlib.Path(str(p) + f".updstage-{token}")
-    # ONE matching scan stages the matched rows; constraint check,
-    # per-file counts, and the commit's CDC pre/post files all derive
-    # from the staged artifact (no candidate re-scans)
-    try:
-        tgt.filter(cond).write.mode("overwrite").parquet(
-            str(cdcstage / "matched")
-        )
-        m = _read_staged_or_none(spark, cdcstage / "matched")
-        if m is None:  # nothing matched: no rewrite, no commit
-            rows_before = _live_row_count(p, live, dv_prev)
-            return {
-                "rows_before": int(rows_before),
-                "rows_updated": 0,
-                "rows_after": int(rows_before),
-                "n_files_total": len(live),
-                "n_files_rewritten": 0,
-                "n_files_added": 0,
-            }
-        _enforce_constraints(p, _apply_set(m, only_matched=True))
-        per_file = (
-            m.groupBy("_file")
-            .agg(F.count(F.lit(1)).alias("_hits"))
-            .collect()  # bounded: one row per AFFECTED file
-        )
-        rows_updated = int(sum(r["_hits"] for r in per_file))
-        affected_uris = [r["_file"] for r in per_file]
-        affected_names = sorted({_uri_to_name(u) for u in affected_uris})
-        # manifest row record minus DV dead positions — no job (r15)
-        rows_before = _live_row_count(p, live, dv_prev)
-        stats = {
-            "rows_before": int(rows_before),
-            "rows_updated": rows_updated,
-            "rows_after": int(rows_before),
-            "n_files_total": len(live),
-            "n_files_rewritten": len(affected_names),
-            "n_files_added": 0,
-        }
-        if not affected_names:
-            return stats
-        cdc_files = _stage_change_rows(
-            p,
-            [
-                (m.drop("_file"), "update_preimage"),
-                (_apply_set(m, only_matched=True), "update_postimage"),
-            ],
-            token,
-        )
-    finally:
-        shutil.rmtree(str(cdcstage), ignore_errors=True)
-    staging = pathlib.Path(str(p) + f".update-{token}")
-    rewritten = _apply_set(
-        tgt.filter(F.col("_file").isin(affected_uris)).drop("_file"),
-        only_matched=False,
-    ).repartition(max(1, len(affected_names)))
-    _to_physical(p, rewritten).write.mode("overwrite").parquet(str(staging))
-    new_names = []
-    for i, f in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"part-update-{token}-{i:05d}.parquet"
-        f.rename(p / name)
-        new_names.append(name)
-    shutil.rmtree(str(staging), ignore_errors=True)
-    stats["n_files_added"] = len(new_names)
-    gone = set(affected_names)
-    _commit_manifest(  # ATOMIC + OCC: conflict aborts BEFORE any unlink
-        p,
-        [n for n in live if n not in gone] + new_names,
-        expected_version=vers,
-        stats=_stats_for_added(p, new_names),
-        cdc={"type": "rows", "files": cdc_files, "op": "UPDATE"},
-    )
-    if not retain:
-        for n in affected_names:
-            _unlink_quiet(p / n)
-    return stats
 
 
 def register_table(spark, name: str, path) -> DataFrame:

@@ -128,7 +128,7 @@ def test_add_constraint_revalidates_on_rebase(spark, events_table, monkeypatch):
     raced = {"done": False}
 
     def racing_commit(p, files, **kw):
-        if "constraints" in kw and not raced["done"]:
+        if "constraints" in (kw.get("replace") or {}) and not raced["done"]:
             raced["done"] = True
             append_files(spark, target, bad)  # concurrent writer wins
             raise ManifestConflictError("simulated lost race")
@@ -148,7 +148,7 @@ def test_add_constraint_revalidates_on_rebase(spark, events_table, monkeypatch):
     raced2 = {"done": False}
 
     def racing_ok(p, files, **kw):
-        if "constraints" in kw and not raced2["done"]:
+        if "constraints" in (kw.get("replace") or {}) and not raced2["done"]:
             raced2["done"] = True
             append_files(spark, target, ok)
             raise ManifestConflictError("simulated lost race")

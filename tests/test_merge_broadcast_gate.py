@@ -1,6 +1,6 @@
 """Round-14 task #4: MERGE source broadcast size gate.
 
-`_merge_rows_clauses` (and the plain-upsert key projections) hinted
+The MERGE clause engine (and the plain-upsert key projections) hinted
 `F.broadcast(source)` unconditionally — correct for the documented
 batch-sized contract, a driver OOM for an oversized CDC backfill
 batch. `_broadcast_if_small` keeps the broadcast fast path under 8×

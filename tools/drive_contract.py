@@ -3,10 +3,11 @@ mirroring the round driver: vanilla SparkSession (no tuned confs), cwd
 forced OUTSIDE the repo (/tmp — the only way to catch worker/runner
 ImportErrors), sf0.01, DuckDB oracle comparison via tests/canonical.py.
 
-Run: python /root/repo/tools/drive_contract.py [--only name1,name2]
+Run: python /root/repo/tools/drive_contract.py [--only name1,'layout_*']
 """
 
 import argparse
+import fnmatch
 import json
 import os
 import sys
@@ -39,12 +40,14 @@ for t in TABLES:
 qs, os_ = e.queries(), e.oracle_sql()
 assert set(os_) <= set(qs)
 ap = argparse.ArgumentParser()
-ap.add_argument("--only", default="", help="comma-separated query names (default: all)")
+ap.add_argument(
+    "--only", default="", help="comma-separated query names or fnmatch patterns (default: all)"
+)
 only = set(n for n in ap.parse_args().only.split(",") if n)
 if only:
-    missing = only - set(qs)
-    assert not missing, f"unknown query names: {sorted(missing)}"
-    qs = {n: f for n, f in qs.items() if n in only}
+    missing = {pat for pat in only if not fnmatch.filter(qs, pat)}
+    assert not missing, f"names/patterns matching no query: {sorted(missing)}"
+    qs = {n: f for n, f in qs.items() if any(fnmatch.fnmatchcase(n, pat) for pat in only)}
 n_match = n_rows_only = 0
 fails = []
 for name, fn in qs.items():
