@@ -1,9 +1,9 @@
-"""Vanilla-session drive of the /root/repo/__spark_entry__.py contract,
-mirroring the round driver: vanilla SparkSession (no tuned confs), cwd
-forced OUTSIDE the repo (/tmp — the only way to catch worker/runner
-ImportErrors), sf0.01, DuckDB oracle comparison via tests/canonical.py.
+"""Drive the __spark_entry__.py query contract under a vanilla session:
+a plain SparkSession (no tuned confs), the working directory outside the
+repository (to surface worker/runner ImportErrors), sf0.01 data, and a
+DuckDB oracle comparison via tests/canonical.py.
 
-Run: python /root/repo/tools/drive_contract.py [--only name1,'layout_*']
+Run: python tools/drive_contract.py [--only name1,'layout_*']
 """
 
 import argparse
@@ -14,8 +14,8 @@ import sys
 import time
 import traceback
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.chdir("/tmp")
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 from pyspark.sql import SparkSession
