@@ -1,9 +1,17 @@
-"""Structured Streaming jobs over ``events`` replayed as a file stream.
+"""Structured Streaming jobs over replayed parquet input.
 
-Each job builds a ``readStream`` over the parquet events table (the
-local stand-in for kafka), applies watermarked/windowed/stateful logic,
-and runs to completion against the bounded input via a memory sink
-(``processAllAvailable``), returning the materialized result DataFrame.
+Two input shapes, one run path. The windowed and stateful jobs build a
+``readStream`` over the parquet events table (the local stand-in for
+kafka) and run to completion against the bounded input into a memory
+sink, returning the materialized result DataFrame. The ingest runners
+(band dedup, quality funnel, domain cap, EWMA alert, manifest append,
+CDF mart, WAP landing) read the custom ``parquet_replay`` source in
+rate-limited, id-ordered micro-batches (``_replay``) and land each batch
+through ``foreachBatch`` in a parquet dir or a manifest table, which is
+read back as the result. Every query runs through ``_drain``: start,
+``processAllAvailable``, stop, under a capped shuffle-partition count
+and, for the RocksDB-backed claim runners, a pinned state-store
+provider.
 
 Scale notes: watermarks bound state; the windowed aggregations shuffle
 on (window, key) exactly like their batch equivalents; session windows
@@ -14,19 +22,21 @@ nothing below depends on local mode.
 
 from __future__ import annotations
 
+import contextlib
+import pathlib
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..rounding import dround
 
-
-import contextlib
+ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
 @contextlib.contextmanager
-def _capped_shuffle(spark: SparkSession, cap: int | None = None):
+def _capped_shuffle(spark: SparkSession):
     """Cap shuffle partitions for the duration of a replay stream run.
 
     A stateful operator's state-store partition count is frozen from
@@ -35,15 +45,14 @@ def _capped_shuffle(spark: SparkSession, cap: int | None = None):
     decision, not something to inherit from an ambient session default.
     Every state partition pays a per-micro-batch fixed cost (state-store
     provider instantiation — RocksDB here — plus a Python worker for
-    applyInPandasWithState), so the default cap is the cores actually
-    available (``defaultParallelism`` — NO constant: a 2000-core cluster
-    session keeps 2000 state partitions for high-cardinality state) and
-    a runner expecting few distinct keys passes a smaller ``cap``
-    explicitly. r14 measured on the vanilla local[8] drive at sf0.01,
-    band-dedup replay: 200 partitions 183 s → 32 partitions 73 s → 8
-    partitions 19.7 s. Restored after the run.
+    applyInPandasWithState), so the cap is the cores actually available
+    (``defaultParallelism`` — NO constant: a 2000-core cluster session
+    keeps 2000 state partitions for high-cardinality state). r14
+    measured on the vanilla local[8] drive at sf0.01, band-dedup
+    replay: 200 partitions 183 s → 32 partitions 73 s → 8 partitions
+    19.7 s. Restored after the run.
     """
-    cap = cap or spark.sparkContext.defaultParallelism
+    cap = spark.sparkContext.defaultParallelism
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         old_n = int(old)
@@ -55,6 +64,72 @@ def _capped_shuffle(spark: SparkSession, cap: int | None = None):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@contextlib.contextmanager
+def _rocksdb_state_store(spark: SparkSession):
+    """Pin the RocksDB state-store provider for queries STARTED inside
+    the block, restoring the previous conf on exit (the provider is read
+    at query start and pinned into the checkpoint from then on)."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _drain(spark: SparkSession, writer: DataStreamWriter, rocksdb: bool = False) -> None:
+    """Start ``writer`` and run it to completion over the bounded input,
+    under ``_capped_shuffle`` and, when ``rocksdb``, the pinned RocksDB
+    state store. The query is stopped and both confs are restored even
+    when a batch raises."""
+    pin = _rocksdb_state_store(spark) if rocksdb else contextlib.nullcontext()
+    with pin, _capped_shuffle(spark):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+
+def _replay(spark: SparkSession, sf_dir: str, table: str, rows_per_batch: int, *cols) -> DataFrame:
+    """``{sf_dir}/{table}.parquet`` as a ``parquet_replay`` stream of
+    ``rows_per_batch``-row micro-batches in id order, projected to
+    ``cols``.
+
+    Ships the package for the executor-side UDF references, and
+    registers the source pickled BY VALUE for the driver-side
+    streaming-source runner, which addPyFile does NOT reach (caught by
+    the vanilla contract drive; see register_replay_source).
+    """
+    from ..catalog import _ensure_workers_can_import
+    from ..sources.replay_stream import register_replay_source
+
+    _ensure_workers_can_import(spark)
+    register_replay_source(spark)
+    return (
+        spark.readStream.format("parquet_replay")
+        .option("path", f"{sf_dir}/{table}.parquet")
+        .option("rows_per_batch", str(rows_per_batch))
+        .load()
+        .select(*cols)
+    )
+
+
+def _append_batches(out_dir: str):
+    """foreachBatch body: append every non-empty micro-batch to the
+    parquet dir ``out_dir``."""
+
+    def append(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            batch_df.write.mode("append").parquet(out_dir)
+
+    return append
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,28 +150,21 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize_event_time(stream)
 
 
-def _run_to_completion(result: DataFrame, output_mode: str) -> DataFrame:
-    """Drive the streaming query over the bounded input; return the sink.
+def _run_to_completion(result: DataFrame, output_mode: str, rocksdb: bool = False) -> DataFrame:
+    """Drive the streaming query over the bounded input into a memory
+    sink; return the sink.
 
     State-store partition count is fixed by shuffle.partitions at the
     FIRST micro-batch; a vanilla session's 200 partitions means 200
     state stores for a 10k-row replay (pure scheduling overhead, ~10 s
-    per query). Cap it for the run, restore after — on a real cluster
-    the session owner sizes this to the key cardinality.
+    per query). ``_drain`` caps it for the run and restores it after —
+    on a real cluster the session owner sizes this to the key
+    cardinality.
     """
     spark = result.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
-    with _capped_shuffle(spark):
-        q = (
-            result.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    writer = result.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    _drain(spark, writer, rocksdb)
     return spark.table(name)
 
 
@@ -248,17 +316,8 @@ def foreach_batch_totals(spark: SparkSession, sf_dir: str, sink_dir: str) -> Dat
     how the input was micro-batched (sum of per-batch counts/sums), and
     stays correct under batch replay — asserted by the test suite.
     """
-    stream = _events_stream(spark, sf_dir)
-    with _capped_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(batch_partition_writer(sink_dir))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    writer = _events_stream(spark, sf_dir).writeStream.outputMode("append")
+    _drain(spark, writer.foreachBatch(batch_partition_writer(sink_dir)))
     return (
         spark.read.parquet(sink_dir)
         .groupBy("event_type")
@@ -269,33 +328,42 @@ def foreach_batch_totals(spark: SparkSession, sf_dir: str, sink_dir: str) -> Dat
     )
 
 
+def _level_crossings(user_id: int, total: float, chunks) -> tuple:
+    """Pure fold step for the level-crossing monitors: add one user's
+    purchase ``chunks`` (pandas frames) to the carried ``total`` and
+    return (the frame of 100-unit levels crossed, the new total).
+
+    The chunks are concatenated BEFORE sorting — chunk delivery order is
+    not event-time order — and tied timestamps are pinned with event_id
+    (stable across engines; a bare ts-only unstable sort diverges from
+    the batch-twin oracle's ORDER BY ts, event_id whenever two purchases
+    share a ts)."""
+    import pandas as pd
+
+    crossings = []
+    chunks = list(chunks)
+    if chunks:
+        batch = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
+        for v in batch["value"]:
+            before = int(total // 100)
+            total += float(v)
+            after = int(total // 100)
+            if after > before:
+                crossings.append(after * 100)
+    return pd.DataFrame({"user_id": [user_id] * len(crossings), "level": crossings}), total
+
+
 def stateful_high_value_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per user,
     emit cumulative purchase value whenever it crosses 100-unit levels.
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def track(key, pdf_iter, state: GroupState):
-        (user_id,) = key
         total = state.get[0] if state.exists else 0.0
-        crossings = []
-        # Concatenate the group's Arrow chunks BEFORE sorting — chunk
-        # delivery order is not event-time order — and pin tied
-        # timestamps with event_id (stable across engines; a bare
-        # ts-only unstable sort diverges from the batch-twin oracle's
-        # ORDER BY ts, event_id whenever two purchases share a ts).
-        chunks = [pdf for pdf in pdf_iter]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-            for v in batch["value"]:
-                before = int(total // 100)
-                total += float(v)
-                after = int(total // 100)
-                if after > before:
-                    crossings.append(after * 100)
+        out, total = _level_crossings(key[0], total, pdf_iter)
         state.update((total,))
-        yield pd.DataFrame({"user_id": [user_id] * len(crossings), "level": crossings})
+        yield out
 
     stream = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     flagged = (
@@ -311,6 +379,34 @@ def stateful_high_value_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_completion(flagged, "append")
 
 
+def _purchases_with_clicks(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Run the stream-stream interval join of purchases (``user_id``,
+    ``purchase_id``, ``p_ts``) to the same user's clicks (``c_user``,
+    ``click_id``, ``click_ts``) in the preceding hour, both sides under
+    a 2-hour watermark, with join type ``how``; return the sink."""
+
+    def side(event_type: str, user: str, event_id: str, ts: str) -> DataFrame:
+        return (
+            _events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("user_id").alias(user),
+                F.col("event_id").alias(event_id),
+                F.col("ts").alias(ts),
+            )
+            .withWatermark(ts, "2 hours")
+        )
+
+    joined = side("purchase", "user_id", "purchase_id", "p_ts").join(
+        side("click", "c_user", "click_id", "click_ts"),
+        (F.col("user_id") == F.col("c_user"))
+        & (F.col("click_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("click_ts") <= F.col("p_ts")),
+        how,
+    )
+    return _run_to_completion(joined, "append")
+
+
 def purchase_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
     user's clicks in the preceding hour.
@@ -321,34 +417,7 @@ def purchase_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition). Over the bounded replay the inner join emits exactly
     the batch-join result, so this query has a real SQL oracle.
     """
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("p_ts")),
-        "inner",
-    )
-    out = _run_to_completion(joined, "append")
+    out = _purchases_with_clicks(spark, sf_dir, "inner")
     return out.select(
         "user_id",
         "purchase_id",
@@ -371,7 +440,6 @@ def stateful_levels_transform_with_state(spark: SparkSession, sf_dir: str) -> Da
     ``applyInPandasWithState`` path above remains the supported one.
     The calling test skips accordingly.
     """
-    import pandas as pd
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor  # noqa: F401
     import google.protobuf.descriptor  # noqa: F401  — hard dep of the TWS python worker
 
@@ -381,43 +449,21 @@ def stateful_levels_transform_with_state(spark: SparkSession, sf_dir: str) -> Da
 
         def handleInputRows(self, key, rows, timer_values):
             total = self._total.get()[0] if self._total.exists() else 0.0
-            crossings = []
-            # same chunk-concat + (ts, event_id) ordering as the
-            # applyInPandasWithState twin — see track() above
-            chunks = [pdf for pdf in rows]
-            if chunks:
-                batch = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-                for v in batch["value"]:
-                    before = int(total // 100)
-                    total += float(v)
-                    after = int(total // 100)
-                    if after > before:
-                        crossings.append(after * 100)
+            out, total = _level_crossings(key[0], total, rows)
             self._total.update((total,))
-            yield pd.DataFrame({"user_id": [key[0]] * len(crossings), "level": crossings})
+            yield out
 
         def close(self):
             pass
 
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    stream = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    out = stream.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=LevelProcessor(),
+        outputStructType="user_id bigint, level bigint",
+        outputMode="Append",
+        timeMode="None",
     )
-    try:
-        stream = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
-        out = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=LevelProcessor(),
-            outputStructType="user_id bigint, level bigint",
-            outputMode="Append",
-            timeMode="None",
-        )
-        return _run_to_completion(out, "append")
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    return _run_to_completion(out, "append", rocksdb=True)
 
 
 def purchase_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,34 +480,7 @@ def purchase_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFr
     time: far inside the final watermark (max_ts - 2h), where every
     unmatched purchase has provably been evicted and emitted.
     """
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("p_ts")),
-        "leftOuter",
-    )
-    out = _run_to_completion(joined, "append")
+    out = _purchases_with_clicks(spark, sf_dir, "leftOuter")
     # Horizon bound computed batch-side (identical in the SQL oracle).
     # The global watermark is the MIN of the two sides' watermarks, and
     # each side tracks the max event time of the rows reaching ITS
@@ -490,39 +509,11 @@ def purchase_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _state_store_provider(spark: SparkSession, provider_class: str | None):
-    """Set the state-store provider for queries STARTED inside the
-    block, restoring the previous conf on exit (the provider is read at
-    query start and pinned into the checkpoint from then on)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    if provider_class is None:
-        yield
-        return
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, provider_class)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-
 def streaming_band_dedup(
     spark: SparkSession,
     sf_dir: str,
     work_dir: str,
     rows_per_batch: int = 200,
-    state_store_provider: str | None = ROCKSDB_PROVIDER,
-    shuffle_cap: int | None = None,
 ) -> DataFrame:
     """Streaming near-dup dedup over a document stream: band-first-wins.
 
@@ -550,7 +541,7 @@ def streaming_band_dedup(
 
     100 TB story: state is bounded by DISTINCT band keys (≪ docs for
     near-dup-heavy corpora) and lives in the incremental state store —
-    RocksDB-backed BY DEFAULT here (``state_store_provider``; the
+    RocksDB-backed here (``ROCKSDB_PROVIDER``, pinned for the run; the
     HDFS-backed default store holds every key's state in executor HEAP
     maps, which at 100 TB of distinct band keys is an OOM — RocksDB
     spills state to local disk with changelog checkpointing, the
@@ -563,27 +554,13 @@ def streaming_band_dedup(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..catalog import _ensure_workers_can_import
     from ..operators.hashing import minhash_ab_pairs, minhash_sig_from_ab
-    from ..sources.replay_stream import register_replay_source
 
-    # ship the package for the executor-side UDF references, and
-    # register the source pickled BY VALUE for the driver-side
-    # streaming-source runner, which addPyFile does NOT reach (caught
-    # by the vanilla contract drive; see register_replay_source)
-    _ensure_workers_can_import(spark)
-    register_replay_source(spark)
-    docs_path = f"{sf_dir}/documents.parquet"
     verdict_dir = f"{work_dir}/verdicts"
+    append = _append_batches(verdict_dir)
     bands, rows_per_band = 4, 2
 
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", docs_path)
-        .option("rows_per_batch", str(rows_per_batch))
-        .load()
-        .select("doc_id", "text")
-    )
+    stream = _replay(spark, sf_dir, "documents", rows_per_batch, "doc_id", "text")
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     banded = (
         # _ab projected into its own column so the md5-per-shingle pass
@@ -636,20 +613,15 @@ def streaming_band_dedup(
             )
             .withColumn("kept", F.col("n_dup_bands") == 0)
         )
-        if not verdicts.isEmpty():
-            verdicts.write.mode("append").parquet(verdict_dir)
+        append(verdicts, batch_id)
 
-    with _state_store_provider(spark, state_store_provider), _capped_shuffle(spark, shuffle_cap):
-        q = (
-            claims.writeStream.outputMode("update")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        spark,
+        claims.writeStream.outputMode("update")
+        .option("checkpointLocation", f"{work_dir}/checkpoint")
+        .foreachBatch(handle),
+        rocksdb=True,
+    )
     return spark.read.parquet(verdict_dir).select("doc_id", "n_bands", "n_dup_bands", "kept")
 
 
@@ -658,10 +630,8 @@ def streaming_quality_funnel(
     sf_dir: str,
     work_dir: str,
     rows_per_batch: int = 200,
-    state_store_provider: str | None = ROCKSDB_PROVIDER,
     classifier_weights: list[float] | None = None,
     classifier_bias: float = 0.0625,
-    shuffle_cap: int | None = None,
 ) -> DataFrame:
     """The pretraining funnel's cheap stages AT INGEST: quality rules →
     exact dedup, per micro-batch, over the document replay stream.
@@ -697,21 +667,11 @@ def streaming_quality_funnel(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..catalog import _ensure_workers_can_import
     from ..operators.text import normalized
-    from ..sources.replay_stream import register_replay_source
 
-    _ensure_workers_can_import(spark)
-    register_replay_source(spark)
     verdict_dir = f"{work_dir}/verdicts"
-
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("rows_per_batch", str(rows_per_batch))
-        .load()
-        .select("doc_id", "text")
-    )
+    append = _append_batches(verdict_dir)
+    stream = _replay(spark, sf_dir, "documents", rows_per_batch, "doc_id", "text")
     w = F.split(F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "), " ")
     if classifier_weights is not None:
         from ..operators.quality_classifier import quality_score
@@ -768,21 +728,13 @@ def streaming_quality_funnel(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            batch_df.write.mode("append").parquet(verdict_dir)
-
-    with _state_store_provider(spark, state_store_provider), _capped_shuffle(spark, shuffle_cap):
-        q = (
-            claims.writeStream.outputMode("update")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        spark,
+        claims.writeStream.outputMode("update")
+        .option("checkpointLocation", f"{work_dir}/checkpoint")
+        .foreachBatch(append),
+        rocksdb=True,
+    )
     return spark.read.parquet(verdict_dir).select("doc_id", "verdict")
 
 
@@ -792,8 +744,6 @@ def streaming_domain_cap(
     work_dir: str,
     cap: int = 15,
     rows_per_batch: int = 200,
-    state_store_provider: str | None = ROCKSDB_PROVIDER,
-    shuffle_cap: int | None = None,
 ) -> DataFrame:
     """Per-domain document cap AT INGEST: the first ``cap`` docs of
     each domain (arrival order) are kept, the rest rejected -- the
@@ -814,19 +764,10 @@ def streaming_domain_cap(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..catalog import _ensure_workers_can_import
-    from ..sources.replay_stream import register_replay_source
-
-    _ensure_workers_can_import(spark)
-    register_replay_source(spark)
     verdict_dir = f"{work_dir}/verdicts"
-
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("rows_per_batch", str(rows_per_batch))
-        .load()
-        .select("doc_id", F.col("source").alias("domain"))
+    append = _append_batches(verdict_dir)
+    stream = _replay(
+        spark, sf_dir, "documents", rows_per_batch, "doc_id", F.col("source").alias("domain")
     )
 
     def claim(key, pdfs, state) -> "object":
@@ -850,21 +791,13 @@ def streaming_domain_cap(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            batch_df.write.mode("append").parquet(verdict_dir)
-
-    with _state_store_provider(spark, state_store_provider), _capped_shuffle(spark, shuffle_cap):
-        q = (
-            claims.writeStream.outputMode("update")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        spark,
+        claims.writeStream.outputMode("update")
+        .option("checkpointLocation", f"{work_dir}/checkpoint")
+        .foreachBatch(append),
+        rocksdb=True,
+    )
     return spark.read.parquet(verdict_dir).select("doc_id", "domain", "kept")
 
 
@@ -874,8 +807,6 @@ def streaming_ewma_alert(
     work_dir: str,
     threshold: float = 50.0,
     rows_per_batch: int = 2000,
-    state_store_provider: str | None = ROCKSDB_PROVIDER,
-    shuffle_cap: int | None = None,
 ) -> DataFrame:
     """Per-user EWMA anomaly monitor AT INGEST: each arriving event is
     scored against the user's smoothed value baseline (alpha=0.5 EWMA)
@@ -901,21 +832,10 @@ def streaming_ewma_alert(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..catalog import _ensure_workers_can_import
-    from ..sources.replay_stream import register_replay_source
-
-    _ensure_workers_can_import(spark)
-    register_replay_source(spark)
     verdict_dir = f"{work_dir}/verdicts"
+    append = _append_batches(verdict_dir)
     thr_n = int(round(threshold * 1e9))
-
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("rows_per_batch", str(rows_per_batch))
-        .load()
-        .select("event_id", "user_id", "value")
-    )
+    stream = _replay(spark, sf_dir, "events", rows_per_batch, "event_id", "user_id", "value")
 
     def track(key, pdfs, state) -> "object":
         import math
@@ -959,21 +879,13 @@ def streaming_ewma_alert(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            batch_df.write.mode("append").parquet(verdict_dir)
-
-    with _state_store_provider(spark, state_store_provider), _capped_shuffle(spark, shuffle_cap):
-        q = (
-            tracked.writeStream.outputMode("update")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        spark,
+        tracked.writeStream.outputMode("update")
+        .option("checkpointLocation", f"{work_dir}/checkpoint")
+        .foreachBatch(append),
+        rocksdb=True,
+    )
     return spark.read.parquet(verdict_dir).select(
         "event_id", "user_id", "ewma", "alert"
     )
@@ -984,7 +896,6 @@ def streaming_manifest_append(
     sf_dir: str,
     work_dir: str,
     rows_per_batch: int = 2000,
-    shuffle_cap: int | None = None,
 ) -> DataFrame:
     """Streaming landing zone AS A MANIFEST TABLE: each micro-batch of
     the event stream is appended through the lakehouse manifest commit
@@ -1008,37 +919,23 @@ def streaming_manifest_append(
     exactly what compact_parquet_dir / vacuum_orphans maintain, and
     the OCC commit lets maintenance run BESIDE the live sink.
     """
-    from ..catalog import _ensure_workers_can_import
     from ..operators.layout import append_batch_idempotent, read_table
-    from ..sources.replay_stream import register_replay_source
 
-    _ensure_workers_can_import(spark)
-    register_replay_source(spark)
     table_dir = f"{work_dir}/events_table"
-
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("rows_per_batch", str(rows_per_batch))
-        .load()
-        .select("event_id", "user_id", "event_type", "value")
+    stream = _replay(
+        spark, sf_dir, "events", rows_per_batch, "event_id", "user_id", "event_type", "value"
     )
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():
             append_batch_idempotent(spark, table_dir, batch_df, batch_id)
 
-    with _capped_shuffle(spark, shuffle_cap):
-        q = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .foreachBatch(land)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        spark,
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", f"{work_dir}/checkpoint")
+        .foreachBatch(land),
+    )
     return (
         read_table(spark, table_dir)
         .groupBy("event_type")
@@ -1054,7 +951,6 @@ def streaming_cdf_incremental_mart(
     sf_dir: str,
     work_dir: str,
     rows_per_batch: int = 2000,
-    shuffle_cap: int | None = None,
 ) -> DataFrame:
     """The end-to-end incremental pipeline over a streaming landing
     zone: a PRODUCER lands each micro-batch as an idempotent manifest
@@ -1074,24 +970,15 @@ def streaming_cdf_incremental_mart(
     micro-batch slicing BY CONSTRUCTION of exactly-once commits +
     exact change feeds.
     """
-    from ..catalog import _ensure_workers_can_import
     from ..operators.layout import (
         append_batch_idempotent,
         manifest_versions,
         read_changes,
     )
-    from ..sources.replay_stream import register_replay_source
 
-    _ensure_workers_can_import(spark)
-    register_replay_source(spark)
     table_dir = f"{work_dir}/events_table"
-
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("rows_per_batch", str(rows_per_batch))
-        .load()
-        .select("event_id", "user_id", "event_type", "value")
+    stream = _replay(
+        spark, sf_dir, "events", rows_per_batch, "event_id", "user_id", "event_type", "value"
     )
 
     state = {"v": None, "mart": {}}  # consumer: last version + tiny mart
@@ -1128,17 +1015,12 @@ def streaming_cdf_incremental_mart(
             state["v"] = manifest_versions(table_dir)[-1] - 1
         consume_changes()
 
-    with _capped_shuffle(spark, shuffle_cap):
-        q = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .foreachBatch(land)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        spark,
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", f"{work_dir}/checkpoint")
+        .foreachBatch(land),
+    )
     rows = [
         (t, int(n), float(s)) for t, (n, s) in sorted(state["mart"].items())
     ]
@@ -1234,12 +1116,39 @@ def streaming_pattern_v_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _land_wap_batch(spark: SparkSession, table_dir: str, batch_df: DataFrame, aid: str) -> bool:
+    """Land one batch in the manifest table ``table_dir`` through
+    write-audit-publish under the audit id ``aid``, resumably: a batch
+    whose files are already live (published) is a no-op, one already in
+    the staged registry (crashed after staging) is not staged again, and
+    the audit (every ``value >= 0``) then publishes the staged files or
+    discards them. Returns False for the published no-op, else True."""
+    from ..operators.layout import (
+        _staged_registry,
+        discard_staged,
+        ensure_manifest,
+        publish_staged,
+        read_staged,
+        stage_append,
+    )
+
+    if any(n.startswith(f"staged-{aid}-") for n in ensure_manifest(table_dir)):
+        return False  # replay of a published batch
+    if aid not in _staged_registry(pathlib.Path(table_dir)):
+        stage_append(spark, table_dir, batch_df, audit_id=aid)
+    # a crash mid-audit resumes here on replay
+    if read_staged(spark, table_dir, aid).filter(F.col("value") < 0).isEmpty():
+        publish_staged(spark, table_dir, aid)
+    else:
+        discard_staged(table_dir, aid)
+    return True
+
+
 def streaming_wap_landing(
     spark: SparkSession,
     sf_dir: str,
     work_dir: str,
     rows_per_batch: int = 2000,
-    shuffle_cap: int | None = None,
 ) -> DataFrame:
     """Quality-gated streaming ingest: every micro-batch lands through
     WRITE-AUDIT-PUBLISH (`operators/layout.py::stage_append` →
@@ -1263,71 +1172,33 @@ def streaming_wap_landing(
     publish is O(1) metadata — the quality gate costs one extra pass
     over NEW data only, never a quarantine copy or a table scan.
     """
-    from ..catalog import _ensure_workers_can_import
-    from ..operators.layout import (
-        _staged_registry,
-        discard_staged,
-        ensure_manifest,
-        publish_staged,
-        read_staged,
-        read_table,
-        stage_append,
-    )
-    from ..sources.replay_stream import register_replay_source
-    import pathlib
+    from ..operators.layout import _staged_registry, ensure_manifest, read_table
 
-    _ensure_workers_can_import(spark)
-    register_replay_source(spark)
     table_dir = f"{work_dir}/events_table"
-    # adopt the (empty) table before the first batch: land()'s
+    # adopt the (empty) table before the first batch: the landing's
     # published-prefix test reads the manifest, which needs the dir
     pathlib.Path(table_dir).mkdir(parents=True, exist_ok=True)
     ensure_manifest(table_dir)
-
-    stream = (
-        spark.readStream.format("parquet_replay")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("rows_per_batch", str(rows_per_batch))
-        .load()
-        .select("event_id", "user_id", "event_type", "value")
+    stream = _replay(
+        spark, sf_dir, "events", rows_per_batch, "event_id", "user_id", "event_type", "value"
     )
 
-    def _audit_and_resolve(aid: str) -> None:
-        bad = read_staged(spark, table_dir, aid).filter(F.col("value") < 0)
-        if bad.isEmpty():
-            publish_staged(spark, table_dir, aid)
-        else:
-            discard_staged(table_dir, aid)
-
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        aid = f"b{batch_id}"
-        live = ensure_manifest(table_dir)
-        if any(n.startswith(f"staged-{aid}-") for n in live):
-            return  # replay of a published batch: no-op
-        if aid not in _staged_registry(pathlib.Path(table_dir)):
-            stage_append(spark, table_dir, batch_df, audit_id=aid)
-        _audit_and_resolve(aid)  # crash mid-audit resumes here on replay
+        if not batch_df.isEmpty():
+            _land_wap_batch(spark, table_dir, batch_df, f"b{batch_id}")
 
-    with _capped_shuffle(spark, shuffle_cap):
-        q = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/checkpoint")
-            .foreachBatch(land)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        spark,
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", f"{work_dir}/checkpoint")
+        .foreachBatch(land),
+    )
     # the poison batch: audited, FAILS, discarded — no reader saw it
     poison = spark.createDataFrame(
         [(-1, 0, "poison", -1.0)],
         "event_id bigint, user_id bigint, event_type string, value double",
     )
-    stage_append(spark, table_dir, poison.coalesce(1), audit_id="poison")
-    _audit_and_resolve("poison")
+    _land_wap_batch(spark, table_dir, poison.coalesce(1), "poison")
     wap_clean = not _staged_registry(pathlib.Path(table_dir))
     return (
         read_table(spark, table_dir)

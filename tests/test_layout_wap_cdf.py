@@ -194,11 +194,7 @@ def test_wap_replay_resumes_idempotently(spark, base):
     whichever WAP step the crash interrupted — staged-not-published
     re-audits and publishes ONCE; already-published no-ops — so the
     table never sees a batch twice."""
-    from dbt_slabbing_spark.operators.layout import (
-        _staged_registry,
-        ensure_manifest,
-    )
-    import pathlib
+    from dbt_slabbing_spark.streaming.jobs import _land_wap_batch
 
     target, _rows = base
     n0 = read_table(spark, target).count()
@@ -208,21 +204,12 @@ def test_wap_replay_resumes_idempotently(spark, base):
     )
     aid = "b7"
 
-    def land(batch_df):  # the job's land() logic, crash-resumable
-        live = ensure_manifest(target)
-        if any(n.startswith(f"staged-{aid}-") for n in live):
-            return "already-published"
-        if aid not in _staged_registry(pathlib.Path(target)):
-            stage_append(spark, target, batch_df.coalesce(1), audit_id=aid)
-        publish_staged(spark, target, aid)  # audit passed
-        return "published"
-
     # attempt 1 "crashes" after stage, before publish
     stage_append(spark, target, batch.coalesce(1), audit_id=aid)
     assert read_table(spark, target).count() == n0  # invisible
     # replay: resumes at the audit/publish step, publishes once
-    assert land(batch) == "published"
+    assert _land_wap_batch(spark, target, batch, aid) is True
     assert read_table(spark, target).count() == n0 + 2
     # replay again: prefix test short-circuits, nothing doubles
-    assert land(batch) == "already-published"
+    assert _land_wap_batch(spark, target, batch, aid) is False
     assert read_table(spark, target).count() == n0 + 2

@@ -242,13 +242,15 @@ def test_band_dedup_verdicts_invariant_to_batch_slicing(spark, tmp_path):
     assert state_dirs, "applyInPandasWithState produced no state store files"
 
 
-def test_band_dedup_runs_on_rocksdb_and_matches_hdfs_store(spark, tmp_path):
+def test_band_dedup_runs_on_rocksdb_and_matches_hdfs_store(spark, tmp_path, monkeypatch):
     """stream_minhash_band_dedup's gate path now PINS the RocksDB
     state-store provider (streaming/jobs.py::ROCKSDB_PROVIDER — the
     production backend: state spills to local disk instead of executor
     heap maps). Verdicts must be identical under both providers, and
     the RocksDB run must actually engage the provider (observable as
     rocksdb files under the checkpoint's state dir)."""
+    import contextlib
+
     from dbt_slabbing_spark.streaming.jobs import streaming_band_dedup
     from tests.conftest import SF_SMOKE
 
@@ -256,16 +258,14 @@ def test_band_dedup_runs_on_rocksdb_and_matches_hdfs_store(spark, tmp_path):
         r["doc_id"]: (r["n_dup_bands"], r["kept"])
         for r in streaming_band_dedup(
             spark, SF_SMOKE, str(tmp_path / "rocks"), rows_per_batch=60
-        ).collect()  # default provider = RocksDB
+        ).collect()  # pinned provider = RocksDB
     }
+    # without the pin the session default (HDFS-backed) store runs
+    monkeypatch.setattr(jobs, "_rocksdb_state_store", lambda _spark: contextlib.nullcontext())
     hdfs = {
         r["doc_id"]: (r["n_dup_bands"], r["kept"])
         for r in streaming_band_dedup(
-            spark,
-            SF_SMOKE,
-            str(tmp_path / "hdfs"),
-            rows_per_batch=60,
-            state_store_provider=None,  # session default (HDFS-backed)
+            spark, SF_SMOKE, str(tmp_path / "hdfs"), rows_per_batch=60
         ).collect()
     }
     assert rocks == hdfs and len(rocks) > 0
@@ -515,3 +515,44 @@ def test_manifest_append_sink_exactly_once_under_replay(spark, tmp_path):
     # an UNSEEN batch id still appends (the guard is per-batch, not global)
     assert layout.append_batch_idempotent(spark, tdir, replay_df, 10**6) is True
     assert layout.read_table(spark, tdir).count() == n_events + 1
+
+
+@pytest.mark.parametrize("runner", ["manifest_append", "domain_cap"])
+def test_failing_batch_releases_query_and_confs(spark, tmp_path, monkeypatch, runner):
+    """A runner whose batch body raises must still stop its query and
+    restore the confs it pinned for the run: the shuffle-partition cap
+    (set above defaultParallelism here so the cap really applies) and,
+    for the RocksDB claim runners, the state-store provider."""
+    from dbt_slabbing_spark.operators import layout
+
+    work = tmp_path / "w"
+    if runner == "manifest_append":
+
+        def boom(*_a, **_k):
+            raise RuntimeError("injected batch failure")
+
+        monkeypatch.setattr(layout, "append_batch_idempotent", boom)
+        run = lambda: jobs.streaming_manifest_append(spark, SF_SMOKE, str(work))  # noqa: E731
+    else:
+        # the claim sink's directory is a regular file: the first
+        # non-empty batch's append fails
+        work.mkdir()
+        (work / "verdicts").write_text("not a directory")
+        run = lambda: jobs.streaming_domain_cap(spark, SF_SMOKE, str(work))  # noqa: E731
+
+    shuffle_key = "spark.sql.shuffle.partitions"
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    old_shuffle = spark.conf.get(shuffle_key)
+    old_provider = spark.conf.get(provider_key, None)
+    raised = str(spark.sparkContext.defaultParallelism + 3)
+    spark.conf.set(shuffle_key, raised)
+    try:
+        with pytest.raises(Exception) as failure:
+            run()
+        if runner == "manifest_append":
+            assert "injected batch failure" in str(failure.value)
+        assert spark.streams.active == []
+        assert spark.conf.get(shuffle_key) == raised
+        assert spark.conf.get(provider_key, None) == old_provider
+    finally:
+        spark.conf.set(shuffle_key, old_shuffle)
