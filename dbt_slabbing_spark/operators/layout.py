@@ -2302,20 +2302,22 @@ def replicate_changes(
     # either the pre-batch, mid-batch, or post-batch snapshot, never
     # a torn one; replaying the range re-applies the same net effect
     stats: dict = {"rows_deleted": 0}
-    if dead_keys.limit(1).count():
-        st_d = merge_rows(
-            spark,
-            dst_path,
-            dead_keys,
-            on=keys,
-            when_matched_update=None,
-            when_matched_delete=True,
-            when_not_matched_insert=False,
-        )
-        stats["rows_deleted"] = st_d["rows_deleted"]
-    st_u = merge_rows(spark, dst_path, img, on=keys)
-    img.unpersist()
-    last.unpersist()
+    try:
+        if dead_keys.limit(1).count():
+            st_d = merge_rows(
+                spark,
+                dst_path,
+                dead_keys,
+                on=keys,
+                when_matched_update=None,
+                when_matched_delete=True,
+                when_not_matched_insert=False,
+            )
+            stats["rows_deleted"] = st_d["rows_deleted"]
+        st_u = merge_rows(spark, dst_path, img, on=keys)
+    finally:
+        img.unpersist()
+        last.unpersist()
     stats.update(
         rows_updated=st_u["rows_updated"], rows_inserted=st_u["rows_inserted"]
     )
@@ -3348,25 +3350,27 @@ def compact_incremental(
     ``read_table(prune=)`` keeps skipping; an occasional full compact
     merges runs when their count grows).
 
-    No-op below ``min_files`` unclustered files (don't churn commits
-    for one straggler). Deletion vectors on the rewritten files are
-    materialized, like any rewrite. Requires clustering state from a
+    It is :func:`compact_table` scoped to the unclustered files
+    (``scope_files=``) with the recorded ``cluster_by``, so it shares
+    that function's contract: one OCC commit, deletion vectors on the
+    rewritten files materialized, the clustering state extended by the
+    new files, and the displaced files kept on disk so earlier
+    versions stay time-travel-readable until :func:`vacuum_orphans`
+    reclaims them. No-op below ``min_files`` unclustered files (don't
+    churn commits for one straggler). Requires clustering state from a
     prior ``compact_table(cluster_by=...)``. Returns
     ``{"n_unclustered", "n_files_rewritten", "n_files_after",
     "version"}``."""
-    import json
     import pathlib
-    import uuid
 
     p = pathlib.Path(path)
     vers, live = _snapshot_for_update(p)
-    doc = json.loads((p / _MANIFEST).read_text())
-    clu = doc.get("clustered")
+    clu = _clustered_state(p)
     if not clu:
         raise ValueError(
             "no clustering state: run compact_table(cluster_by=...) first"
         )
-    by, clustered_files = list(clu["by"]), set(clu["files"])
+    clustered_files = set(clu["files"])
     unclustered = [n for n in live if n not in clustered_files]
     if len(unclustered) < min_files:
         return {
@@ -3375,36 +3379,15 @@ def compact_incremental(
             "n_files_after": len(live),
             "version": vers,
         }
-    total = sum((p / n).stat().st_size for n in unclustered)
-    n_files = max(1, -(-total // target_file_bytes))  # ceil
-    token = uuid.uuid4().hex[:12]
-    df = _scan_with_dv(
-        spark, p, unclustered, _dv_at_version(p), merge_schema=True
+    st = compact_table(
+        spark, p, target_file_bytes, cluster_by=list(clu["by"]),
+        scope_files=unclustered,
     )
-    df = df.repartitionByRange(int(n_files), *by).sortWithinPartitions(*by)
-    new_names = _write_and_rename(
-        _to_physical(p, df), pathlib.Path(str(p) + f".inccompact-{token}"), p,
-        f"inccompact-{token}-",
-    )
-    gone = set(unclustered)
-    kept = [n for n in live if n not in gone]
-    version = _commit_manifest(  # ATOMIC + OCC
-        p,
-        kept + new_names,
-        expected_version=vers,
-        stats=_stats_for_added(p, new_names),
-        cdc={"type": "noop", "op": "OPTIMIZE"},
-        replace={
-            "clustered": {"by": by, "files": sorted(clustered_files | set(new_names))}
-        },
-    )
-    for n in unclustered:  # post-commit cleanup; failure → orphans only
-        _unlink_quiet(p / n)
     return {
         "n_unclustered": len(unclustered),
-        "n_files_rewritten": len(unclustered),
-        "n_files_after": len(kept) + len(new_names),
-        "version": version,
+        "n_files_rewritten": st.get("n_files_rewritten", 0),
+        "n_files_after": st["n_files_after"],
+        "version": st["version"],
     }
 
 
@@ -3612,7 +3595,6 @@ def _row_images(df: DataFrame) -> DataFrame:
 def _mutate(
     spark, p, op: str, mode: str, retain: bool, vers: int, live: list[str],
     dv_prev: dict, cand: list[str], keys: tuple, changed, rewrite, derive,
-    insert_tag: str | None = None,
 ) -> dict:
     """The one write path of DELETE, UPDATE and MERGE: the caller
     classifies, this kernel does everything else.
@@ -3627,9 +3609,11 @@ def _mutate(
        derive from that O(changed rows) artifact ``m``, never from a
        second candidate scan.
     3. One ``groupBy`` attributes ``m`` to files and actions.
-    4. ``derive(tgt, m)`` returns ``(appends, changes, stats)``: the
-       ``(frame, tag)`` new rows to append, the CDC parts for
-       :func:`_stage_change_rows`, and any stats the op counts itself.
+    4. ``derive(tgt, m)`` returns ``(appends, changes)``: the
+       ``(frame, tag)`` new rows to append and the CDC parts for
+       :func:`_stage_change_rows`. A CDC part whose frame is an append tag (a ``str``) is read back
+       from the files written for that tag, so an image is evaluated
+       once.
     5. cow rewrites the affected files' kept rows, ``rewrite(tgt,
        uris)``; dv writes ONE deletion-vector parquet of the changed
        positions instead — zero data files rewritten.
@@ -3640,11 +3624,12 @@ def _mutate(
 
     New files are named ``part-{op}-{token}-{tag}NNNNN.parquet`` (a
     merge's rewrite is tagged ``r``, delete/update rewrites are not)
-    and ``dv-{token}-00000.parquet``; appends tagged ``insert_tag`` are
-    the commit's ``insert_files`` CDC pointer. The staging directory is
-    removed however the call ends. A delete/update that changes no row
-    commits nothing. Returns the stats named in ``keys`` (plus
-    ``n_dv_files_added`` under dv)."""
+    and ``dv-{token}-00000.parquet``; appended part files without rows
+    are dropped, and the appends tagged ``i`` (a merge's inserts) are
+    the commit's ``insert_files`` CDC pointer and its ``rows_inserted``.
+    The staging directory is removed however the call ends. A
+    delete/update that changes no row commits nothing. Returns the
+    stats named in ``keys`` (plus ``n_dv_files_added`` under dv)."""
     import pathlib
     import shutil
     import uuid
@@ -3676,10 +3661,11 @@ def _mutate(
     stage = pathlib.Path(str(p) + f".{op}-{token}")
     gone: set = set()
     try:
-        changed(tgt).write.mode("overwrite").parquet(str(stage / "matched"))
-        m = _read_staged_or_none(spark, stage / "matched")
-        if m is None:
-            m = changed(tgt).limit(0)
+        c = changed(tgt)
+        c.write.mode("overwrite").parquet(str(stage / "matched"))
+        # the schema just written: no inference job, and an empty write
+        # (AQE can leave no part file at all) reads as zero rows
+        m = spark.read.schema(c.schema).parquet(str(stage / "matched"))
         fcol = "_file" if cow else "__dv_name"
         # bounded: one row per affected file and action
         per_file = m.groupBy(fcol, "__action").count().collect()
@@ -3687,8 +3673,8 @@ def _mutate(
             return result()
         uris = sorted({r[fcol] for r in per_file})
         affected = sorted({_uri_to_name(u) for u in uris})
-        appends, changes, extra = derive(tgt, m)
-        new_names, ins_names = [], []
+        appends, changes = derive(tgt, m)
+        new_names, ins_names, written = [], [], {}
         if cow and affected:
             gone = set(affected)
             kept = _row_images(rewrite(tgt, uris)).repartition(len(affected))
@@ -3698,12 +3684,27 @@ def _mutate(
                 f"part-{op}-{token}-{rtag}",
             )
         for df, tag in appends:
+            df = _to_physical(p, df)
             names = _write_and_rename(
-                _to_physical(p, df), stage / tag, p, f"part-{op}-{token}-{tag}"
+                df, stage / tag, p, f"part-{op}-{token}-{tag}", skip_empty=True
             )
             new_names += names
-            if tag == insert_tag:
-                ins_names += names
+            if tag == "i":
+                ins_names = names
+            written[tag] = (names, df.schema)
+
+        def read_back(tag: str) -> DataFrame | None:
+            names, schema = written[tag]
+            if not names:
+                return None
+            return _to_logical(
+                spark.read.schema(schema).parquet(*[str(p / n) for n in names]),
+                _column_map(p),
+            )
+
+        changes = [
+            (read_back(df) if isinstance(df, str) else df, ct) for df, ct in changes
+        ]
         new_dv = dv_prev
         if not cow and affected:
             dead = m.select(
@@ -3734,11 +3735,8 @@ def _mutate(
             n_files_rewritten=len(gone),
             n_files_added=len(new_names),
             n_dv_files_added=int(bool(affected) and not cow),
+            rows_inserted=_live_row_count(p, ins_names, {}, spark),
         )
-        # images replace their rows one for one, so what is left of the
-        # row delta is the inserts
-        st["rows_inserted"] = st["rows_after"] - rows_before + n_deleted
-        st.update(extra)
         _commit_manifest(
             p, files, expected_version=vers, stats=_stats_for_added(p, new_names),
             cdc=cdc, replace=None if cow else {"dv": new_dv},
@@ -3844,21 +3842,8 @@ def delete_rows(
         rewrite=lambda tgt, uris: tgt.filter(
             F.col("_file").isin(uris) & ~F.coalesce(cond, F.lit(False))
         ),
-        derive=lambda tgt, m: ([], [(_row_images(m), "delete")], {}),
+        derive=lambda tgt, m: ([], [(_row_images(m), "delete")]),
     )
-
-
-def _read_staged_or_none(spark, d) -> DataFrame | None:
-    """Read a staged matched-rows artifact, or None when the write
-    produced NO part files — AQE can collapse an empty result to zero
-    partitions, in which case nothing (not even a schema-only file)
-    lands and a read would raise UNABLE_TO_INFER_SCHEMA. None means
-    "the mutation matched nothing"."""
-    import pathlib
-
-    if not any(pathlib.Path(str(d)).glob("*.parquet")):
-        return None
-    return spark.read.parquet(str(d))
 
 
 def _merge_candidates(p, live, keys, ranges: dict) -> list[str]:
@@ -3939,38 +3924,32 @@ def _merge_clause_plan(
     delete, matched update, not-matched-by-source delete and update,
     keep), clauses evaluated in the documented order with NULL
     conditions false. The changed rows (all but K) are staged WITH
-    their new images (``__u_*`` columns for matched updates, ``__x_*``
-    for not-matched-by-source updates), so the appended images, the
-    CDC pre/post images and the DV all come from that one artifact;
-    the K rows of affected files are the cow rewrite. Qualifying
-    unmatched source rows arrive by anti join and land as the
-    ``i``-tagged insert files."""
-    import functools
-    import operator
+    their assignment images (``__u_*`` columns for a matched update's
+    assignment dict, ``__x_*`` for not-matched-by-source updates), so
+    those images, the CDC pre-images and the DV all come from that one
+    artifact. A ``SET *`` update appends ONE image per matched key: the
+    source rows whose keys the staged ``U`` rows carry. The K rows of
+    affected files are the cow rewrite. Qualifying unmatched source
+    rows arrive by anti join and land as the ``i``-tagged insert
+    files. Expressions are built as SQL text where they can be: each
+    Column built in Python costs py4j round trips, per merge."""
 
-    def _cond(c, default):
-        if c is None:
-            return F.lit(default)
-        if isinstance(c, bool):
-            return F.lit(c)
-        return F.coalesce(F.expr(c), F.lit(False))  # NULL cond = false
+    def _cond(c, default: bool) -> str:
+        if c is None or isinstance(c, bool):
+            return str(default if c is None else c).lower()
+        return f"coalesce(({c}), false)"  # NULL cond = false
 
-    matched = F.col("s.__s_hit").isNotNull()
-    c_upd = _cond(upd_cond, True) if upd is not None else F.lit(False)
-    c_nmbs_upd = (
-        _cond(nmbs_upd_cond, True) if nmbs_upd is not None else F.lit(False)
-    )
-    action = (
-        F.when(matched & _cond(del_cond, False), F.lit("D"))
-        .when(matched & c_upd, F.lit("U"))
-        .when(~matched & _cond(nmbs_del, False), F.lit("X"))
-        .when(~matched & c_nmbs_upd, F.lit("S"))
-        .otherwise(F.lit("K"))
+    hit, miss = "s.__s_hit IS NOT NULL", "s.__s_hit IS NULL"
+    c_upd = _cond(upd_cond, True) if upd is not None else "false"
+    c_nmbs_upd = _cond(nmbs_upd_cond, True) if nmbs_upd is not None else "false"
+    action = F.expr(
+        f"CASE WHEN {hit} AND {_cond(del_cond, False)} THEN 'D'"
+        f" WHEN {hit} AND {c_upd} THEN 'U'"
+        f" WHEN {miss} AND {_cond(nmbs_del, False)} THEN 'X'"
+        f" WHEN {miss} AND {c_nmbs_upd} THEN 'S' ELSE 'K' END"
     )
     s = _broadcast_if_small(spark, src.withColumn("__s_hit", F.lit(1)).alias("s"))
-    jcond = functools.reduce(
-        operator.and_, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
-    )
+    jcond = F.expr(" AND ".join(f"t.`{k}` = s.`{k}`" for k in keys))
 
     def classify(tgt: DataFrame) -> DataFrame:
         return tgt.alias("t").join(s, on=jcond, how="left").withColumn(
@@ -4011,46 +3990,46 @@ def _merge_clause_plan(
                 raise ValueError(
                     "MERGE INSERT column list must include the join keys"
                 )
-        out = [F.col(f"t.{c}").alias(c) for c in tgt.columns] + ["__action"]
-        if upd == "*":  # '*' takes the source row (schema evolution allowed)
-            out += [F.col(f"s.{c}").alias(f"__u_{c}") for c in src.columns]
-        elif upd is not None:
+        out = ["t.*", "__action"]
+        if isinstance(upd, dict):
             out += images(upd, "U", "__u_", tgt)
         if nmbs_upd is not None:
             out += images(nmbs_upd, "S", "__x_", tgt)
-        return classify(tgt).filter(F.col("__action") != "K").select(*out)
+        return classify(tgt).filter("__action != 'K'").select(*out)
 
     def rewrite(tgt: DataFrame, uris: list[str]) -> DataFrame:
         kept = classify(tgt.filter(F.col("_file").isin(uris)))
-        return kept.filter(F.col("__action") == "K").select(
-            *[F.col(f"t.{c}").alias(c) for c in tgt.columns]
-        )
+        return kept.filter("__action = 'K'").select("t.*")
 
     def derive(tgt: DataFrame, m: DataFrame):
         cols = data_cols(tgt)
 
         def rows(*acts: str) -> DataFrame:
-            return m.filter(F.col("__action").isin(*acts))
+            return m.filter(f"__action IN ({', '.join(repr(a) for a in acts)})")
 
         appends = []
         changes = [(rows("D", "X").select(*cols), "delete")]
-        if upd is not None:
-            new = (
-                [F.col(f"__u_{c}").alias(c) for c in src.columns]
-                if upd == "*"
-                else [F.col(f"__u_{c}" if c in upd else c).alias(c) for c in cols]
+        if upd == "*":
+            # the record-key upsert: ONE image per matched key, the
+            # source row (schema evolution allowed), however many
+            # target rows it replaces
+            appends.append(
+                (src.join(rows("U").select(*keys), on=keys, how="left_semi"), "u")
             )
+        elif upd is not None:
+            new = [F.col(f"__u_{c}" if c in upd else c).alias(c) for c in cols]
             appends.append((rows("U").select(*new), "u"))
+        if upd is not None:
             changes += [
                 (rows("U").select(*cols), "update_preimage"),
-                (rows("U").select(*new), "update_postimage"),
+                ("u", "update_postimage"),
             ]
         if nmbs_upd is not None:
             new = [F.col(f"__x_{c}" if c in nmbs_upd else c).alias(c) for c in cols]
             appends.append((rows("S").select(*new), "x"))
             changes += [
                 (rows("S").select(*cols), "update_preimage"),
-                (rows("S").select(*new), "update_postimage"),
+                ("x", "update_postimage"),
             ]
         if ins is not False:
             # no broadcast hint: the PROBE side (src) is the small one —
@@ -4071,12 +4050,12 @@ def _merge_clause_plan(
                     ]
                 )
             # inserts are NOT staged as CDC rows: the commit points at
-            # their data files (insert_tag), exactly the insert set
+            # their data files (tag "i"), exactly the insert set
             appends.append((inserts, "i"))
         for df, _tag in appends:
             _enforce_constraints(p, df)
             _reject_dropped_collisions(p, _to_physical(p, df))
-        return appends, changes, {}
+        return appends, changes
 
     return changed, rewrite, derive
 
@@ -4105,16 +4084,18 @@ def merge_rows(
     A source with duplicate keys is rejected up front, matching
     Delta/SQL MERGE's multiple-matches error.
 
-    Cost model mirrors :func:`delete_rows`: one scan semi-joined
-    against the (broadcastable) source key set attributes matched rows
-    to files, ONLY affected files are rewritten (their unmatched rows
-    survive verbatim), the whole source lands as fresh files, and the
-    switch is ONE atomic manifest swap. Untouched files are neither
-    read beyond footers nor copied. At 100 TB: the source key set ships
-    as a broadcast semi/anti join (the plan shape used here), affected
-    ≪ total when the merge key is the layout key, and the commit is
-    O(1) metadata — a table format's MERGE snapshot, not a table
-    rewrite.
+    Every MERGE — the default upsert and any clause set — runs ONE
+    classification (:func:`_merge_clause_plan`) through the shared
+    write path (:func:`_mutate`). Cost model mirrors
+    :func:`delete_rows`: one scan of the candidate files (pruned by
+    the source key ranges) LEFT-joined against the (broadcastable)
+    source attributes changed rows to files, ONLY affected files are
+    rewritten (their unclaimed rows survive verbatim), updated images
+    and inserts land as fresh files, and the switch is ONE atomic
+    manifest swap. Untouched files are neither read beyond footers nor
+    copied. At 100 TB affected ≪ total when the merge key is the
+    layout key, and the commit is O(1) metadata — a table format's
+    MERGE snapshot, not a table rewrite.
 
     Crash windows are identical to :func:`delete_rows` (staged files
     invisible until the commit). ``retain=True`` (the default) keeps
@@ -4124,24 +4105,27 @@ def merge_rows(
     eagerly (single-writer space reclaim only).
 
     ``mode="dv"`` switches to merge-on-read (Delta DV MERGE): matched
-    target rows die by deletion vector, the source appends as fresh
-    files, and NO data file is rewritten: an update of 24 rows in a
-    16-file table costs O(matched positions + source rows) write, and
+    target rows die by deletion vector, their images and the inserts
+    append as fresh files, and NO data file is rewritten: an update of
+    24 rows in a 16-file table costs O(matched positions + source
+    rows) write, and
     the read-side tax accrues per dirty file until OPTIMIZE
     materializes the DVs (see :func:`_mutate` for the shared write
     path). ``retain`` is moot there (nothing is displaced).
 
-    **Clause surface** (Delta's full MERGE grammar; defaults reproduce
-    the plain upsert):
+    **Clause surface** (Delta's full MERGE grammar; the defaults give
+    the record-key upsert above):
 
     - ``when_matched_delete`` — ``True`` or a condition string: matched
       target rows satisfying it are DELETED. Evaluated FIRST among the
       matched clauses (the common SQL ordering ``WHEN MATCHED AND cond
       THEN DELETE`` before the update clause; the SQL dispatcher
       composes conditions to reproduce statement order either way).
-    - ``when_matched_update`` — ``"*"`` (replace the matched target row
-      with its source row, the default), a ``{col: expr}`` assignment
-      dict (SQL UPDATE pre-image semantics: every expression evaluates
+    - ``when_matched_update`` — ``"*"`` (the default: the record-key
+      upsert — the claimed target rows of a key are replaced by ONE
+      image, that key's source row, under any clause set), a
+      ``{col: expr}`` assignment dict (SQL UPDATE pre-image semantics,
+      one image per claimed target row: every expression evaluates
       against the PRE-merge row pair; reference target columns as
       ``t.col`` and source columns as ``s.col`` — unqualified names
       resolve only when unambiguous), or ``None`` (no update clause —
@@ -4167,13 +4151,10 @@ def merge_rows(
     All conditions and assignment expressions evaluate in Spark SQL on
     the ``t``/``s``-aliased join, so the clause engine stays one
     declarative plan: target LEFT JOIN broadcast(source) classifies
-    every target row into delete/update/keep, unmatched source rows
-    arrive by anti join, and the write shape is the same
-    affected-files-only rewrite (cow) or DV-plus-append (dv) the plain
-    upsert pays. At 100 TB the added cost over the upsert path is one
-    broadcast of the full source instead of its key column — merge
-    sources are batch-sized by contract (the CDC/upsert pattern); a
-    table-sized source should be a join-and-overwrite, not a MERGE.
+    every target row into delete/update/keep, and unmatched source
+    rows arrive by anti join. Merge sources are batch-sized by
+    contract (the CDC/upsert pattern); a table-sized source should be
+    a join-and-overwrite, not a MERGE.
     The broadcast hint is SIZE-GATED (:func:`_broadcast_if_small`):
     a source past 8× the session's autoBroadcastJoinThreshold drops
     the hint and the classified join degrades to a shuffle join —
@@ -4181,10 +4162,11 @@ def merge_rows(
 
     Returns ``{"rows_before", "rows_updated", "rows_deleted",
     "rows_inserted", "rows_after", "n_files_total",
-    "n_files_rewritten", "n_files_added"}`` — ``rows_updated`` counts
-    REPLACED target rows (≥ matched source keys when the target held
-    duplicates); ``rows_deleted`` counts matched-delete plus
-    not-matched-by-source-delete rows.
+    "n_files_rewritten", "n_files_added"}`` for every clause set —
+    ``rows_updated`` counts REPLACED target rows (≥ matched source
+    keys when the target held duplicates); ``rows_deleted`` counts
+    matched-delete plus not-matched-by-source-delete rows;
+    ``rows_inserted`` is the row count of the written insert files.
     """
     import pathlib
 
@@ -4200,23 +4182,13 @@ def merge_rows(
         raise ValueError(
             "when_matched_update must be '*', an assignment dict, or None"
         )
-    rich = not (
-        when_matched_update == "*"
-        and when_matched_update_condition is None
-        and when_matched_delete is None
-        and when_not_matched_insert is True
-        and when_not_matched_insert_values is None
-        and when_not_matched_by_source_delete is None
-        and when_not_matched_by_source_update is None
-    )
     vers, live = _snapshot_for_update(p)
     dv_prev = _dv_at_version(p)
     src = source.cache()
     try:
         # ONE pass over the (cached) source answers the duplicate-key
-        # gate, n_src, AND the per-key min/max ranges _merge_candidates
-        # prunes with, for the upsert and the clause engine alike
-        aggs = [F.sum("_c").alias("_n"), F.max("_c").alias("_maxdup")]
+        # gate AND the per-key min/max ranges _merge_candidates prunes with
+        aggs = [F.max("_c").alias("_maxdup")]
         for k in keys:
             aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
         ks = (
@@ -4227,7 +4199,6 @@ def merge_rows(
         )
         if (ks["_maxdup"] or 0) > 1:
             raise ValueError("merge source has duplicate record keys")
-        n_src = int(ks["_n"] or 0)
         ranges = {k: (ks[f"__lo_{k}"], ks[f"__hi_{k}"]) for k in keys}
         # source-key range pruning is sound ONLY without NOT MATCHED BY
         # SOURCE clauses (those must see every unmatched target row)
@@ -4237,48 +4208,18 @@ def merge_rows(
             or when_not_matched_by_source_update is not None
             else _merge_candidates(p, live, keys, ranges)
         )
-        stat_keys = ("rows_before", "rows_updated", "rows_inserted",
-                     "rows_after", "n_files_total", "n_files_rewritten",
-                     "n_files_added")
-        if rich:
-            return _mutate(
-                spark, p, "merge", mode, retain, vers, live, dv_prev, cand,
-                stat_keys + ("rows_deleted",),
-                *_merge_clause_plan(
-                    spark, p, src, keys, when_matched_update,
-                    when_matched_update_condition, when_matched_delete,
-                    when_not_matched_insert, when_not_matched_insert_values,
-                    when_not_matched_by_source_delete,
-                    when_not_matched_by_source_update,
-                    when_not_matched_by_source_update_condition,
-                ),
-                insert_tag="i",
-            )
-        _enforce_constraints(p, src)  # CHECK constraints gate the source
-        _reject_dropped_collisions(p, _to_physical(p, src))
-        src_keys = _broadcast_if_small(spark, src.select(*keys))
-
-        def derive(tgt, m):
-            # the whole source (updated images + inserts) lands as fresh
-            # files; CDC pre-images come from the staged artifact,
-            # post-images and inserts split the source by matched key
-            mkeys = m.select(*keys).distinct()
-            changes = [
-                (_row_images(m), "update_preimage"),
-                (src.join(mkeys, on=keys, how="left_semi"), "update_postimage"),
-                (src.join(mkeys, on=keys, how="left_anti"), "insert"),
-            ]
-            # matched SOURCE keys == distinct matched target keys (the
-            # source is duplicate-free)
-            return [(src, "i")], changes, {"rows_inserted": n_src - mkeys.count()}
-
         return _mutate(
-            spark, p, "merge", mode, retain, vers, live, dv_prev, cand, stat_keys,
-            changed=lambda tgt: tgt.join(src_keys, on=keys, how="left_semi")
-            .withColumn("__action", F.lit("U")),
-            rewrite=lambda tgt, uris: tgt.filter(F.col("_file").isin(uris))
-            .join(src_keys, on=keys, how="left_anti"),
-            derive=derive,
+            spark, p, "merge", mode, retain, vers, live, dv_prev, cand,
+            ("rows_before", "rows_updated", "rows_deleted", "rows_inserted",
+             "rows_after", "n_files_total", "n_files_rewritten", "n_files_added"),
+            *_merge_clause_plan(
+                spark, p, src, keys, when_matched_update,
+                when_matched_update_condition, when_matched_delete,
+                when_not_matched_insert, when_not_matched_insert_values,
+                when_not_matched_by_source_delete,
+                when_not_matched_by_source_update,
+                when_not_matched_by_source_update_condition,
+            ),
         )
     finally:
         src.unpersist()
@@ -4566,7 +4507,7 @@ def update_rows(
         images = _apply_set(pre, only_matched=True)
         _enforce_constraints(p, images)
         appends = [(images, "u")] if mode == "dv" else []
-        return appends, [(pre, "update_preimage"), (images, "update_postimage")], {}
+        return appends, [(pre, "update_preimage"), (images, "update_postimage")]
 
     return _mutate(
         spark, p, "update", mode, retain, vers, live, _dv_at_version(p),

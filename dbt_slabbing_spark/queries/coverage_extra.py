@@ -3544,6 +3544,7 @@ def layout_cdc_commit_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     one O(table) plan; see tools/cdc_ab_bench.py for the measured
     30x at sf10)."""
     import pathlib
+    import re
     import shutil
     import tempfile
 
@@ -3596,14 +3597,17 @@ def layout_cdc_commit_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             "Except"
             not in feed._jdf.queryExecution().analyzed().toString()
         )
-        # scan-width spy: only change-data + appended files, no table file
+        # scan-width spy: only change-data + appended files (an append's
+        # files, a MERGE's `-i` insert files), no table file
         scanned = {
             r[0].rsplit("/", 1)[-1]
             for r in feed.select(F.input_file_name()).distinct().collect()
             if r[0]
         }
         only_change_data = bool(scanned) and all(
-            n.startswith(("cdc-", "append-")) for n in scanned
+            n.startswith(("cdc-", "append-"))
+            or re.fullmatch(r"part-merge-[0-9a-f]+-i\d+\.parquet", n)
+            for n in scanned
         )
         ins = feed.filter(F.col("_change_type") == "insert")
         dele = feed.filter(F.col("_change_type") == "delete")

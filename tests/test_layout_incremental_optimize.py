@@ -59,6 +59,7 @@ def test_incremental_rewrites_only_new_files(spark, clustered):
             "event_id bigint, user_id bigint, event_type string, value double",
         )
         append_files(spark, target, late.coalesce(1))
+    v_before = _doc(target)["version"]
     st = compact_incremental(spark, target, target_file_bytes=1 << 30)
     assert st["n_files_rewritten"] == 3
     # the clustered bulk is BYTE-untouched (same inode + mtime)
@@ -68,6 +69,10 @@ def test_incremental_rewrites_only_new_files(spark, clustered):
     assert set(doc["clustered"]["files"]) == set(doc["files"])
     got = {r["event_id"] for r in read_table(spark, target).collect()}
     assert got == set(rows) | {-i for i in range(1, 7)}
+    # the rewritten files stay on disk: the pre-compaction snapshot is
+    # still time-travel-readable until vacuum reclaims it
+    old = {r["event_id"] for r in read_table(spark, target, version=v_before).collect()}
+    assert old == got
 
 
 def test_incremental_noop_below_min_files(spark, clustered):

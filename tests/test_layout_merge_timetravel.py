@@ -97,17 +97,24 @@ def test_merge_rows_rejects_duplicate_source_keys(spark, tmp_path):
         merge_rows(spark, target, dup, on="event_id")
 
 
-def test_merge_rows_replaces_all_duplicate_target_rows(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+@pytest.mark.parametrize(
+    "clauses",
+    [{}, {"when_matched_update_condition": "s.v IS NOT NULL"}],
+    ids=["upsert", "conditioned"],
+)
+def test_merge_rows_replaces_all_duplicate_target_rows(spark, tmp_path, clauses, mode):
     """Hudi record-key semantics: a target holding N rows for a key
     ends with exactly ONE row (the source row) after the merge, and
-    rows_updated counts all N replaced rows."""
+    rows_updated counts all N replaced rows — `SET *` means the same
+    under any clause set and either write mode."""
     target = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "c")], "k bigint, v string"
     )
     base.repartition(2).write.parquet(target)
     src = spark.createDataFrame([(1, "new")], "k bigint, v string")
-    stats = merge_rows(spark, target, src, on="k")
+    stats = merge_rows(spark, target, src, on="k", mode=mode, **clauses)
     assert stats["rows_updated"] == 2
     assert stats["rows_inserted"] == 0
     got = sorted(

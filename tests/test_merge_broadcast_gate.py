@@ -1,6 +1,6 @@
 """Round-14 task #4: MERGE source broadcast size gate.
 
-The MERGE clause engine (and the plain-upsert key projections) hinted
+The MERGE clause engine, which classifies every MERGE, hinted
 `F.broadcast(source)` unconditionally — correct for the documented
 batch-sized contract, a driver OOM for an oversized CDC backfill
 batch. `_broadcast_if_small` keeps the broadcast fast path under 8×
@@ -69,7 +69,7 @@ def test_oversized_source_degrades_to_shuffle_join(
         src,
         on="k",
         when_matched_update="*",
-        when_matched_update_condition="s.v > t.v",  # rich → clause engine
+        when_matched_update_condition="s.v > t.v",  # k=0 stays unclaimed
     )
     assert st["rows_updated"] == 99  # k=0 has s.v == t.v == 0
     assert st["rows_inserted"] == 1900

@@ -30,7 +30,8 @@ BASE_KEYS = {"rows_before", "rows_after", "n_files_total", "n_files_rewritten"}
 KEYS = {
     "delete": BASE_KEYS | {"rows_deleted"},
     "update": BASE_KEYS | {"rows_updated", "n_files_added"},
-    "merge": BASE_KEYS | {"rows_updated", "rows_inserted", "n_files_added"},
+    "merge": BASE_KEYS
+    | {"rows_updated", "rows_deleted", "rows_inserted", "n_files_added"},
     "clause_merge": BASE_KEYS
     | {"rows_updated", "rows_deleted", "rows_inserted", "n_files_added"},
 }

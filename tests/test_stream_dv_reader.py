@@ -199,3 +199,33 @@ def test_replicate_changes_end_to_end(spark, tmp_path):
     # idle
     st, v2 = replicate_changes(spark, up, down, ["k"], ver)
     assert st is None and v2 == ver
+
+
+def test_replicate_changes_releases_cached_frames_on_failure(
+    spark, tmp_path, monkeypatch
+):
+    """A failing apply still unpersists the net-effect frames the
+    replication step cached."""
+    from dbt_slabbing_spark.operators import layout
+    from dbt_slabbing_spark.operators.layout import clone_table, replicate_changes
+
+    up, down = str(tmp_path / "up"), str(tmp_path / "down")
+    df = spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")
+    )
+    append_files(spark, up, df.coalesce(2))
+    clone_table(up, down)
+    _, v0 = follow_changes(spark, up, None)
+    delete_rows(spark, up, "k < 3", mode="dv")
+    append_files(
+        spark, up, spark.createDataFrame([(200, 1.5)], "k long, v double")
+    )
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected: merge failed")
+
+    monkeypatch.setattr(layout, "merge_rows", boom)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="injected"):
+        replicate_changes(spark, up, down, ["k"], v0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
