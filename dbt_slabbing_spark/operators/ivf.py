@@ -72,8 +72,10 @@ def _cell_distances(vec_col: str, centroids: list[tuple[int, list[float]]]):
 
 
 def _cell_assignment(vectors: DataFrame, centroids: list[tuple[int, list[float]]], vec_col: str):
-    """argmin-distance cell id (ties → lowest cell id, deterministic)."""
-    return F.element_at(F.array_sort(_cell_distances(vec_col, centroids)), 1)["cell"]
+    """argmin-distance cell id (ties → lowest cell id, deterministic);
+    NULL without centroids (``try_element_at``: element 1 of an empty
+    array is NULL instead of an ANSI-mode error)."""
+    return F.try_element_at(F.array_sort(_cell_distances(vec_col, centroids)), F.lit(1))["cell"]
 
 
 def ivf_train_centroids(

@@ -118,13 +118,14 @@ def compact_parquet_dir(
     # LIVE files are sized and read, so orphans from an interrupted
     # delete can't be resurrected; the rewritten directory is plain
     # again (the stale manifest leaves with the trash dir).
-    if (p / _MANIFEST).exists():
-        live = ensure_manifest(p)
-        total = sum((p / n).stat().st_size for n in live)
-        # mergeSchema when files disagree on columns: a rewrite that
-        # sampled an old footer would silently DROP columns newer
-        # files carry (same hazard _schema_heterogeneous documents)
-        df = _read_parquet(spark, p, live, _schema_heterogeneous(p, live))
+    doc = _load(p)
+    if doc:
+        total = sum((p / n).stat().st_size for n in doc["files"])
+        # the snapshot as read_table returns it: DV-deleted rows stay
+        # dead, columns carry their logical names, and files that
+        # disagree on columns merge (a plain directory has no manifest
+        # left to apply any of that at read time)
+        df = _read_version(spark, p, doc)
     else:
         total = sum(f.stat().st_size for f in p.glob("*.parquet"))
         df = spark.read.parquet(str(p))
@@ -257,16 +258,51 @@ class ManifestConflictError(RuntimeError):
     retry loop."""
 
 
-def _read_snapshot(p) -> tuple[int, list[str]]:
-    """(version, live files) of the current manifest; (0, []) when the
-    table has no manifest yet (version 0 = "expect to create")."""
+def _load(p, required: bool = False) -> dict:
+    """The parsed manifest of table directory ``p``; ``{}`` when the
+    table has none (``required=True`` raises FileNotFoundError
+    instead). The one reader of ``_manifest.json``: a public
+    operation loads it once (once per OCC attempt) and passes the
+    document down, so every metadata key it uses — files, DVs, column
+    map, constraints, stats, history — comes from ONE snapshot, and a
+    commit landing mid-operation can never mix two versions into one
+    result. The document is read-only; code that builds a replacement
+    value copies it first."""
     import json
 
-    mf = p / _MANIFEST
-    if not mf.exists():
+    try:
+        return json.loads((p / _MANIFEST).read_text())
+    except FileNotFoundError:
+        if required:
+            raise
+        return {}
+
+
+def _snapshot(doc: dict) -> tuple[int, list[str]]:
+    """(version, live files) of a parsed manifest; (0, []) for a table
+    without one (version 0 = "expect to create")."""
+    if not doc:
         return 0, []
-    doc = json.loads(mf.read_text())
     return int(doc.get("version", 1)), sorted(doc["files"])
+
+
+def _commit_rebasing(p, doc: dict, attempt, what: str):
+    """Commit a BLIND write — one that removes nothing, so a concurrent
+    commit never invalidates it (Delta's append-only conflict
+    resolution). ``attempt(doc)`` runs the operation's guards against
+    ``doc`` and commits; on :class:`ManifestConflictError` it runs again
+    against a freshly loaded document, up to 10 tries. No data work
+    repeats, only the guards and the metadata commit. Returns what the
+    successful attempt returns."""
+    for _ in range(10):
+        try:
+            return attempt(doc)
+        except ManifestConflictError:
+            doc = _load(p)
+    raise ManifestConflictError(
+        f"{what} could not commit after 10 rebases (pathological commit "
+        "contention); staged files are orphans for vacuum"
+    )
 
 
 def _manifest_lock(p, timeout: float = 10.0):
@@ -386,10 +422,11 @@ def _commit_manifest(
     live carry FORWARD from the previous snapshot automatically (data
     files are immutable, so a carried entry can never go stale), and
     entries for files leaving the live list drop out — the manifest's
-    stats never grow past O(live files). Readers
-    (:func:`file_column_stats`) consult these before ever touching a
-    data-file footer; the footer+sidecar path remains only as the
-    fallback for pre-r11 tables and commits that didn't pass stats.
+    stats never grow past O(live files). Readers take them from the
+    document their operation already parsed (:func:`_load`; no extra
+    manifest read) before ever touching a data-file footer; the
+    footer+sidecar path of :func:`file_column_stats` remains only as
+    the fallback for pre-r11 tables and commits that didn't pass stats.
 
     ``replace`` maps keys of :data:`_CARRIED` to their new value; every
     carried key not in it keeps the previous snapshot's value. An empty
@@ -444,12 +481,11 @@ def _commit_manifest(
     unknown = set(replace or ()) - set(_CARRIED)
     if unknown:
         raise ValueError(f"not a carried manifest key: {sorted(unknown)}")
-    mf = p / _MANIFEST
     fd = _manifest_lock(p)
     try:
-        prev, cur, history = {}, 0, []
-        if mf.exists():
-            prev = json.loads(mf.read_text())
+        cur, history = 0, []
+        prev = _load(p)  # under the lock: the version the check compares
+        if prev:
             cur = int(prev.get("version", 1))
             history = prev.get("history", [])
             # DELTA-encoded history entry (r9): store what the NEW
@@ -545,7 +581,7 @@ def _commit_manifest(
                 doc[key] = val
         tmp = p / (_MANIFEST + ".tmp")
         tmp.write_text(json.dumps(doc))
-        os.replace(str(tmp), str(mf))
+        os.replace(str(tmp), str(p / _MANIFEST))
         return cur + 1
     finally:
         _manifest_unlock(p, fd)
@@ -560,33 +596,32 @@ def manifest_versions(path) -> list[int]:
     mutable tables; its sibling ``sinks.py::write_snapshot`` publishes
     FULL-TABLE ``v=N`` versions for derived tables recomputed whole.
     One reader contract, two write granularities; they do not nest."""
-    import json
     import pathlib
 
-    mf = pathlib.Path(path) / _MANIFEST
-    doc = json.loads(mf.read_text())
+    return _versions(_load(pathlib.Path(path), required=True))
+
+
+def _versions(doc: dict) -> list[int]:
+    """The snapshot versions a parsed manifest can serve, oldest first."""
     return [int(h["version"]) for h in doc.get("history", [])] + [
         int(doc.get("version", 1))
     ]
 
 
-def _files_at_version(p, version: int) -> list[str]:
+def _files_at_version(doc: dict, version: int) -> list[str]:
     """File list of historical snapshot ``version``, reconstructed by
     REVERSE-REPLAYING the delta-encoded history from the live list
     (entry for v records the v → v+1 transition, so
     F_v = (F_{v+1} − added_v) ∪ removed_v). Pre-r9 full-list entries
     (``files``) short-circuit the walk — mixed-format manifests from
     tables created before the delta encoding stay readable."""
-    import json
-
-    doc = json.loads((p / _MANIFEST).read_text())
     cur = int(doc.get("version", 1))
     if version == cur:
         return sorted(doc["files"])
     hist = {int(h["version"]): h for h in doc.get("history", [])}
     if version not in hist:
         raise ValueError(
-            f"version {version} not in manifest (have {manifest_versions(p)})"
+            f"version {version} not in manifest (have {_versions(doc)})"
         )
     files = set(doc["files"])
     for v in range(cur - 1, version - 1, -1):
@@ -603,30 +638,23 @@ def _files_at_version(p, version: int) -> list[str]:
     return sorted(files)
 
 
-def _dv_at_version(p, version: int | None = None) -> dict:
+def _dv_at_version(doc: dict, version: int | None = None) -> dict:
     """Deletion-vector mapping (``{data_file: [dv_file, ...]}``) of a
     snapshot: the live manifest's ``dv`` key for the current version,
     else the full DV snapshot each history entry records for its
     displaced version (see :func:`_commit_manifest`). Pre-DV manifests
-    and entries read as ``{}``."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return {}
-    doc = json.loads(mf.read_text())
-    cur = int(doc.get("version", 1))
-    if version is None or version == cur:
+    and entries, and a table without a manifest, read as ``{}``."""
+    if not doc or version is None or version == int(doc.get("version", 1)):
         return doc.get("dv", {})
     for h in doc.get("history", []):
         if int(h["version"]) == version:
             return h.get("dv", {})
     raise ValueError(
-        f"version {version} not in manifest (have {manifest_versions(p)})"
+        f"version {version} not in manifest (have {_versions(doc)})"
     )
 
 
-def _schema_heterogeneous(p, live: list[str]) -> bool:
+def _schema_heterogeneous(doc: dict, live: list[str]) -> bool:
     """True when the snapshot's live files may DISAGREE on physical
     columns — the signal that a scan MUST union every file footer
     (parquet ``mergeSchema``) instead of trusting Spark's single
@@ -640,19 +668,13 @@ def _schema_heterogeneous(p, live: list[str]) -> bool:
 
     Metadata-only: per-file column sets come from the manifest's
     write-time stats (every engine-written file carries a stats record
-    keyed by EVERY column), so the check costs one JSON read the
-    snapshot scan already pays — no footer I/O. A live file WITHOUT a
+    keyed by EVERY column) in the snapshot's parsed document — no
+    footer I/O. A live file WITHOUT a
     stats record (pre-stats table, externally dropped-in file) is
     treated as disagreeing: the safe answer is the merged read."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists() or len(live) <= 1:
+    if not doc or len(live) <= 1:
         return False
-    try:
-        stats = json.loads(mf.read_text()).get("stats", {})
-    except (OSError, ValueError):
-        return True
+    stats = doc.get("stats", {})
     first = None
     for n in live:
         rec = stats.get(n)
@@ -753,6 +775,7 @@ def _scan_with_dv(
     spark,
     p,
     live: list[str],
+    doc: dict,
     dv_map: dict,
     merge_schema: bool = True,
     keep_file_col: bool = False,
@@ -774,7 +797,9 @@ def _scan_with_dv(
     (equivalent to ``input_file_name()``, which cannot be used above a
     join) for mutation attribution; ``keep_pos_col=True`` keeps
     ``__dv_name``/``__dv_pos`` (file NAME + row position) so a DELETE
-    can mint new DV entries for the rows it matches.
+    can mint new DV entries for the rows it matches. ``doc`` is the
+    table's parsed manifest: its column mapping names the columns, its
+    stats decide the merged read.
 
     Building the frame runs no Spark job when the footers record the
     scan schema (:func:`_read_parquet`) and the dead set is within
@@ -786,20 +811,17 @@ def _scan_with_dv(
     # :func:`_schema_heterogeneous` for the silent-NULL hazard this
     # closes. Homogeneous tables (the overwhelming norm) keep the
     # cheap single-footer schema.
-    if not merge_schema and _schema_heterogeneous(p, live):
+    if not merge_schema and _schema_heterogeneous(doc, live):
         merge_schema = True
     live_set = set(live)
     dv_files = sorted(
         {d for n, lst in dv_map.items() if n in live_set for d in lst}
     )
-    cmap = _column_map(p)
-    dropped = _dropped_cols(p)
-    added = _added_cols(p)
     df = _read_parquet(spark, p, live, merge_schema)
     if not dv_files and not keep_pos_col:
         if keep_file_col:
             df = df.withColumn("_file", F.input_file_name())
-        return _to_logical(df, cmap, dropped, added)
+        return _to_logical(df, doc)
     # every sub-scan below reads with the whole scan's schema: no second
     # inference, and on a schema-evolved table a column that only the
     # OTHER subset carries reads as a typed NULL
@@ -822,7 +844,7 @@ def _scan_with_dv(
         + (["__dv_name", "__dv_pos"] if keep_pos_col else [])
     )
     if not dv_files:
-        return _to_logical(_scan(live).select(*keep), cmap, dropped, added)
+        return _to_logical(_scan(live).select(*keep), doc)
     # the anti-join is paid ONLY by files that actually carry a DV —
     # clean files scan plain, exactly Delta's per-file DV application;
     # for a table where one file of hundreds holds deletes, the read
@@ -880,14 +902,14 @@ def _scan_with_dv(
     out = parts[0].select(*keep)
     for frame in parts[1:]:
         out = out.unionByName(frame.select(*keep))
-    return _to_logical(out, cmap, dropped, added)
+    return _to_logical(out, doc)
 
 
-def _live_row_count(p, live: list[str], dv_map: dict, spark=None) -> int:
+def _live_row_count(p, doc: dict, live: list[str], dv_map: dict, spark=None) -> int:
     """Live row count of a snapshot WITHOUT a Spark job (r15; guide §7
     driver cost — every mutation paid a full-table ``count()`` for its
-    ``rows_before``): base rows from the manifest's per-file ``rows``
-    record (footer-read once per file at commit time; pyarrow footer
+    ``rows_before``): base rows from the per-file ``rows`` record of
+    the parsed manifest ``doc`` (footer-read once per file at commit time; pyarrow footer
     fallback for files predating the record), minus the snapshot's
     distinct dead (file, pos) pairs, read on the driver by
     :func:`_dv_dead_set` under the read path's bound,
@@ -897,17 +919,9 @@ def _live_row_count(p, live: list[str], dv_map: dict, spark=None) -> int:
     Spark count instead when ``spark`` is given, and raise without it:
     a file with neither a ``rows`` record nor a readable footer, and a
     dead set past the cap."""
-    import json
-
     import pyarrow.parquet as pq
 
-    rows_rec: dict = {}
-    mf = p / _MANIFEST
-    if mf.exists():
-        try:
-            rows_rec = json.loads(mf.read_text()).get("rows", {})
-        except (OSError, ValueError):
-            rows_rec = {}
+    rows_rec = doc.get("rows", {})
     base = 0
     for n in live:
         r = rows_rec.get(n)
@@ -918,7 +932,7 @@ def _live_row_count(p, live: list[str], dv_map: dict, spark=None) -> int:
                 if spark is None:
                     raise
                 _log.debug("Spark counts %s: no row count for %s", p, n)
-                return _scan_with_dv(spark, p, live, dv_map).count()
+                return _scan_with_dv(spark, p, live, doc, dv_map).count()
         base += int(r)
     live_set = set(live)
     dv_files = sorted({d for n, lst in dv_map.items() if n in live_set for d in lst})
@@ -932,20 +946,24 @@ def _live_row_count(p, live: list[str], dv_map: dict, spark=None) -> int:
             f"more than {_DV_INLINE_CAP} dead positions: pass spark to count them"
         )
     _log.debug("Spark counts %s: more than %d dead positions", p, _DV_INLINE_CAP)
-    return _scan_with_dv(spark, p, live, dv_map).count()
+    return _scan_with_dv(spark, p, live, doc, dv_map).count()
 
 
 def ensure_manifest(path) -> list[str]:
     """Return the table's live file list, creating ``_manifest.json``
     from the directory contents on first touch (adoption of a plain
     parquet directory into the manifest contract)."""
-    import json
     import pathlib
 
-    p = pathlib.Path(path)
-    mf = p / _MANIFEST
-    if mf.exists():
-        return sorted(json.loads(mf.read_text())["files"])
+    return sorted(_adopt(pathlib.Path(path))["files"])
+
+
+def _adopt(p) -> dict:
+    """The parsed manifest of ``p``, committing the directory's parquet
+    files as version 1 first when the table has none."""
+    doc = _load(p)
+    if doc:
+        return doc
     files = sorted(f.name for f in p.glob("*.parquet"))
     try:
         # adoption = this table's first commit: collect stats for the
@@ -956,23 +974,20 @@ def ensure_manifest(path) -> list[str]:
             p, files, expected_version=0, stats=_stats_for_added(p, files)
         )
     except ManifestConflictError:
-        # a concurrent adopter created version 1 first — same directory
-        # listing; read theirs
-        return _read_snapshot(p)[1]
-    return files
+        pass  # a concurrent adopter created version 1 first: read theirs
+    return _load(p)
 
 
-def _snapshot_for_update(p) -> tuple[int, list[str]]:
-    """(version, live files) a mutation plans against — adopting a
+def _snapshot_for_update(p) -> dict:
+    """The parsed manifest a mutation plans against — adopting a
     plain parquet directory into the manifest contract on first touch
     (creating the directory itself for a brand-new table — an append
     against a table that doesn't exist yet creates it, the INSERT-
     creates-table convenience every table format ships).
-    The returned version is the OCC precondition for the mutation's
+    Its version is the OCC precondition for the mutation's
     eventual :func:`_commit_manifest`."""
     p.mkdir(parents=True, exist_ok=True)
-    ensure_manifest(p)
-    return _read_snapshot(p)
+    return _adopt(p)
 
 
 _STATS = "_stats.json"
@@ -1031,8 +1046,8 @@ def file_column_stats(path, files: list[str], col: str) -> dict:
 
     Resolution order (r11): (1) the manifest commit's ``stats`` record
     — written by every mutation at write time (:func:`_commit_manifest`
-    ``stats=``), read in the ONE metadata round trip the snapshot read
-    already pays, no data-file I/O at all — this is the Iceberg/Delta
+    ``stats=``), taken from the parsed manifest, no data-file I/O at
+    all — this is the Iceberg/Delta
     stats-manifest read path; (2) for files the manifest doesn't cover
     (pre-r11 tables, externally dropped-in files), the file's own
     FOOTER (pyarrow, driver-side), cached in a ``_stats.json`` sidecar.
@@ -1043,19 +1058,17 @@ def file_column_stats(path, files: list[str], col: str) -> dict:
     as "may contain anything".
 
     Returns ``{file_name: (min, max) | None}``."""
-    import json
     import pathlib
 
-    import pyarrow.parquet as pq
-
     p = pathlib.Path(str(path))
-    manifest_stats: dict = {}
-    mf = p / _MANIFEST
-    if mf.exists():
-        try:
-            manifest_stats = json.loads(mf.read_text()).get("stats", {})
-        except (OSError, ValueError):
-            manifest_stats = {}
+    return _file_stats(p, _load(p), files, col)
+
+
+def _file_stats(p, doc: dict, files: list[str], col: str) -> dict:
+    """:func:`file_column_stats` against the parsed manifest ``doc``."""
+    import json
+
+    manifest_stats = doc.get("stats", {})
     sidecar = p / _STATS
     cache: dict = {}
     if sidecar.exists():
@@ -1075,37 +1088,11 @@ def file_column_stats(path, files: list[str], col: str) -> dict:
         if name in col_cache:
             out[name] = tuple(col_cache[name]) if col_cache[name] else None
             continue
-        entry = None
-        try:
-            md = pq.ParquetFile(str(p / name)).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if col in idx:
-                lo = hi = None
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[col]).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if ok and lo is not None:
-                    entry = (lo, hi)
-        except Exception:
-            # any footer failure — IO, a corrupt footer (pyarrow raises
-            # ArrowInvalid, a ValueError subclass), an unreadable stats
-            # encoding — maps to "no stats", never a crashed read
-            entry = None
-        if entry is not None and not all(
-            isinstance(v, (int, float, str, bool)) for v in entry
-        ):
-            # non-JSON-native footer stats (timestamp/date/decimal/
-            # binary min-max objects) can't round-trip the sidecar and
-            # can't compare against the caller's [lo, hi] anyway: keep
-            # the file conservatively ("may contain anything")
-            entry = None
-        out[name] = entry
-        col_cache[name] = list(entry) if entry else None
+        # the footer, under the write path's rules: a footer failure, a
+        # missing column or non-JSON-native min/max maps to "no stats"
+        entry = _footer_all_column_stats(p / name).get(col)
+        out[name] = tuple(entry) if entry else None
+        col_cache[name] = entry
         dirty = True
     if dirty:
         try:  # best-effort cache: losing it only costs a re-read
@@ -1132,9 +1119,13 @@ def prune_file_list(path, files: list[str], col: str, lo, hi) -> list[str]:
     through the manifest's column map first."""
     import pathlib
 
-    stats = file_column_stats(
-        path, files, _phys_col(pathlib.Path(path), col)
-    )
+    p = pathlib.Path(str(path))
+    return _prune_files(p, _load(p), files, col, lo, hi)
+
+
+def _prune_files(p, doc: dict, files: list[str], col: str, lo, hi) -> list[str]:
+    """:func:`prune_file_list` against the parsed manifest ``doc``."""
+    stats = _file_stats(p, doc, files, _phys_col(doc, col))
     keep = []
     for name in files:
         st = stats.get(name)
@@ -1227,7 +1218,7 @@ def _predicate_conjuncts(pred: str) -> list[tuple[str, str, object]] | None:
     return out
 
 
-def _candidate_files(p, files: list[str], predicate) -> list[str]:
+def _candidate_files(p, doc: dict, files: list[str], predicate) -> list[str]:
     """Files that MAY hold rows satisfying ``predicate`` — the
     mutation-scan twin of :func:`prune_file_list` (Delta's DELETE/
     UPDATE/MERGE file pruning): a file is skipped only when a derived
@@ -1245,7 +1236,7 @@ def _candidate_files(p, files: list[str], predicate) -> list[str]:
         return list(files)
     keep = list(files)
     for col, op, lit in conjs:
-        stats = file_column_stats(p, keep, _phys_col(p, col))
+        stats = _file_stats(p, doc, keep, _phys_col(doc, col))
         nxt = []
         for name in keep:
             st = stats.get(name)
@@ -1272,13 +1263,13 @@ def _candidate_files(p, files: list[str], predicate) -> list[str]:
     # keys — a point DELETE on a bloom-indexed key scans O(probe hits)
     for col, op, lit in conjs:
         if op == "=":
-            keep = prune_files_bloom(None, p, keep, col, lit)
+            keep = _bloom_prune(p, doc, keep, col, lit)
     # schema-evolution guard: a pruned subset must still expose every
     # column the full live set does, or a predicate referencing a
     # column that lives only in pruned-away files fails to resolve —
     # in that case prune nothing (sound, just not faster)
     if keep and len(keep) < len(files):
-        if _live_physical_columns(p, keep) != _live_physical_columns(p, files):
+        if _live_physical_columns(p, doc, keep) != _live_physical_columns(p, doc, files):
             return list(files)
     return keep
 
@@ -1471,18 +1462,22 @@ def create_bloom_index(
     if m_bits % 8 or m_bits <= 0:
         raise ValueError("m_bits must be a positive multiple of 8")
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
+    doc = _snapshot_for_update(p)
+    live = _snapshot(doc)[1]
 
-    doc = json.loads((p / _MANIFEST).read_text())
+    def registry(doc: dict) -> dict:
+        cfg = dict(doc.get("bloom_cfg", {}))
+        if col in cfg and (cfg[col]["m"] != m_bits or cfg[col]["k"] != k):
+            raise ValueError(
+                f"bloom index on {col!r} already registered with "
+                f"{cfg[col]} — drop/recreate the table index to resize"
+            )
+        cfg[col] = {"m": m_bits, "k": k}
+        return cfg
+
+    registry(doc)  # a resize is refused before the build
     have = set(_bloom_sidecar(p).get(col, {}))
-    cfg = dict(doc.get("bloom_cfg", {}))
-    if col in cfg and (cfg[col]["m"] != m_bits or cfg[col]["k"] != k):
-        raise ValueError(
-            f"bloom index on {col!r} already registered with "
-            f"{cfg[col]} — drop/recreate the table index to resize"
-        )
     missing = [n for n in live if n not in have]
-    cfg[col] = {"m": m_bits, "k": k}
     entries: dict[str, str] = {}
     if missing:
         scan = (
@@ -1490,7 +1485,7 @@ def create_bloom_index(
             .select(
                 F.col("_metadata.file_name").alias("file"),
                 # a renamed col translates to its frozen physical name
-                F.col(_phys_col(p, col)).alias("v"),
+                F.col(_phys_col(doc, col)).alias("v"),
             )
             .filter(F.col("v").isNotNull())
         )
@@ -1541,28 +1536,24 @@ def create_bloom_index(
         os.replace(str(tmp), str(p / _BLOOM))
     finally:
         _manifest_unlock(p, fd)
-    for _ in range(10):
-        try:
-            version = _commit_manifest(
-                p, live, expected_version=vers,
-                cdc={"type": "noop", "op": "CREATE INDEX"},
-                replace={"bloom_cfg": cfg},
-            )
-            break
-        except ManifestConflictError:
-            # index build removes nothing: rebase onto the new snapshot
-            # (concurrently added files stay conservative until the
-            # next refresh)
-            vers, live = _read_snapshot(p)
-    else:
-        raise ManifestConflictError(
-            "bloom index could not commit after 10 rebases"
+
+    def attempt(doc: dict) -> dict:
+        # index build removes nothing: a rebase re-registers onto the
+        # new snapshot (concurrently added files stay conservative
+        # until the next refresh)
+        vers, live = _snapshot(doc)
+        version = _commit_manifest(
+            p, live, expected_version=vers,
+            cdc={"type": "noop", "op": "CREATE INDEX"},
+            replace={"bloom_cfg": registry(doc)},
         )
-    return {
-        "n_files_indexed": len(missing),
-        "n_files_total": len(live),
-        "version": version,
-    }
+        return {
+            "n_files_indexed": len(missing),
+            "n_files_total": len(live),
+            "version": version,
+        }
+
+    return _commit_rebasing(p, doc, attempt, "bloom index")
 
 
 def prune_files_bloom(spark, path, files: list[str], col: str, value) -> list[str]:
@@ -1574,14 +1565,14 @@ def prune_files_bloom(spark, path, files: list[str], col: str, value) -> list[st
     the build side's JVM ``xxhash64`` is test-pinned), so a point
     lookup decides its file list in microseconds with no Spark job.
     ``spark`` is unused (kept for API stability)."""
-    import json
     import pathlib
 
     p = pathlib.Path(path)
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return files
-    doc = json.loads(mf.read_text())
+    return _bloom_prune(p, _load(p), files, col, value)
+
+
+def _bloom_prune(p, doc: dict, files: list[str], col: str, value) -> list[str]:
+    """:func:`prune_files_bloom` against the parsed manifest ``doc``."""
     cfg = doc.get("bloom_cfg", {}).get(col)
     entries = _bloom_sidecar(p).get(col, {})
     if not cfg or not entries:
@@ -1605,15 +1596,16 @@ def _parse_ts(ts) -> float:
     return datetime.fromisoformat(str(ts)).timestamp()
 
 
-def _version_at_timestamp(p, ts) -> int:
-    """Latest snapshot whose commit wall time is <= ``ts`` — Delta's
+def _version_at_timestamp(doc: dict, ts) -> int:
+    """Latest snapshot of the parsed manifest ``doc`` whose commit wall
+    time is <= ``ts`` — Delta's
     ``TIMESTAMP AS OF`` resolution. Versions without a recorded ts
     (pre-r13 commits) are skipped; a timestamp before every recorded
     commit raises (like Delta's earliest-version error)."""
     target = _parse_ts(ts)
-    ts_map = _version_timestamps(p)
+    ts_map = _version_timestamps(doc)
     eligible = [
-        v for v in manifest_versions(p)
+        v for v in _versions(doc)
         if ts_map.get(v) is not None and ts_map[v] <= target
     ]
     if not eligible:
@@ -1674,74 +1666,21 @@ def read_table(
     ``timestamp=`` (epoch seconds or ISO-8601 string) is ``TIMESTAMP
     AS OF``: resolves to the latest snapshot committed at or before
     that wall time (:func:`_version_at_timestamp`) and reads it like
-    ``version=``. Mutually exclusive with ``version``."""
+    ``version=``. Mutually exclusive with ``version``.
+
+    The file list, deletion vectors, column mapping and stats all come
+    from ONE manifest read, so a commit landing while the frame is
+    built cannot mix two snapshots into it."""
     import pathlib
 
+    p = pathlib.Path(path)
+    doc = _load(p)
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version= or timestamp=, not both")
-        version = _version_at_timestamp(pathlib.Path(path), timestamp)
-
-    p = pathlib.Path(path)
-    if (p / _MANIFEST).exists():
-        live = (
-            _files_at_version(p, version)
-            if version is not None
-            else ensure_manifest(p)
-        )
-        # schema-evolved snapshots must read merged regardless of the
-        # caller's flag — see _schema_heterogeneous (round-13 silent-
-        # NULL hazard); _scan_with_dv applies the same upgrade, this
-        # keeps the all-pruned limit(0) path below consistent with it
-        if not merge_schema and _schema_heterogeneous(p, live):
-            merge_schema = True
-        dv_map = _dv_at_version(p, version)
-        dv_needed = sorted(
-            {d for n, lst in dv_map.items() if n in set(live) for d in lst}
-        )
-        missing = [
-            n for n in list(live) + dv_needed if not (p / n).exists()
-        ]
-        if missing:
-            raise FileNotFoundError(
-                f"snapshot {version} references vacuumed files: {missing}"
-            )
-        full = live
-        if prune is not None and live:
-            specs = (
-                [prune]
-                if prune and isinstance(prune[0], str)
-                else [tuple(s) for s in prune]
-            )
-            for spec in specs:
-                live = prune_file_list(p, live, *spec)
-        if point is not None and live:
-            pspecs = (
-                [point]
-                if point and isinstance(point[0], str)
-                else [tuple(s) for s in point]
-            )
-            for col, value in pspecs:
-                live = prune_files_bloom(spark, p, live, col, value)
-        if not live and full:
-            # every file provably irrelevant: empty frame over ALL
-            # snapshot files + limit(0) — metadata-cheap (no tasks
-            # scan data) but, unlike schema-from-one-file, keeps the
-            # MERGED schema under merge_schema=True so columns added
-            # by later files still bind downstream (ADVICE r10)
-            return _to_logical(
-                _read_parquet(spark, p, full, merge_schema).limit(0),
-                _column_map(p),
-                _dropped_cols(p),
-                _added_cols(p),
-            )
-        # deletion vectors of THIS snapshot (if any) drop their dead
-        # positions inside the scan — prune-kept files with DVs still
-        # read correctly because pruning is a superset guarantee and
-        # DV'd rows are removed here, after file skipping
-        return _scan_with_dv(
-            spark, p, live, dv_map, merge_schema=merge_schema
-        )
+        version = _version_at_timestamp(doc, timestamp)
+    if doc:
+        return _read_version(spark, p, doc, version, merge_schema, prune, point)
     if version is not None:
         raise ValueError("version= requires a manifest table")
     if prune is not None:
@@ -1753,8 +1692,63 @@ def read_table(
     ).parquet(str(p))
 
 
+def _read_version(
+    spark, p, doc: dict, version: int | None = None, merge_schema: bool = False,
+    prune: tuple | None = None, point: tuple | None = None,
+) -> DataFrame:
+    """:func:`read_table` of snapshot ``version`` (None = current) of
+    the parsed manifest ``doc``."""
+    live = _files_at_version(doc, version) if version is not None else sorted(doc["files"])
+    # schema-evolved snapshots must read merged regardless of the
+    # caller's flag — see _schema_heterogeneous (round-13 silent-
+    # NULL hazard); _scan_with_dv applies the same upgrade, this
+    # keeps the all-pruned limit(0) path below consistent with it
+    if not merge_schema and _schema_heterogeneous(doc, live):
+        merge_schema = True
+    dv_map = _dv_at_version(doc, version)
+    dv_needed = sorted(
+        {d for n, lst in dv_map.items() if n in set(live) for d in lst}
+    )
+    missing = [
+        n for n in list(live) + dv_needed if not (p / n).exists()
+    ]
+    if missing:
+        raise FileNotFoundError(
+            f"snapshot {version} references vacuumed files: {missing}"
+        )
+    full = live
+    if prune is not None and live:
+        specs = (
+            [prune]
+            if prune and isinstance(prune[0], str)
+            else [tuple(s) for s in prune]
+        )
+        for spec in specs:
+            live = _prune_files(p, doc, live, *spec)
+    if point is not None and live:
+        pspecs = (
+            [point]
+            if point and isinstance(point[0], str)
+            else [tuple(s) for s in point]
+        )
+        for col, value in pspecs:
+            live = _bloom_prune(p, doc, live, col, value)
+    if not live and full:
+        # every file provably irrelevant: empty frame over ALL
+        # snapshot files + limit(0) — metadata-cheap (no tasks
+        # scan data) but, unlike schema-from-one-file, keeps the
+        # MERGED schema under merge_schema=True so columns added
+        # by later files still bind downstream (ADVICE r10)
+        return _to_logical(_read_parquet(spark, p, full, merge_schema).limit(0), doc)
+    # deletion vectors of THIS snapshot (if any) drop their dead
+    # positions inside the scan — prune-kept files with DVs still
+    # read correctly because pruning is a superset guarantee and
+    # DV'd rows are removed here, after file skipping
+    return _scan_with_dv(spark, p, live, doc, dv_map, merge_schema=merge_schema)
+
+
 def _stage_change_rows(
-    p, parts: list[tuple[DataFrame, str]], token: str
+    p, doc: dict, parts: list[tuple[DataFrame, str]], token: str
 ) -> list[str]:
     """Write a mutation's change rows at COMMIT TIME — Delta CDF's
     ``_change_data`` design: every mutation already has its classified
@@ -1783,7 +1777,7 @@ def _stage_change_rows(
         if df is None:
             continue
         frames.append(
-            _to_physical(p, df).withColumn("_change_type", F.lit(tag))
+            _to_physical(doc, df).withColumn("_change_type", F.lit(tag))
         )
     if not frames:
         return []
@@ -1837,24 +1831,16 @@ def _parquet_has_rows(f) -> bool:
         return True
 
 
-def _cdc_history_entries(p) -> dict:
-    """``{version: history entry}`` for the manifest's retained log."""
-    import json
-
-    doc = json.loads((p / _MANIFEST).read_text())
-    return {int(h["version"]): h for h in doc.get("history", [])}
-
-
-def _cdc_range_records(p, v_from: int, v_to: int) -> list[dict] | None:
+def _cdc_range_records(entries: dict, v_from: int, v_to: int) -> list[dict] | None:
     """History entries carrying CDC records for every transition in
     ``(v_from, v_to]`` — the entry stored under ``version=v`` records
-    the v → v+1 transition. ``invert`` records (RESTORE — its change
+    the v → v+1 transition, and ``entries`` maps each retained version
+    to its history entry. ``invert`` records (RESTORE — its change
     set is the inverse of the range it undoes) are validated
     RECURSIVELY: the undone range must itself be fully recorded.
     Returns None when any required transition lacks a record (pre-r14
     commit, OVERWRITE): the caller must take the endpoint-diff
     fallback for that range."""
-    entries = _cdc_history_entries(p)
 
     def _ok(a: int, b: int) -> bool:
         for v in range(a, b):
@@ -1932,22 +1918,27 @@ def read_changes(
     import pathlib
 
     p = pathlib.Path(path)
-    if not (p / _MANIFEST).exists():
+    return _changes(spark, p, _load(p), v_from, v_to, keys, with_commit_version)
+
+
+def _changes(
+    spark, p, doc: dict, v_from: int, v_to: int, keys: list[str] | None,
+    with_commit_version: bool,
+) -> DataFrame:
+    """:func:`read_changes` against the parsed manifest ``doc``."""
+    if not doc:
         raise ValueError("read_changes requires a manifest table")
     if v_to < v_from:
         raise ValueError(f"v_to {v_to} < v_from {v_from}")
-    f_from = set(_files_at_version(p, v_from))
-    f_to = set(_files_at_version(p, v_to))
+    f_from = set(_files_at_version(doc, v_from))
+    f_to = set(_files_at_version(doc, v_to))
     # the fast path additionally requires the DELETION-VECTOR state to
     # be unchanged across the range: a DV commit deletes rows while
     # leaving the file list identical, which the file-level diff is
     # blind to — those ranges take the row-level fallback (whose
     # version reads apply each snapshot's DVs)
-    if (
-        not with_commit_version
-        and f_from <= f_to
-        and _dv_at_version(p, v_from) == _dv_at_version(p, v_to)
-    ):
+    same_dv = _dv_at_version(doc, v_from) == _dv_at_version(doc, v_to)
+    if not with_commit_version and f_from <= f_to and same_dv:
         added = sorted(f_to - f_from)
         missing = [n for n in added if not (p / n).exists()]
         if missing:
@@ -1956,16 +1947,9 @@ def read_changes(
             )
         if not added:  # no-op range: empty frame, table schema
             base = _read_parquet(spark, p, sorted(f_to), merge_schema=True).limit(0)
-            return _to_logical(
-                base, _column_map(p), _dropped_cols(p), _added_cols(p)
-            ).withColumn(
-                "_change_type", F.lit("insert")
-            )
+            return _to_logical(base, doc).withColumn("_change_type", F.lit("insert"))
         return _to_logical(
-            _read_parquet(spark, p, added, merge_schema=True),
-            _column_map(p),
-            _dropped_cols(p),
-            _added_cols(p),
+            _read_parquet(spark, p, added, merge_schema=True), doc
         ).withColumn("_change_type", F.lit("insert"))
     # COMMIT-TIME CDC path (round 14): every mutation stages its change
     # rows when it commits (_stage_change_rows), so a range whose every
@@ -1974,17 +1958,12 @@ def read_changes(
     # endpoint exceptAll diff below survives ONLY as the fallback for
     # ranges crossing a record-less commit (pre-r14 history, overwrite,
     # restore).
-    recs = _cdc_range_records(p, v_from, v_to)
-    if recs is None and with_commit_version and f_from <= f_to and _dv_at_version(
-        p, v_from
-    ) == _dv_at_version(p, v_to):
+    entries = {int(h["version"]): h for h in doc.get("history", [])}
+    recs = _cdc_range_records(entries, v_from, v_to)
+    if recs is None and with_commit_version and f_from <= f_to and same_dv:
         # pre-r14 history but append-only net effect: every transition
         # only adds files, so the delta-encoded entries themselves are
         # exact per-commit append records
-        import json
-
-        doc = json.loads((p / _MANIFEST).read_text())
-        entries = {int(h["version"]): h for h in doc.get("history", [])}
         if all(v in entries for v in range(int(v_from), int(v_to))):
             recs = [
                 {
@@ -1996,10 +1975,10 @@ def read_changes(
             ]
     if recs is not None:
         return _compose_changes(
-            spark, p, recs, sorted(f_to), keys, with_commit_version
+            spark, p, doc, entries, recs, sorted(f_to), keys, with_commit_version
         )
-    df_from = read_table(spark, path, merge_schema=True, version=v_from)
-    df_to = read_table(spark, path, merge_schema=True, version=v_to)
+    df_from = _read_version(spark, p, doc, v_from, merge_schema=True)
+    df_to = _read_version(spark, p, doc, v_to, merge_schema=True)
     inserts = df_to.exceptAll(df_from).withColumn("_change_type", F.lit("insert"))
     deletes = df_from.exceptAll(df_to).withColumn("_change_type", F.lit("delete"))
     out = (
@@ -2037,6 +2016,8 @@ def _pair_updates(inserts, deletes, keys: list[str]) -> DataFrame:
 def _compose_changes(
     spark,
     p,
+    doc: dict,
+    entries: dict,
     recs: list[dict],
     f_to: list[str],
     keys: list[str] | None,
@@ -2059,8 +2040,6 @@ def _compose_changes(
     rows — a consumer folding the multiset (+insert/−delete) still
     reconstructs every snapshot exactly, and per-key reducers
     (:func:`replicate_changes`) are unaffected."""
-    cmap, dropped, added = _column_map(p), _dropped_cols(p), _added_cols(p)
-    entries = _cdc_history_entries(p)
     # (commit_version, files, flipped) groups. `flipped` is the invert
     # parity: a RESTORE's change set is the INVERSE of the range it
     # undoes (its appends become deletes, its change rows swap tags),
@@ -2148,7 +2127,7 @@ def _compose_changes(
                 q = _read_parquet(spark, p, paths, merge_schema=True)
                 if with_commit_version:
                     q = q.withColumn("_commit_version", version_col)
-                q = _to_logical(q, cmap, dropped, added)
+                q = _to_logical(q, doc)
                 if is_change_rows:
                     if flip:
                         mapping = F.col("_change_type")
@@ -2187,10 +2166,10 @@ def _compose_changes(
     _emit(ins_groups, is_change_rows=False)
     _emit(chg_groups, is_change_rows=True)
     for v_commit, snap_v, flipped in snap_groups:
-        files_v = _files_at_version(p, snap_v)
+        files_v = _files_at_version(doc, snap_v)
         if not files_v:
             continue  # overwrite of an empty table: no delete side
-        dv_v = _dv_at_version(p, snap_v)
+        dv_v = _dv_at_version(doc, snap_v)
         needed = list(files_v) + sorted(
             {d for lst in dv_v.values() for d in lst}
         )
@@ -2199,7 +2178,7 @@ def _compose_changes(
             raise FileNotFoundError(
                 f"change range references vacuumed files: {miss}"
             )
-        q = _scan_with_dv(spark, p, files_v, dv_v, merge_schema=True)
+        q = _scan_with_dv(spark, p, files_v, doc, dv_v, merge_schema=True)
         q = q.withColumn(
             "_change_type", F.lit("insert" if flipped else "delete")
         )
@@ -2208,7 +2187,7 @@ def _compose_changes(
         parts.append(q)
     if not parts:  # noop-only range: empty frame, table schema
         base = _read_parquet(spark, p, f_to, merge_schema=True).limit(0)
-        out = _to_logical(base, cmap, dropped, added).withColumn(
+        out = _to_logical(base, doc).withColumn(
             "_change_type", F.lit("insert")
         )
         if with_commit_version:
@@ -2237,17 +2216,6 @@ def _compose_changes(
         keys,
     )
     return paired.unionByName(tagged)
-
-
-def _clustered_state(p) -> dict | None:
-    """Current clustering state ``{"by": [col, ...], "files": [...]}``
-    or None (see :func:`compact_table` ``cluster_by``)."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return None
-    return json.loads(mf.read_text()).get("clustered")
 
 
 def follow_changes(
@@ -2281,18 +2249,12 @@ def follow_changes(
     import pathlib
 
     p = pathlib.Path(path)
-    cur = manifest_versions(p)[-1]
+    doc = _load(p, required=True)
+    cur = _versions(doc)[-1]
     if last_version is None or last_version == cur:
         return None, cur
     return (
-        read_changes(
-            spark,
-            p,
-            int(last_version),
-            cur,
-            keys=keys,
-            with_commit_version=with_commit_version,
-        ),
+        _changes(spark, p, doc, int(last_version), cur, keys, with_commit_version),
         cur,
     )
 
@@ -2421,20 +2383,27 @@ def append_files(
     import uuid
 
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
-    if cluster_by:
-        prev_clu = _clustered_state(p)
-        if prev_clu and prev_clu["by"] != list(cluster_by):
+    doc = _snapshot_for_update(p)
+
+    def clustered(doc: dict) -> list[str]:
+        """The live files already clustered on ``cluster_by``."""
+        prev = doc.get("clustered")
+        if prev and prev["by"] != list(cluster_by):
             raise ValueError(
                 f"append cluster_by {list(cluster_by)} != table clustering "
-                f"{prev_clu['by']}; re-cluster via compact_table(cluster_by=)"
+                f"{prev['by']}; re-cluster via compact_table(cluster_by=)"
             )
+        live = set(doc["files"])
+        return [n for n in (prev["files"] if prev else []) if n in live]
+
+    if cluster_by:
+        clustered(doc)  # a mismatch is refused before anything is written
         df = df.repartitionByRange(
             max(1, df.rdd.getNumPartitions()), *cluster_by
         ).sortWithinPartitions(*cluster_by)
-    _enforce_constraints(p, df)  # CHECK constraints: reject before staging
-    df = _to_physical(p, df)  # renamed columns write their frozen name
-    _reject_dropped_collisions(p, df)  # dropped-name reuse = silent loss
+    _enforce_constraints(doc, df)  # CHECK constraints: reject before staging
+    df = _to_physical(doc, df)  # renamed columns write their frozen name
+    _reject_dropped_collisions(doc, df)  # dropped-name reuse = silent loss
     # token: caller-supplied idempotence key (e.g. a streaming batch id
     # — see append_batch_idempotent) instead of the random default; the
     # appended file names embed it, making "was this logical append
@@ -2445,41 +2414,23 @@ def append_files(
     )
     # OCC with blind-append auto-rebase (Delta's AppendOnly resolution):
     # an append removes nothing, so a conflicting commit is resolved by
-    # re-reading the new snapshot and re-attaching our uniquely-named
-    # files to it — no data work repeats, only the metadata commit.
+    # re-attaching our uniquely-named files to the new snapshot
     added_stats = _stats_for_added(p, added)
-    for _ in range(10):
-        try:
-            replace = {}
-            if cluster_by:
-                prev_clu = _clustered_state(p)
-                if prev_clu and prev_clu["by"] != list(cluster_by):
-                    raise ValueError(
-                        f"append cluster_by {list(cluster_by)} != table "
-                        f"clustering {prev_clu['by']} (changed concurrently)"
-                    )
-                base = [
-                    n
-                    for n in (prev_clu["files"] if prev_clu else [])
-                    if n in set(live)
-                ]
-                replace["clustered"] = {
-                    "by": list(cluster_by),
-                    "files": base + added,
-                }
-            _commit_manifest(
-                p, live + added, expected_version=vers, stats=added_stats,
-                cdc={"type": "append", "op": "WRITE"}, replace=replace,
-            )
-            break
-        except ManifestConflictError:
-            vers, live = _read_snapshot(p)
-    else:
-        raise ManifestConflictError(
-            "append could not commit after 10 rebases (pathological "
-            "commit contention); staged files are orphans for vacuum"
+
+    def attempt(doc: dict) -> dict:
+        vers, live = _snapshot(doc)
+        replace = {}
+        if cluster_by:
+            replace["clustered"] = {
+                "by": list(cluster_by), "files": clustered(doc) + added,
+            }
+        _commit_manifest(
+            p, live + added, expected_version=vers, stats=added_stats,
+            cdc={"type": "append", "op": "WRITE"}, replace=replace,
         )
-    return {"n_files_added": len(added), "n_files_total": len(live) + len(added)}
+        return {"n_files_added": len(added), "n_files_total": len(live) + len(added)}
+
+    return _commit_rebasing(p, doc, attempt, "append")
 
 
 def append_batch_idempotent(spark, path, df: DataFrame, batch_id: int) -> bool:
@@ -2513,54 +2464,14 @@ def append_batch_idempotent(spark, path, df: DataFrame, batch_id: int) -> bool:
     return True
 
 
-def _column_map(p) -> dict:
-    """Current ``{logical: physical}`` column mapping (empty when no
-    column was ever renamed). See :func:`rename_column`."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return {}
-    return json.loads(mf.read_text()).get("column_map", {})
-
-
-def _dropped_cols(p) -> list[str]:
-    """Physical columns dropped metadata-only (see :func:`drop_column`)."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return []
-    return json.loads(mf.read_text()).get("dropped_columns", [])
-
-
-def _added_cols(p) -> dict:
-    """Columns added metadata-only (``{name: sql_type}`` — see
-    :func:`add_column`): typed NULL until a write materializes them."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return {}
-    return json.loads(mf.read_text()).get("added_columns", {})
-
-
-def _live_physical_columns(p, live: list[str]) -> set:
+def _live_physical_columns(p, doc: dict, live: list[str]) -> set:
     """Union of PHYSICAL column names across the live files — from the
-    manifest's write-time stats when available (the same metadata round
-    trip every snapshot read pays; engine-written files always carry a
+    write-time stats of the parsed manifest ``doc`` when available
+    (engine-written files always carry a
     stats record keyed by every column), falling back to a driver-side
     pyarrow footer read for files the stats record doesn't cover
     (pre-stats tables, externally dropped-in files)."""
-    import json
-
-    stats: dict = {}
-    mf = p / _MANIFEST
-    if mf.exists():
-        try:
-            stats = json.loads(mf.read_text()).get("stats", {})
-        except (OSError, ValueError):
-            stats = {}
+    stats = doc.get("stats", {})
     cols: set = set()
     uncovered = []
     for n in live:
@@ -2580,15 +2491,17 @@ def _live_physical_columns(p, live: list[str]) -> set:
     return cols
 
 
-def _reject_dropped_collisions(p, physical_df: DataFrame) -> None:
+def _reject_dropped_collisions(doc: dict, physical_df: DataFrame) -> None:
     """Guard every write boundary (append/stage/merge source) against
     the name-based column-mapping hazard: after ``drop_column('a')``,
     an incoming batch carrying a NEW column whose physical name is the
     dropped ``'a'`` would write real data that ``_to_logical`` then
     hides from every read — silent loss. Formats with frozen field IDs
     (Delta column mapping, Iceberg) are immune by construction; the
-    name-based map must reject instead."""
-    dropped = set(_dropped_cols(p))
+    name-based map must reject instead. The metadata-dropped names
+    (``dropped_columns``, see :func:`drop_column`) come from the parsed
+    manifest ``doc``."""
+    dropped = set(doc.get("dropped_columns", []))
     if not dropped:
         return
     bad = sorted(c for c in physical_df.columns if c in dropped)
@@ -2601,40 +2514,40 @@ def _reject_dropped_collisions(p, physical_df: DataFrame) -> None:
         )
 
 
-def _to_logical(
-    df: DataFrame, cmap: dict, dropped: list[str] = (), added: dict | None = None
-) -> DataFrame:
-    """Physical frame → logical schema (read boundary): renamed
-    columns take their logical names, dropped columns vanish, and
-    metadata-only ADDED columns materialize as typed NULL when no
-    scanned file carries them yet (see :func:`add_column`)."""
-    drop = [c for c in dropped if c in df.columns]
+def _to_logical(df: DataFrame, doc: dict) -> DataFrame:
+    """Physical frame → logical schema (read boundary), under the
+    parsed manifest ``doc``: renamed columns take their logical names
+    (``column_map``, see :func:`rename_column`), dropped columns vanish
+    (``dropped_columns``), and metadata-only ADDED columns
+    (``added_columns``, ``{name: sql_type}``) materialize as typed NULL
+    when no scanned file carries them yet (see :func:`add_column`)."""
+    drop = [c for c in doc.get("dropped_columns", []) if c in df.columns]
     if drop:
         df = df.drop(*drop)
-    for logical, physical in cmap.items():
+    for logical, physical in doc.get("column_map", {}).items():
         if physical in df.columns:
             df = df.withColumnRenamed(physical, logical)
-    for name, dtype in (added or {}).items():
+    for name, dtype in doc.get("added_columns", {}).items():
         if name not in df.columns:
             df = df.withColumn(name, F.lit(None).cast(dtype))
     return df
 
 
-def _to_physical(p, df: DataFrame) -> DataFrame:
+def _to_physical(doc: dict, df: DataFrame) -> DataFrame:
     """Logical frame → the table's frozen physical names (write
     boundary): every writer routes its outgoing rows through this, so
     data files NEVER change schema across renames — which is the whole
     point (a rename is one metadata commit, not a 100 TB rewrite)."""
-    for logical, physical in _column_map(p).items():
+    for logical, physical in doc.get("column_map", {}).items():
         if logical in df.columns:
             df = df.withColumnRenamed(logical, physical)
     return df
 
 
-def _phys_col(p, col: str) -> str:
+def _phys_col(doc: dict, col: str) -> str:
     """Physical name behind a (possibly renamed) logical column — for
     metadata consumers keyed by footer/physical names (stats, blooms)."""
-    return _column_map(p).get(col, col)
+    return doc.get("column_map", {}).get(col, col)
 
 
 def rename_column(path, old: str, new: str) -> dict:
@@ -2660,8 +2573,8 @@ def rename_column(path, old: str, new: str) -> dict:
     import pathlib
 
     p = pathlib.Path(path)
-    vers, live = _read_snapshot(p)
-    doc = json.loads((p / _MANIFEST).read_text())
+    doc = _load(p, required=True)
+    vers, live = _snapshot(doc)
     cmap = dict(doc.get("column_map", {}))
     # logical schema = physical columns of live files under cmap; we
     # can't cheaply enumerate physical columns without a footer read,
@@ -2679,7 +2592,7 @@ def rename_column(path, old: str, new: str) -> dict:
     # come from the manifest's write-time stats (metadata-only for
     # engine-written files; footer fallback otherwise).
     visible = (
-        _live_physical_columns(p, live)
+        _live_physical_columns(p, doc, live)
         - set(doc.get("dropped_columns", []))
         - set(cmap.values())
     ) | set(cmap)
@@ -2689,7 +2602,7 @@ def rename_column(path, old: str, new: str) -> dict:
             f"rename target {new!r} collides with an existing column of "
             "the live schema"
         )
-    for name, expr in _constraints(p).items():
+    for name, expr in doc.get("constraints", {}).items():
         if old in expr or new in expr:
             raise ValueError(
                 f"constraint {name!r} references {old!r}/{new!r}: drop and "
@@ -2744,14 +2657,13 @@ def drop_column(path, col: str) -> dict:
     against the metadata-only point); dropping a name no file carries
     is a harmless no-op entry. Returns
     ``{"col", "physical", "version"}``."""
-    import json
     import pathlib
 
     p = pathlib.Path(path)
-    vers, live = _read_snapshot(p)
-    doc = json.loads((p / _MANIFEST).read_text())
+    doc = _load(p, required=True)
+    vers, live = _snapshot(doc)
     cmap = dict(doc.get("column_map", {}))
-    for name, expr in _constraints(p).items():
+    for name, expr in doc.get("constraints", {}).items():
         if col in expr:
             raise ValueError(
                 f"constraint {name!r} references {col!r}: drop the "
@@ -2799,15 +2711,14 @@ def add_column(path, col: str, dtype: str) -> dict:
     already a live/renamed/added column or a retired dropped name
     (reuse would resurrect old bytes — same rule as
     :func:`rename_column`). Returns ``{"col", "dtype", "version"}``."""
-    import json
     import pathlib
 
     from pyspark.sql.types import _parse_datatype_string
 
     p = pathlib.Path(path)
     _parse_datatype_string(dtype)  # validate the type string early
-    vers, live = _read_snapshot(p)
-    doc = json.loads((p / _MANIFEST).read_text()) if (p / _MANIFEST).exists() else {}
+    doc = _load(p)
+    vers, live = _snapshot(doc)
     cmap = doc.get("column_map", {})
     added = dict(doc.get("added_columns", {}))
     if col in added or col in cmap:
@@ -2817,7 +2728,7 @@ def add_column(path, col: str, dtype: str) -> dict:
             f"{col!r} is a dropped physical name; reusing it would "
             "resurrect old bytes — pick another name"
         )
-    live_phys = _live_physical_columns(p, live) if live else set()
+    live_phys = _live_physical_columns(p, doc, live) if live else set()
     logical_live = {
         next((lg for lg, ph in cmap.items() if ph == c), c) for c in live_phys
     }
@@ -2838,23 +2749,14 @@ class ConstraintViolationError(ValueError):
     ``CHECK`` semantics)."""
 
 
-def _constraints(p) -> dict:
-    """Current ``{name: sql_expr}`` CHECK-constraint registry."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return {}
-    return json.loads(mf.read_text()).get("constraints", {})
-
-
-def _enforce_constraints(p, df: DataFrame) -> None:
-    """Reject ``df`` if any registered CHECK constraint has a FALSE row
-    (SQL CHECK semantics: NULL passes). One aggregate pass evaluates
+def _enforce_constraints(doc: dict, df: DataFrame) -> None:
+    """Reject ``df`` if any CHECK constraint registered in the parsed
+    manifest ``doc`` (``constraints``, ``{name: sql_expr}``) has a FALSE
+    row (SQL CHECK semantics: NULL passes). One aggregate pass evaluates
     ALL constraints together — the per-write enforcement cost is a
     single map-side-combinable job over the incoming batch, not one
     scan per constraint."""
-    cons = _constraints(p)
+    cons = doc.get("constraints", {})
     if not cons:
         return
     names = list(cons)
@@ -2886,64 +2788,41 @@ def add_constraint(spark, path, name: str, expr: str) -> dict:
     import pathlib
 
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
-    cons = dict(_constraints(p))
-    if name in cons:
-        raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
-    if live:
-        current = _scan_with_dv(spark, p, live, _dv_at_version(p))
-        n_bad = current.filter(
-            ~F.coalesce(F.expr(expr), F.lit(True))
-        ).count()
-        if n_bad:
-            raise ConstraintViolationError(
-                f"cannot add {name!r}: {n_bad} existing rows violate {expr!r}"
-            )
-    cons[name] = expr
-    validated = set(live)
-    for _ in range(10):
-        try:
-            version = _commit_manifest(
-                p, live, expected_version=vers,
-                cdc={"type": "noop", "op": "ADD CONSTRAINT"},
-                replace={"constraints": cons},
-            )
-            break
-        except ManifestConflictError:
-            vers, live = _read_snapshot(p)
-            cons = dict(_constraints(p))
-            # re-check the name-collision guard against the re-read
-            # registry (a concurrent add_constraint may have won)
-            if name in cons:
-                raise ValueError(
-                    f"constraint {name!r} already exists: {cons[name]}"
+    validated: set = set()
+
+    def attempt(doc: dict) -> dict:
+        vers, live = _snapshot(doc)
+        cons = dict(doc.get("constraints", {}))
+        # on a rebase, a concurrent add_constraint may have won the name
+        if name in cons:
+            raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
+        # validate every row no earlier attempt saw: the whole snapshot
+        # first, then only the files a concurrent commit added — their
+        # rows were legally unchecked at their write time, and
+        # committing the constraint over them unvalidated would break
+        # Delta's ADD CONSTRAINT invariant (the table may never hold
+        # rows violating a live constraint). A rebase costs
+        # O(concurrent writes), not O(table).
+        fresh = [n for n in live if n not in validated]
+        if fresh:
+            n_bad = _scan_with_dv(spark, p, fresh, doc, _dv_at_version(doc)).filter(
+                ~F.coalesce(F.expr(expr), F.lit(True))
+            ).count()
+            if n_bad:
+                rows = "concurrently appended" if validated else "existing"
+                raise ConstraintViolationError(
+                    f"cannot add {name!r}: {n_bad} {rows} rows violate {expr!r}"
                 )
-            # re-validate rows that landed since the first validation:
-            # a concurrent append's rows were legally unchecked at
-            # their write time — committing the constraint over them
-            # unvalidated would break Delta's ADD CONSTRAINT invariant
-            # (table may never hold rows violating a live constraint).
-            # Only the NEW files are scanned (new live minus already-
-            # validated live), so the rebase cost is O(concurrent
-            # writes), not O(table).
-            fresh = [n for n in live if n not in validated]
-            if fresh:
-                added = _scan_with_dv(spark, p, fresh, _dv_at_version(p))
-                n_bad = added.filter(
-                    ~F.coalesce(F.expr(expr), F.lit(True))
-                ).count()
-                if n_bad:
-                    raise ConstraintViolationError(
-                        f"cannot add {name!r}: {n_bad} concurrently "
-                        f"appended rows violate {expr!r}"
-                    )
-                validated.update(fresh)
-            cons[name] = expr
-    else:
-        raise ManifestConflictError(
-            "constraint could not commit after 10 rebases"
+            validated.update(fresh)
+        cons[name] = expr
+        version = _commit_manifest(
+            p, live, expected_version=vers,
+            cdc={"type": "noop", "op": "ADD CONSTRAINT"},
+            replace={"constraints": cons},
         )
-    return {"name": name, "version": version}
+        return {"name": name, "version": version}
+
+    return _commit_rebasing(p, _snapshot_for_update(p), attempt, "constraint")
 
 
 def drop_constraint(path, name: str) -> dict:
@@ -2951,8 +2830,9 @@ def drop_constraint(path, name: str) -> dict:
     import pathlib
 
     p = pathlib.Path(path)
-    vers, live = _read_snapshot(p)
-    cons = dict(_constraints(p))
+    doc = _load(p)
+    vers, live = _snapshot(doc)
+    cons = dict(doc.get("constraints", {}))
     if name not in cons:
         raise ValueError(f"no constraint {name!r}")
     cons.pop(name)
@@ -2978,19 +2858,20 @@ def table_snapshots(spark, path) -> DataFrame:
     import pathlib
 
     p = pathlib.Path(path)
-    versions = manifest_versions(p)
+    doc = _load(p, required=True)
+    versions = _versions(doc)
     cur = versions[-1]
-    ts_map = _version_timestamps(p)
+    ts_map = _version_timestamps(doc)
     # operation label (Delta's DESCRIBE HISTORY `operation` column):
     # snapshot v was produced by the transition recorded under history
     # entry v-1 — its commit-time CDC record carries the op name.
     # Version 1 is table creation; pre-r14 commits have no record.
-    entries = _cdc_history_entries(p)
+    entries = {int(h["version"]): h for h in doc.get("history", [])}
     rows = []
     prev_files: set[str] = set()
     for v in versions:
-        fs = set(_files_at_version(p, v))
-        dv = _dv_at_version(p, v)
+        fs = set(_files_at_version(doc, v))
+        dv = _dv_at_version(doc, v)
         refs = fs | {d for lst in dv.values() for d in lst}
         if v == versions[0]:
             op = "CREATE"
@@ -3025,12 +2906,10 @@ def table_detail(spark, path) -> DataFrame:
     governance surface counts (constraints, staged WAP batches,
     column-mapping entries). Pure manifest read + file stats; no data
     file is opened."""
-    import json
     import pathlib
 
     p = pathlib.Path(path)
-    ensure_manifest(p)
-    doc = json.loads((p / _MANIFEST).read_text())
+    doc = _adopt(p)
     live = doc["files"]
     dv_files = sorted({d for lst in doc.get("dv", {}).values() for d in lst})
     size = sum((p / n).stat().st_size for n in live if (p / n).exists())
@@ -3062,12 +2941,11 @@ def table_files(spark, path) -> DataFrame:
     (Iceberg's ``db.table.files``): name, on-disk bytes, whether the
     manifest carries column stats / deletion vectors for it. Metadata
     only — no data file is opened."""
-    import json
     import pathlib
 
     p = pathlib.Path(path)
-    live = ensure_manifest(p)
-    doc = json.loads((p / _MANIFEST).read_text())
+    doc = _adopt(p)
+    live = sorted(doc["files"])
     stats = doc.get("stats", {})
     dv = doc.get("dv", {})
     rows = [
@@ -3085,15 +2963,20 @@ def table_files(spark, path) -> DataFrame:
     )
 
 
-def _staged_registry(p) -> dict:
-    """Current ``{audit_id: [file, ...]}`` write-audit-publish registry
-    (empty for tables that never staged)."""
-    import json
-
-    mf = p / _MANIFEST
-    if not mf.exists():
-        return {}
-    return json.loads(mf.read_text()).get("staged", {})
+def _without_staged(doc: dict, audit_id: str) -> tuple[dict, list[str]]:
+    """(the write-audit-publish registry ``staged`` of the parsed
+    manifest ``doc`` without batch ``audit_id``, that batch's files).
+    Raises when ``doc`` holds no such batch: it was never staged, or a
+    concurrent committer published or discarded it — its files may be
+    LIVE then, so no caller may act on a stale file list."""
+    reg = dict(doc.get("staged", {}))
+    if audit_id not in reg:
+        raise ValueError(
+            f"no staged batch {audit_id!r}: never staged, or published or "
+            "discarded by a concurrent committer"
+        )
+    files = reg.pop(audit_id)
+    return reg, files
 
 
 def stage_append(spark, path, df: DataFrame, audit_id: str | None = None) -> dict:
@@ -3120,41 +3003,39 @@ def stage_append(spark, path, df: DataFrame, audit_id: str | None = None) -> dic
 
     p = pathlib.Path(path)
     audit_id = audit_id or uuid.uuid4().hex[:12]
-    vers, live = _snapshot_for_update(p)
-    reg = _staged_registry(p)
-    if audit_id in reg:
-        raise ValueError(f"audit_id {audit_id!r} already staged")
-    _enforce_constraints(p, df)  # CHECK constraints gate staging too
-    df = _to_physical(p, df)
-    _reject_dropped_collisions(p, df)  # dropped-name reuse = silent loss
+    doc = _snapshot_for_update(p)
+
+    def registry(doc: dict) -> dict:
+        reg = dict(doc.get("staged", {}))
+        if audit_id in reg:
+            raise ValueError(f"audit_id {audit_id!r} already staged")
+        return reg
+
+    # before anything is written: a reused id would name our files like
+    # the staged batch's and overwrite them
+    registry(doc)
+    _enforce_constraints(doc, df)  # CHECK constraints gate staging too
+    df = _to_physical(doc, df)
+    _reject_dropped_collisions(doc, df)  # dropped-name reuse = silent loss
     added = _write_and_rename(
         df, pathlib.Path(str(p) + f".stage-{audit_id}"), p, f"staged-{audit_id}-"
     )
-    for _ in range(10):  # blind-append rebase: staging removes nothing
-        try:
-            reg = dict(_staged_registry(p))
-            if audit_id in reg:
-                # a CONCURRENT stage claimed the id between our check
-                # and commit: overwriting would orphan the winner's
-                # files under a registry entry pointing at ours — fail
-                # like the up-front check (our files stay orphans for
-                # vacuum; the caller picks a fresh audit_id)
-                raise ValueError(f"audit_id {audit_id!r} already staged")
-            reg[audit_id] = added
-            version = _commit_manifest(
-                p, live, expected_version=vers,
-                cdc={"type": "noop", "op": "WAP STAGE"}, replace={"staged": reg},
-            )
-            break
-        except ManifestConflictError:
-            vers, live = _read_snapshot(p)
-    else:
-        raise ManifestConflictError("stage could not commit after 10 rebases")
-    return {
-        "audit_id": audit_id,
-        "n_files_staged": len(added),
-        "version": version,
-    }
+
+    def attempt(doc: dict) -> dict:
+        # on a rebase, a CONCURRENT stage may have claimed the id:
+        # overwriting its entry would orphan the winner's files, so fail
+        # (our files stay orphans for vacuum; the caller picks a fresh id)
+        vers, live = _snapshot(doc)
+        reg = registry(doc)
+        reg[audit_id] = added
+        version = _commit_manifest(
+            p, live, expected_version=vers,
+            cdc={"type": "noop", "op": "WAP STAGE"}, replace={"staged": reg},
+        )
+        return {"audit_id": audit_id, "n_files_staged": len(added), "version": version}
+
+    # blind-append rebase: staging removes nothing
+    return _commit_rebasing(p, doc, attempt, "stage")
 
 
 def read_staged(spark, path, audit_id: str) -> DataFrame:
@@ -3163,15 +3044,9 @@ def read_staged(spark, path, audit_id: str) -> DataFrame:
     import pathlib
 
     p = pathlib.Path(path)
-    reg = _staged_registry(p)
-    if audit_id not in reg:
-        raise ValueError(f"no staged batch {audit_id!r}")
-    return _to_logical(
-        _read_parquet(spark, p, reg[audit_id], merge_schema=True),
-        _column_map(p),
-        _dropped_cols(p),
-        _added_cols(p),
-    )
+    doc = _load(p)
+    files = _without_staged(doc, audit_id)[1]
+    return _to_logical(_read_parquet(spark, p, files, merge_schema=True), doc)
 
 
 def publish_staged(spark, path, audit_id: str) -> dict:
@@ -3182,44 +3057,28 @@ def publish_staged(spark, path, audit_id: str) -> dict:
     import pathlib
 
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
-    reg = dict(_staged_registry(p))
-    if audit_id not in reg:
-        raise ValueError(f"no staged batch {audit_id!r}")
-    added = reg.pop(audit_id)
+    doc = _snapshot_for_update(p)
+    added = _without_staged(doc, audit_id)[1]
     # constraints may have been ADDED between stage and publish: the
     # publish is when the batch enters the table, so it re-validates
     # (one combined aggregate over the batch — O(batch), not O(table))
-    if _constraints(p):
+    if doc.get("constraints"):
         _enforce_constraints(
-            p,
-            _to_logical(
-                _read_parquet(spark, p, added, merge_schema=True),
-                _column_map(p),
-                _dropped_cols(p),
-            ),
+            doc, _to_logical(_read_parquet(spark, p, added, merge_schema=True), doc)
         )
     stats = _stats_for_added(p, added)
-    for _ in range(10):
-        try:
-            version = _commit_manifest(
-                p, live + added, expected_version=vers, stats=stats,
-                cdc={"type": "append", "op": "WAP PUBLISH"},
-                replace={"staged": reg},
-            )
-            break
-        except ManifestConflictError:
-            vers, live = _read_snapshot(p)
-            reg = dict(_staged_registry(p))
-            if audit_id not in reg:
-                raise ValueError(
-                    f"staged batch {audit_id!r} was published or discarded "
-                    "by a concurrent committer"
-                )
-            added = reg.pop(audit_id)
-    else:
-        raise ManifestConflictError("publish could not commit after 10 rebases")
-    return {"n_files_published": len(added), "version": version}
+
+    def attempt(doc: dict) -> dict:
+        vers, live = _snapshot(doc)
+        reg, files = _without_staged(doc, audit_id)
+        version = _commit_manifest(
+            p, live + files, expected_version=vers, stats=stats,
+            cdc={"type": "append", "op": "WAP PUBLISH"},
+            replace={"staged": reg},
+        )
+        return {"n_files_published": len(files), "version": version}
+
+    return _commit_rebasing(p, doc, attempt, "publish")
 
 
 def discard_staged(path, audit_id: str) -> dict:
@@ -3228,34 +3087,20 @@ def discard_staged(path, audit_id: str) -> dict:
     import pathlib
 
     p = pathlib.Path(path)
-    vers, live = _read_snapshot(p)
-    reg = dict(_staged_registry(p))
-    if audit_id not in reg:
-        raise ValueError(f"no staged batch {audit_id!r}")
-    dropped = reg.pop(audit_id)
-    for _ in range(10):
-        try:
-            _commit_manifest(
-                p, live, expected_version=vers,
-                cdc={"type": "noop", "op": "WAP DISCARD"}, replace={"staged": reg},
-            )
-            break
-        except ManifestConflictError:
-            vers, live = _read_snapshot(p)
-            reg = dict(_staged_registry(p))
-            if audit_id not in reg:
-                # a concurrent publish_staged (or discard) won the
-                # race: the batch's files may now be LIVE — defaulting
-                # to the stale file list and unlinking would silently
-                # destroy published data. Mirror publish_staged's
-                # rebase guard and refuse.
-                raise ValueError(
-                    f"staged batch {audit_id!r} was published or "
-                    "discarded by a concurrent committer"
-                )
-            dropped = reg.pop(audit_id)
-    else:
-        raise ManifestConflictError("discard could not commit after 10 rebases")
+
+    def attempt(doc: dict) -> list[str]:
+        # a concurrent publish_staged may have won the race and made the
+        # batch's files LIVE: the registry guard refuses rather than
+        # unlinking published data
+        vers, live = _snapshot(doc)
+        reg, dropped = _without_staged(doc, audit_id)
+        _commit_manifest(
+            p, live, expected_version=vers,
+            cdc={"type": "noop", "op": "WAP DISCARD"}, replace={"staged": reg},
+        )
+        return dropped
+
+    dropped = _commit_rebasing(p, _load(p), attempt, "discard")
     for n in dropped:  # post-commit cleanup; failure → orphans for vacuum
         _unlink_quiet(p / n)
     return {"n_files_discarded": len(dropped)}
@@ -3315,7 +3160,8 @@ def compact_table(
     import uuid
 
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
+    doc = _snapshot_for_update(p)
+    vers, live = _snapshot(doc)
     if not live:  # freshly adopted empty dir: nothing to rewrite
         return {"n_files_before": 0, "n_files_after": 0, "version": vers}
     # predicate-scoped OPTIMIZE (Delta's `OPTIMIZE t WHERE ...`): only
@@ -3327,7 +3173,7 @@ def compact_table(
     scope = (
         [n for n in live if n in set(scope_files)]
         if scope_files is not None
-        else _candidate_files(p, live, where)
+        else _candidate_files(p, doc, live, where)
         if where
         else list(live)
     )
@@ -3345,14 +3191,14 @@ def compact_table(
     # rewritten files hold only live rows, and the commit's carry-
     # forward drops the displaced files' DV entries (OPTIMIZE's
     # merge-on-read → copy-on-write conversion)
-    df = _scan_with_dv(spark, p, scope, _dv_at_version(p), merge_schema=True)
+    df = _scan_with_dv(spark, p, scope, doc, _dv_at_version(doc), merge_schema=True)
     if cluster_by:
         df = df.repartitionByRange(int(n_files), *cluster_by)
         df = df.sortWithinPartitions(*cluster_by)
     else:
         df = df.repartition(int(n_files))
     new_names = _write_and_rename(
-        _to_physical(p, df), pathlib.Path(str(p) + f".compact-{token}"), p,
+        _to_physical(doc, df), pathlib.Path(str(p) + f".compact-{token}"), p,
         f"compact-{token}-",
     )
     replace = {}
@@ -3361,7 +3207,7 @@ def compact_table(
         # clustering state (compact_incremental's baseline); a SCOPED
         # clustered rewrite keeps previously-clustered untouched files
         # in the state when the key matches
-        prev_clu = _clustered_state(p)
+        prev_clu = doc.get("clustered")
         base = (
             [n for n in prev_clu["files"] if n in set(untouched)]
             if prev_clu and prev_clu["by"] == list(cluster_by)
@@ -3418,8 +3264,9 @@ def compact_incremental(
     import pathlib
 
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
-    clu = _clustered_state(p)
+    doc = _snapshot_for_update(p)
+    vers, live = _snapshot(doc)
+    clu = doc.get("clustered")
     if not clu:
         raise ValueError(
             "no clustering state: run compact_table(cluster_by=...) first"
@@ -3445,16 +3292,13 @@ def compact_incremental(
     }
 
 
-def _version_timestamps(p) -> dict:
-    """``{version: commit_wall_time | None}`` from the manifest's
+def _version_timestamps(doc: dict) -> dict:
+    """``{version: commit_wall_time | None}`` from the parsed manifest's
     history entries plus the current commit's ``ts``. ``None`` for
     pre-r13 commits that predate timestamping — time-based retention
     treats those as older than any horizon (prunable), the
     conservative-for-space reading; pin them with
     ``retain_versions`` if they must stay restorable."""
-    import json
-
-    doc = json.loads((p / _MANIFEST).read_text())
     out = {int(h["version"]): h.get("ts") for h in doc.get("history", [])}
     out[int(doc.get("version", 1))] = doc.get("ts")
     return out
@@ -3506,27 +3350,25 @@ def vacuum_orphans(
     import time
 
     p = pathlib.Path(path)
-    live = set(ensure_manifest(p))
+    doc = _adopt(p)
+    live = set(doc["files"])
     # DV parquets referenced by a protected snapshot are as live as its
     # data files — deleting one would resurrect dead rows
-    live |= {d for lst in _dv_at_version(p).values() for d in lst}
+    live |= {d for lst in _dv_at_version(doc).values() for d in lst}
     # registered WAP batches are awaiting their audit: protected until
     # published (joins the live list) or discarded (deregistered)
-    live |= {n for fs in _staged_registry(p).values() for n in fs}
-    if retain_versions:
-        for v in manifest_versions(p)[:-1][-retain_versions:]:
-            live |= set(_files_at_version(p, v))
-            live |= {d for lst in _dv_at_version(p, v).values() for d in lst}
+    live |= {n for fs in doc.get("staged", {}).values() for n in fs}
+    history = _versions(doc)[:-1]
+    protected = history[-retain_versions:] if retain_versions else []
     if retain_hours is not None:
         horizon = time.time() - float(retain_hours) * 3600.0
-        ts_map = _version_timestamps(p)
-        for v in manifest_versions(p)[:-1]:
-            ts = ts_map.get(v)
-            if ts is not None and ts >= horizon:
-                live |= set(_files_at_version(p, v))
-                live |= {
-                    d for lst in _dv_at_version(p, v).values() for d in lst
-                }
+        ts_map = _version_timestamps(doc)
+        protected += [
+            v for v in history if ts_map.get(v) is not None and ts_map[v] >= horizon
+        ]
+    for v in set(protected):
+        live |= set(_files_at_version(doc, v))
+        live |= {d for lst in _dv_at_version(doc, v).values() for d in lst}
     cutoff = time.time() - grace_seconds
     removed = []
     for f in p.glob("*.parquet"):
@@ -3541,9 +3383,6 @@ def vacuum_orphans(
     # prune_history dropped — reclaim past the same grace window
     cdir = p / _CHANGES_DIR
     if cdir.is_dir():
-        import json
-
-        doc = json.loads((p / _MANIFEST).read_text())
         referenced = {
             f
             for h in doc.get("history", [])
@@ -3601,10 +3440,9 @@ def prune_history(path, retain_versions: int) -> list[int]:
     import pathlib
 
     p = pathlib.Path(str(path))
-    mf = p / _MANIFEST
     fd = _manifest_lock(p)
     try:
-        doc = json.loads(mf.read_text())
+        doc = _load(p, required=True)
         hist = sorted(doc.get("history", []), key=lambda h: int(h["version"]))
         keep = hist[len(hist) - retain_versions :] if retain_versions else []
         pruned = [int(h["version"]) for h in hist[: len(hist) - len(keep)]]
@@ -3613,7 +3451,7 @@ def prune_history(path, retain_versions: int) -> list[int]:
         doc["history"] = keep
         tmp = p / (_MANIFEST + ".tmp")
         tmp.write_text(json.dumps(doc))
-        os.replace(str(tmp), str(mf))
+        os.replace(str(tmp), str(p / _MANIFEST))
         # pruned transitions are no longer queryable via read_changes:
         # drop their staged change files (best effort — a leftover is
         # unreferenced garbage vacuum_orphans also reclaims)
@@ -3647,11 +3485,13 @@ def _row_images(df: DataFrame) -> DataFrame:
 
 
 def _mutate(
-    spark, p, op: str, mode: str, retain: bool, vers: int, live: list[str],
-    dv_prev: dict, cand: list[str], keys: tuple, changed, rewrite, derive,
+    spark, p, op: str, mode: str, retain: bool, doc: dict, cand: list[str],
+    keys: tuple, changed, rewrite, derive,
 ) -> dict:
     """The one write path of DELETE, UPDATE and MERGE: the caller
-    classifies, this kernel does everything else.
+    classifies, this kernel does everything else, all against the ONE
+    parsed manifest ``doc`` the caller planned with (its version is the
+    commit's OCC precondition).
 
     1. ONE DV-applied scan ``tgt`` of the candidate files ``cand`` (a
        DV'd row is neither changed nor kept), attributed by ``_file``
@@ -3690,7 +3530,9 @@ def _mutate(
 
     cow = mode == "cow"
     keys = keys if cow else keys + ("n_dv_files_added",)
-    rows_before = _live_row_count(p, live, dv_prev, spark)
+    vers, live = _snapshot(doc)
+    dv_prev = _dv_at_version(doc)
+    rows_before = _live_row_count(p, doc, live, dv_prev, spark)
     st = {
         "rows_before": rows_before, "rows_deleted": 0, "rows_updated": 0,
         "rows_inserted": 0, "rows_after": rows_before, "n_files_total": len(live),
@@ -3706,7 +3548,7 @@ def _mutate(
     if not cand and not adds_rows:
         return result()
     tgt = _scan_with_dv(
-        spark, p, cand or live, dv_prev, merge_schema=False,
+        spark, p, cand or live, doc, dv_prev, merge_schema=False,
         keep_file_col=cow, keep_pos_col=not cow,
     )
     if not cand:
@@ -3734,11 +3576,11 @@ def _mutate(
             kept = _row_images(rewrite(tgt, uris)).repartition(len(affected))
             rtag = "r" if op == "merge" else ""
             new_names += _write_and_rename(
-                _to_physical(p, kept), stage / "rewrite", p,
+                _to_physical(doc, kept), stage / "rewrite", p,
                 f"part-{op}-{token}-{rtag}",
             )
         for df, tag in appends:
-            df = _to_physical(p, df)
+            df = _to_physical(doc, df)
             names = _write_and_rename(
                 df, stage / tag, p, f"part-{op}-{token}-{tag}", skip_empty=True
             )
@@ -3751,9 +3593,7 @@ def _mutate(
             names, schema = written[tag]
             if not names:
                 return None
-            return _to_logical(
-                _read_parquet(spark, p, names, schema=schema), _column_map(p),
-            )
+            return _to_logical(_read_parquet(spark, p, names, schema=schema), doc)
 
         changes = [
             (read_back(df) if isinstance(df, str) else df, ct) for df, ct in changes
@@ -3774,7 +3614,7 @@ def _mutate(
                 new_dv.setdefault(n, []).append(dv_name)
         cdc = {
             "type": "rows",
-            "files": _stage_change_rows(p, changes, token),
+            "files": _stage_change_rows(p, doc, changes, token),
             "op": op.upper(),
         }
         if ins_names:
@@ -3784,11 +3624,11 @@ def _mutate(
         st.update(
             rows_deleted=n_deleted,
             rows_updated=sum(r["count"] for r in per_file) - n_deleted,
-            rows_after=_live_row_count(p, files, new_dv, spark),
+            rows_after=_live_row_count(p, doc, files, new_dv, spark),
             n_files_rewritten=len(gone),
             n_files_added=len(new_names),
             n_dv_files_added=int(bool(affected) and not cow),
-            rows_inserted=_live_row_count(p, ins_names, {}, spark),
+            rows_inserted=_live_row_count(p, doc, ins_names, {}, spark),
         )
         _commit_manifest(
             p, files, expected_version=vers, stats=_stats_for_added(p, new_names),
@@ -3879,14 +3719,14 @@ def delete_rows(
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
-    vers, live = _snapshot_for_update(p)
+    doc = _snapshot_for_update(p)
     return _mutate(
-        spark, p, "delete", mode, retain, vers, live, _dv_at_version(p),
+        spark, p, "delete", mode, retain, doc,
         # file pruning (Delta's DELETE file skipping): files whose stats
         # prove the predicate false everywhere are neither scanned nor
         # rewritten (a day-targeted DELETE on a clustered table scans
         # O(day), not O(table))
-        _candidate_files(p, live, predicate),
+        _candidate_files(p, doc, _snapshot(doc)[1], predicate),
         ("rows_before", "rows_deleted", "rows_after", "n_files_total",
          "n_files_rewritten"),
         changed=lambda tgt: tgt.filter(cond).withColumn("__action", F.lit("D")),
@@ -3899,7 +3739,7 @@ def delete_rows(
     )
 
 
-def _merge_candidates(p, live, keys, ranges: dict) -> list[str]:
+def _merge_candidates(p, doc: dict, live, keys, ranges: dict) -> list[str]:
     """Target files that MAY hold a source join key — Delta's MERGE
     file pruning: the per-key ``ranges`` (min, max) of the (batch-sized)
     source, from :func:`merge_rows`'s one source pass, prune target
@@ -3913,10 +3753,10 @@ def _merge_candidates(p, live, keys, ranges: dict) -> list[str]:
         lo, hi = ranges[k]
         if lo is None or not isinstance(lo, (int, float, str)):
             continue
-        keep = prune_file_list(p, keep, k, lo, hi)
+        keep = _prune_files(p, doc, keep, k, lo, hi)
     if keep and len(keep) < len(live):
         # same schema-evolution guard as _candidate_files
-        if _live_physical_columns(p, keep) != _live_physical_columns(p, live):
+        if _live_physical_columns(p, doc, keep) != _live_physical_columns(p, doc, live):
             return list(live)
     return keep
 
@@ -3966,7 +3806,7 @@ _BROADCAST_ROW_CAP = 1_000_000
 
 
 def _merge_clause_plan(
-    spark, p, src, keys, upd, upd_cond, del_cond, ins, ins_values,
+    spark, doc, src, keys, upd, upd_cond, del_cond, ins, ins_values,
     nmbs_del, nmbs_upd, nmbs_upd_cond,
 ):
     """The MERGE clause engine's classification (see :func:`merge_rows`
@@ -4106,8 +3946,8 @@ def _merge_clause_plan(
             # their data files (tag "i"), exactly the insert set
             appends.append((inserts, "i"))
         for df, _tag in appends:
-            _enforce_constraints(p, df)
-            _reject_dropped_collisions(p, _to_physical(p, df))
+            _enforce_constraints(doc, df)
+            _reject_dropped_collisions(doc, _to_physical(doc, df))
         return appends, changes
 
     return changed, rewrite, derive
@@ -4235,8 +4075,8 @@ def merge_rows(
         raise ValueError(
             "when_matched_update must be '*', an assignment dict, or None"
         )
-    vers, live = _snapshot_for_update(p)
-    dv_prev = _dv_at_version(p)
+    doc = _snapshot_for_update(p)
+    live = _snapshot(doc)[1]
     src = source.cache()
     try:
         # ONE pass over the (cached) source answers the duplicate-key
@@ -4259,14 +4099,14 @@ def merge_rows(
             list(live)
             if when_not_matched_by_source_delete is not None
             or when_not_matched_by_source_update is not None
-            else _merge_candidates(p, live, keys, ranges)
+            else _merge_candidates(p, doc, live, keys, ranges)
         )
         return _mutate(
-            spark, p, "merge", mode, retain, vers, live, dv_prev, cand,
+            spark, p, "merge", mode, retain, doc, cand,
             ("rows_before", "rows_updated", "rows_deleted", "rows_inserted",
              "rows_after", "n_files_total", "n_files_rewritten", "n_files_added"),
             *_merge_clause_plan(
-                spark, p, src, keys, when_matched_update,
+                spark, doc, src, keys, when_matched_update,
                 when_matched_update_condition, when_matched_delete,
                 when_not_matched_insert, when_not_matched_insert_values,
                 when_not_matched_by_source_delete,
@@ -4296,11 +4136,11 @@ def overwrite_table(spark, path, df: DataFrame) -> dict:
     import uuid
 
     p = pathlib.Path(path)
-    p.mkdir(parents=True, exist_ok=True)
-    vers, live = _snapshot_for_update(p)
-    _enforce_constraints(p, df)
-    df = _to_physical(p, df)
-    _reject_dropped_collisions(p, df)
+    doc = _snapshot_for_update(p)
+    vers, live = _snapshot(doc)
+    _enforce_constraints(doc, df)
+    df = _to_physical(doc, df)
+    _reject_dropped_collisions(doc, df)
     token = uuid.uuid4().hex[:12]
     new_names = _write_and_rename(
         df, pathlib.Path(str(p) + f".overwrite-{token}"), p, f"overwrite-{token}-"
@@ -4318,7 +4158,7 @@ def overwrite_table(spark, path, df: DataFrame) -> dict:
         cdc={"type": "replace", "op": "OVERWRITE"},
     )
     # fresh files carry no DVs: count from the footers just committed
-    rows_after = _live_row_count(p, new_names, {})
+    rows_after = _live_row_count(p, doc, new_names, {})
     return {
         "n_files_before": len(live),
         "n_files_after": len(new_names),
@@ -4357,15 +4197,16 @@ def restore_table(path, version: int | None = None, spark=None, timestamp=None) 
     import pathlib
 
     p = pathlib.Path(path)
+    doc = _load(p, required=True)
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version= or timestamp=, not both")
-        version = _version_at_timestamp(p, timestamp)
+        version = _version_at_timestamp(doc, timestamp)
     if version is None:
         raise ValueError("restore_table needs version= or timestamp=")
-    vers, _live = _read_snapshot(p)
-    files = _files_at_version(p, int(version))
-    dv = _dv_at_version(p, int(version))
+    vers = _snapshot(doc)[0]
+    files = _files_at_version(doc, int(version))
+    dv = _dv_at_version(doc, int(version))
     missing = [
         n
         for n in set(files) | {d for lst in dv.values() for d in lst}
@@ -4376,7 +4217,7 @@ def restore_table(path, version: int | None = None, spark=None, timestamp=None) 
             f"cannot restore to version {version}: files already "
             f"vacuumed: {sorted(missing)[:5]}"
         )
-    if _constraints(p) and files:
+    if doc.get("constraints") and files:
         if spark is None:
             from pyspark.sql import SparkSession
 
@@ -4387,7 +4228,7 @@ def restore_table(path, version: int | None = None, spark=None, timestamp=None) 
                 "restored snapshot against the table's CHECK constraints"
             )
         try:
-            _enforce_constraints(p, _scan_with_dv(spark, p, files, dv))
+            _enforce_constraints(doc, _scan_with_dv(spark, p, files, doc, dv))
         except ConstraintViolationError as e:
             raise ConstraintViolationError(
                 f"restore to version {version} rejected: the restored "
@@ -4397,10 +4238,7 @@ def restore_table(path, version: int | None = None, spark=None, timestamp=None) 
     # files returning to the live list lost their stats entries at the
     # commit that removed them (stats never outgrow O(live files));
     # re-collect from footers so the restored table keeps pruning
-    import json as _json
-
-    cur_stats = _json.loads((p / _MANIFEST).read_text()).get("stats", {})
-    statless = [n for n in files if n not in cur_stats]
+    statless = [n for n in files if n not in doc.get("stats", {})]
     new_version = _commit_manifest(
         p,
         list(files),
@@ -4452,18 +4290,17 @@ def clone_table(path, target) -> dict:
     Raises if ``target`` already has a manifest. Returns
     ``{"n_files_linked", "version", "n_bytes_copied"}`` (the last is
     always 0 — it is in the contract's name)."""
-    import json
     import os
     import pathlib
 
     src = pathlib.Path(path)
     dst = pathlib.Path(target)
-    if not (src / _MANIFEST).exists():
+    doc = _load(src)
+    if not doc:
         raise ValueError("clone source must be a manifest table")
     if (dst / _MANIFEST).exists():
         raise ValueError(f"clone target {target!r} is already a table")
     dst.mkdir(parents=True, exist_ok=True)
-    doc = json.loads((src / _MANIFEST).read_text())
     live = list(doc["files"])
     dv_map = doc.get("dv", {})
     dv_files = sorted({d for n in live for d in dv_map.get(n, [])})
@@ -4527,7 +4364,7 @@ def update_rows(
 
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     p = pathlib.Path(path)
-    vers, live = _snapshot_for_update(p)
+    doc = _snapshot_for_update(p)
     if mode not in ("cow", "dv"):
         raise ValueError(f"unknown update mode {mode!r} (cow|dv)")
 
@@ -4558,15 +4395,15 @@ def update_rows(
         # rewritten files, dv appends them
         pre = _row_images(m)
         images = _apply_set(pre, only_matched=True)
-        _enforce_constraints(p, images)
+        _enforce_constraints(doc, images)
         appends = [(images, "u")] if mode == "dv" else []
         return appends, [(pre, "update_preimage"), (images, "update_postimage")]
 
     return _mutate(
-        spark, p, "update", mode, retain, vers, live, _dv_at_version(p),
+        spark, p, "update", mode, retain, doc,
         # file pruning (Delta's UPDATE file skipping): candidates only —
         # see _candidate_files; rows_before always counts the FULL table
-        _candidate_files(p, live, predicate),
+        _candidate_files(p, doc, _snapshot(doc)[1], predicate),
         ("rows_before", "rows_updated", "rows_after", "n_files_total",
          "n_files_rewritten", "n_files_added"),
         changed=lambda tgt: tgt.filter(cond).withColumn("__action", F.lit("U")),
@@ -4612,12 +4449,10 @@ def maintain_table(
     Each step is itself an OCC commit; a conflict aborts that step
     only (maintenance always loses to live writers and retries next
     pass). Returns ``{"actions": [...], "n_vacuumed": int}``."""
-    import json
     import pathlib
 
     p = pathlib.Path(path)
-    ensure_manifest(p)
-    doc = json.loads((p / _MANIFEST).read_text())
+    doc = _adopt(p)
     live = doc["files"]
     actions: list[str] = []
     clu = doc.get("clustered")
@@ -4637,7 +4472,7 @@ def maintain_table(
                     actions.append("compact_incremental")
             except ManifestConflictError:
                 actions.append("compact_incremental:skipped-conflict")
-            doc = json.loads((p / _MANIFEST).read_text())
+            doc = _load(p)  # the pass's next steps plan on the new snapshot
             live = doc["files"]
     dv_map = doc.get("dv", {})
     dv_debt = len({d for lst in dv_map.values() for d in lst})

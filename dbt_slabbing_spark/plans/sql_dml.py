@@ -500,10 +500,10 @@ class ManifestSession:
             name, ts = m.group("table"), m.group("ts")
             if name not in self.tables:
                 return m.group(0)
-            from ..operators.layout import _version_at_timestamp
+            from ..operators.layout import _load, _version_at_timestamp
             import pathlib as _pl
 
-            version = _version_at_timestamp(_pl.Path(self.tables[name]), ts)
+            version = _version_at_timestamp(_load(_pl.Path(self.tables[name])), ts)
             view = f"_tt_{name}_v{version}"
             read_table(
                 self.spark, self.tables[name], version=version

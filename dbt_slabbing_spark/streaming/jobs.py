@@ -1124,17 +1124,17 @@ def _land_wap_batch(spark: SparkSession, table_dir: str, batch_df: DataFrame, ai
     the audit (every ``value >= 0``) then publishes the staged files or
     discards them. Returns False for the published no-op, else True."""
     from ..operators.layout import (
-        _staged_registry,
+        _load,
         discard_staged,
-        ensure_manifest,
         publish_staged,
         read_staged,
         stage_append,
     )
 
-    if any(n.startswith(f"staged-{aid}-") for n in ensure_manifest(table_dir)):
+    doc = _load(pathlib.Path(table_dir), required=True)
+    if any(n.startswith(f"staged-{aid}-") for n in doc["files"]):
         return False  # replay of a published batch
-    if aid not in _staged_registry(pathlib.Path(table_dir)):
+    if aid not in doc.get("staged", {}):
         stage_append(spark, table_dir, batch_df, audit_id=aid)
     # a crash mid-audit resumes here on replay
     if read_staged(spark, table_dir, aid).filter(F.col("value") < 0).isEmpty():
@@ -1172,7 +1172,7 @@ def streaming_wap_landing(
     publish is O(1) metadata — the quality gate costs one extra pass
     over NEW data only, never a quarantine copy or a table scan.
     """
-    from ..operators.layout import _staged_registry, ensure_manifest, read_table
+    from ..operators.layout import _load, ensure_manifest, read_table
 
     table_dir = f"{work_dir}/events_table"
     # adopt the (empty) table before the first batch: the landing's
@@ -1199,7 +1199,7 @@ def streaming_wap_landing(
         "event_id bigint, user_id bigint, event_type string, value double",
     )
     _land_wap_batch(spark, table_dir, poison.coalesce(1), "poison")
-    wap_clean = not _staged_registry(pathlib.Path(table_dir))
+    wap_clean = not _load(pathlib.Path(table_dir)).get("staged")
     return (
         read_table(spark, table_dir)
         .groupBy("event_type")

@@ -58,8 +58,11 @@ def test_cell_assignment_matches_reference(spark):
 
 def test_cell_assignment_analyzes_without_centroids(spark):
     # the empty guard carries the non-empty result's element type, so
-    # the ``cell`` field extraction resolves (analysis only: evaluating
-    # element 1 of an empty array raises under ANSI mode)
+    # the ``cell`` field extraction resolves, and evaluating it gives a
+    # NULL cell per vector (element 1 of an empty array is no error)
     emb = table(spark, SF_SMOKE, "embeddings")
     out = emb.select(_cell_assignment(emb, [], "embedding").alias("cell"))
     assert out.schema["cell"].dataType.simpleString() == "int"
+    rows = out.collect()
+    assert len(rows) == emb.count() > 0
+    assert all(r["cell"] is None for r in rows)

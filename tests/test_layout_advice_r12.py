@@ -138,7 +138,7 @@ def test_add_constraint_revalidates_on_rebase(spark, events_table, monkeypatch):
     with pytest.raises(ConstraintViolationError, match="concurrently appended"):
         add_constraint(spark, target, "value_nonneg", "value >= 0")
     monkeypatch.setattr(L, "_commit_manifest", real_commit)
-    assert L._constraints(pathlib.Path(target)) == {}
+    assert L._load(pathlib.Path(target)).get("constraints", {}) == {}
 
     # clean concurrent append (no violation) lets the rebase commit
     ok = spark.createDataFrame(

@@ -311,6 +311,30 @@ def test_compaction_respects_manifest_and_skips_orphans(spark, tmp_path, monkeyp
     assert {r["event_id"] for r in spark.read.parquet(target).collect()} == set(before) - victims
 
 
+def test_compaction_keeps_dv_deletes_and_renames(spark, tmp_path):
+    """The plain directory compact_parquet_dir leaves behind has no
+    manifest to apply DVs or the column map at read time, so the
+    rewrite itself must: DV-deleted rows stay deleted and a renamed
+    column keeps its logical name."""
+    from dbt_slabbing_spark.operators.layout import (
+        append_files,
+        delete_rows,
+        rename_column,
+    )
+
+    target = str(tmp_path / "t")
+    append_files(
+        spark, target, spark.range(1000).selectExpr("id AS k", "id % 10 AS g").repartition(4)
+    )
+    delete_rows(spark, target, "g = 3", mode="dv")
+    rename_column(target, "g", "grp")
+    compact_parquet_dir(spark, target, target_file_bytes=10 * 1024 * 1024)
+    out = spark.read.parquet(target)
+    assert sorted(out.columns) == ["grp", "k"]
+    assert out.count() == 900
+    assert out.filter("grp = 3").count() == 0
+
+
 def test_append_files_schema_evolution_and_cross_generation_delete(spark, tmp_path):
     """append_files commits new files atomically to the manifest; a
     later generation may ADD a column (merge_schema read reconciles,

@@ -65,7 +65,7 @@ def test_commit_cas_rejects_stale_version(tmp_path):
     # nothing: the manifest keeps version 2's file list
     with pytest.raises(ManifestConflictError):
         layout._commit_manifest(p, ["stale.parquet"], expected_version=1)
-    assert layout._read_snapshot(p) == (2, ["a.parquet", "b.parquet"])
+    assert layout._snapshot(layout._load(p)) == (2, ["a.parquet", "b.parquet"])
 
 
 def test_leftover_lock_file_does_not_block(tmp_path):
@@ -106,7 +106,7 @@ def test_interleaved_merge_beats_delete_without_data_loss(
     # loser published nothing and unlinked nothing: every file the
     # winning manifest references exists, and the data is old + merge
     p = pathlib.Path(target)
-    _vers, live = layout._read_snapshot(p)
+    _vers, live = layout._snapshot(layout._load(p))
     assert all((p / n).exists() for n in live)
     ids = {r["event_id"] for r in read_table(spark, target).collect()}
     assert ids == set(before) | {-1}
@@ -163,7 +163,7 @@ def test_compact_table_preserves_content_history_and_loses_conflicts(
         ),
     )
     pre_versions = manifest_versions(target)
-    pre_files = layout._read_snapshot(pathlib.Path(target))[1]
+    pre_files = layout._snapshot(layout._load(pathlib.Path(target)))[1]
 
     stats = compact_table(spark, target)
     assert stats["n_files_before"] == len(pre_files)
@@ -216,9 +216,9 @@ def test_history_is_delta_encoded_and_linear(spark, tmp_path):
     # adoption snapshot; version v holds v-1 single-row files)
     versions = layout.manifest_versions(str(target))
     assert versions == list(range(1, n + 2))
-    assert layout._files_at_version(target, 1) == []
+    assert layout._files_at_version(layout._load(target), 1) == []
     for v in versions[1:]:
-        assert len(layout._files_at_version(target, v)) == v - 1
+        assert len(layout._files_at_version(layout._load(target), v)) == v - 1
         assert read_table(spark, str(target), version=v).count() == v - 1
 
 

@@ -223,7 +223,7 @@ def test_read_changes_append_only_fast_path(spark, tmp_path):
     assert got == [(3, 3.0, "insert"), (4, 4.0, "insert")]
     # fast path scans only the new files: the plan references no
     # v1 file
-    v1_files = set(layout._files_at_version(pathlib.Path(t), v1))
+    v1_files = set(layout._files_at_version(layout._load(pathlib.Path(t)), v1))
     scanned = {
         r[0].rsplit("/", 1)[-1]
         for r in chg.select(F.input_file_name()).distinct().collect()

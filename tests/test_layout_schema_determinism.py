@@ -201,6 +201,7 @@ def test_homogeneous_table_stays_single_footer(spark, tmp_path):
     case: a table whose live files agree on columns keeps
     merge-schema off (no per-file footer union forced)."""
     from dbt_slabbing_spark.operators.layout import (
+        _load,
         _schema_heterogeneous,
         append_files,
     )
@@ -213,7 +214,7 @@ def test_homogeneous_table_stays_single_footer(spark, tmp_path):
         spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double").repartition(3),
     )
     append_files(spark, t, spark.createDataFrame([(4, 40.0)], "k long, v double"))
-    assert _schema_heterogeneous(pathlib.Path(t), __import__("json").loads(
+    assert _schema_heterogeneous(_load(pathlib.Path(t)), __import__("json").loads(
         (pathlib.Path(t) / "_manifest.json").read_text()
     )["files"]) is False
 
@@ -226,6 +227,7 @@ def test_stats_missing_file_forces_merge(spark, tmp_path):
     import pathlib
 
     from dbt_slabbing_spark.operators.layout import (
+        _load,
         _schema_heterogeneous,
         append_files,
     )
@@ -241,4 +243,4 @@ def test_stats_missing_file_forces_merge(spark, tmp_path):
     assert len(live) >= 2
     doc["stats"].pop(live[0], None)
     (p / "_manifest.json").write_text(json.dumps(doc))
-    assert _schema_heterogeneous(p, live) is True
+    assert _schema_heterogeneous(_load(p), live) is True

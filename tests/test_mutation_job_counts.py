@@ -26,6 +26,7 @@ from dbt_slabbing_spark.catalog import table
 from dbt_slabbing_spark.operators.layout import (
     _dv_at_version,
     _live_row_count,
+    _load,
     append_files,
     delete_rows,
     ensure_manifest,
@@ -68,12 +69,12 @@ def test_live_row_count_matches_spark_count(spark, tab):
     p = pathlib.Path(tab)
     live = ensure_manifest(tab)
     # DV-free snapshot
-    assert _live_row_count(p, live, _dv_at_version(p)) == read_table(spark, tab).count()
+    assert _live_row_count(p, _load(p), live, _dv_at_version(_load(p))) == read_table(spark, tab).count()
     # DV-carrying snapshot: kill some positions merge-on-read
     res = delete_rows(spark, tab, "event_type = 'view'", mode="dv")
     assert res["rows_deleted"] > 0
     live = ensure_manifest(tab)
-    meta = _live_row_count(p, live, _dv_at_version(p))
+    meta = _live_row_count(p, _load(p), live, _dv_at_version(_load(p)))
     assert meta == read_table(spark, tab).count() == res["rows_after"]
 
 
@@ -89,16 +90,16 @@ def test_live_row_count_past_the_inline_cap(spark, tab, monkeypatch):
     monkeypatch.setattr(layout, "_DV_INLINE_CAP", 1)
     res = delete_rows(spark, tab, "event_type = 'click'", mode="dv")
     assert res["rows_deleted"] > 1
-    live, dv = ensure_manifest(tab), _dv_at_version(p)
+    live, dv = ensure_manifest(tab), _dv_at_version(_load(p))
     dv_files = sorted({d for lst in dv.values() for d in lst})
     assert layout._dv_dead_set(p, dv_files, live, 1) is None
-    meta = _live_row_count(p, live, dv, spark)
+    meta = _live_row_count(p, _load(p), live, dv, spark)
     assert meta == read_table(spark, tab).count() == res["rows_after"]
     assert res["rows_after"] == res["rows_before"] - res["rows_deleted"]
     with pytest.raises(ValueError, match="dead positions"):
-        _live_row_count(p, live, dv)
+        _live_row_count(p, _load(p), live, dv)
     monkeypatch.setattr(layout, "_DV_INLINE_CAP", 8192)
-    assert _live_row_count(p, live, dv) == meta
+    assert _live_row_count(p, _load(p), live, dv) == meta
 
 
 def test_dv_read_planning_runs_no_job(spark, tab):
@@ -114,7 +115,7 @@ def test_dv_read_planning_runs_no_job(spark, tab):
     ch, n = _jobs(spark, lambda: read_changes(spark, tab, v[-3], v[-1]))
     assert n == 0, f"read_changes over a DV range ran {n} jobs before the fetch"
     p = pathlib.Path(tab)
-    assert df.count() == _live_row_count(p, ensure_manifest(tab), _dv_at_version(p))
+    assert df.count() == _live_row_count(p, _load(p), ensure_manifest(tab), _dv_at_version(_load(p)))
     assert ch.filter(F.col("_change_type") == "delete").count() > 0
 
 
@@ -127,7 +128,7 @@ def test_live_row_count_covers_manifestless_files(spark, tmp_path):
     d = tmp_path / "bare"
     ev.coalesce(1).write.parquet(str(d))
     names = sorted(f.name for f in d.glob("*.parquet"))
-    assert _live_row_count(pathlib.Path(d), names, {}) == ev.count()
+    assert _live_row_count(pathlib.Path(d), {}, names, {}) == ev.count()
 
 
 def test_mutation_job_budgets(spark, tab):
