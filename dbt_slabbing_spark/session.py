@@ -12,6 +12,13 @@ One place to encode the execution-model decisions that matter at scale:
   row-at-a-time pickle.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive-UTC) exactly.
+- Driver heap sized to the machine: ``SPARK_GRAFT_DRIVER_MEM`` verbatim
+  when set, else ``min(48g, half the memory the process can use)``, where
+  that memory is physical RAM or the cgroup v2 ``memory.max`` if lower.
+  The other half holds the JVM's off-heap (Spark's driver memory overhead,
+  10% and at least 384 MiB), the ``local[N]`` Python workers, the driver
+  Python process and the page cache. 48g stays the heap on any machine
+  with 96 GiB or more.
 """
 
 from __future__ import annotations
@@ -22,6 +29,37 @@ import sys
 from pyspark.sql import SparkSession
 
 _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def _cgroup_memory_limit() -> int | None:
+    """The cgroup v2 memory limit in bytes, or None where there is none."""
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            raw = f.read().strip()
+    except OSError:
+        return None
+    return int(raw) if raw.isdigit() else None
+
+
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` by the rule in the module docstring.
+
+    A fixed 48g heap on a smaller machine lets G1 size its young
+    generation against a ceiling the machine cannot back; the JVM then
+    grows past physical memory and the kernel kills it.
+    """
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        usable = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    limit = _cgroup_memory_limit()
+    if limit is not None and limit < usable:
+        usable = limit
+    heap_mb = usable // 2 // (1024 * 1024)
+    return "48g" if heap_mb >= 48 * 1024 else f"{heap_mb}m"
 
 
 def get_spark(app_name: str = "dbt_slabbing_spark", cpus: str | int | None = None) -> SparkSession:
@@ -63,7 +101,9 @@ def get_spark(app_name: str = "dbt_slabbing_spark", cpus: str | int | None = Non
         # -- semantics --------------------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         # -- local-mode memory (driver == only JVM here) ----------------------
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # SPARK_GRAFT_DRIVER_MEM verbatim, else min(48g, half the usable
+        # memory: physical RAM or the cgroup v2 memory.max if lower).
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.checkpointLocation.deleteOnExit", "true")
     )
