@@ -389,7 +389,7 @@ def _commit_manifest(
     p,
     files: list[str],
     expected_version: int | None = None,
-    stats: dict | None = None,
+    added: dict | None = None,
     cdc: dict | None = None,
     replace: dict | None = None,
 ) -> int:
@@ -416,63 +416,57 @@ def _commit_manifest(
     commit is O(versions · files) metadata — the same cost class as a
     Delta checkpoint, and metadata-only (no data file is ever copied).
 
-    ``stats`` carries write-time per-file column min/max
-    (``{file: {col: [lo, hi] | None}}``, from :func:`_stats_for_added`)
-    into the commit record's ``stats`` key. Entries for files still
-    live carry FORWARD from the previous snapshot automatically (data
-    files are immutable, so a carried entry can never go stale), and
-    entries for files leaving the live list drop out — the manifest's
-    stats never grow past O(live files). Readers take them from the
-    document their operation already parsed (:func:`_load`; no extra
-    manifest read) before ever touching a data-file footer; the
-    footer+sidecar path of :func:`file_column_stats` remains only as
-    the fallback for pre-r11 tables and commits that didn't pass stats.
+    ``added`` maps each file the commit makes live to its footer
+    record (``{file: {"rows": n, "stats": {col: [lo, hi] | None}}}``,
+    read once by the writer, see :func:`_footer_record`). The commit
+    stores the records' ``rows`` and ``stats`` under the manifest's
+    ``rows`` and ``stats`` keys; entries of files still live carry
+    FORWARD from the previous snapshot (data files are immutable, so a
+    carried entry can never go stale), and entries of files leaving the
+    live list drop out, so neither key grows past O(live files). A
+    record may hold only one of the two facts, and a file without a
+    record gets no entry: readers fall back per file (a footer read in
+    :func:`_live_row_count` and :func:`file_column_stats`). The commit
+    itself opens no data file: under the lock it only reads and writes
+    ``_manifest.json``. Readers take both facts from the document their
+    operation already parsed (:func:`_load`), so every mutation's
+    ``rows_before`` is a manifest lookup, not a count job (Delta and
+    Iceberg record the same facts in their add-file actions). Row
+    counts are a key of their own: a pseudo column inside the stats
+    records would break :func:`_schema_heterogeneous`'s comparison.
 
     ``replace`` maps keys of :data:`_CARRIED` to their new value; every
     carried key not in it keeps the previous snapshot's value. An empty
-    or ``None`` replacement drops the key.
+    or ``None`` replacement drops the key. The carried keys:
 
-    ``dv`` is the deletion-vector mapping to publish
-    (``{data_file: [dv_file, ...]}``, Delta's DV sidecar contract):
-    positions listed in a file's DV parquets are dead at read time.
-    Like stats, entries carry forward for files still live and drop
-    for files leaving the live list (a rewrite MATERIALIZES its files'
-    deletes, so the replacement files start DV-free); unlike stats the
-    caller passes the COMPLETE new mapping when it changes one (a
-    second DELETE on a file must union, and only the caller knows the
-    union). Each history entry records the displaced snapshot's full
-    DV mapping — O(files-with-deletes) per entry, small by
-    construction — so time travel restores row-level content exactly.
-
-    ``bloom_cfg`` is the bloom-index registry
-    (``{col: {"m": bits, "k": hashes}}`` — see
-    :func:`create_bloom_index`). The
-    BITSETS themselves live in the ``_bloom.json`` SIDECAR, not the
-    manifest: at real sizing (~1 bit/key × keys/file × files) they are
-    megabytes, and an inline copy would make every manifest read —
-    every read_table, every commit — re-parse them (measured: an
-    11 MB manifest put +0.3 s on a point lookup). Blooms are an INDEX,
-    not content: a reader that can't find a file's entry simply scans
-    the file (conservative, still exact), so sidecar staleness is
-    harmless and history entries never record bitsets.
-
-    ``staged`` is the write-audit-publish registry
-    (``{audit_id: [file, ...]}`` — see :func:`stage_append`): files
-    parked in the table dir that NO read sees until their audit
-    passes and :func:`publish_staged` moves them into ``files``.
-    Staged names are not in the live list, so only empty batches are
-    filtered out.
-
-    ``constraints`` is the CHECK-constraint registry
-    (``{name: sql_expr}`` — see :func:`add_constraint`).
-
-    ``clustered`` is the clustering state
-    (``{"by": [col, ...], "files": [...]}`` — which live files were
-    produced by a clustering rewrite, see :func:`compact_table` /
-    :func:`compact_incremental`); its file list carries forward
-    filtered to live (a displaced clustered file is no longer
-    clustered state), and the key drops when no clustered file
-    survives.
+    - ``dv``: the deletion-vector mapping (``{data_file: [dv_file,
+      ...]}``, Delta's DV sidecar contract): positions listed in a
+      file's DV parquets are dead at read time. Entries of files leaving
+      the live list drop (a rewrite MATERIALIZES its files' deletes, so
+      the replacement files start DV-free); a caller that changes one
+      passes the COMPLETE new mapping (a second DELETE on a file must
+      union, and only the caller knows the union). Each history entry
+      records the displaced snapshot's full mapping, O(files with
+      deletes), so time travel restores row-level content exactly.
+    - ``bloom_cfg``: the bloom-index registry (``{col: {"m": bits, "k":
+      hashes}}``, see :func:`create_bloom_index`). The bitsets live in
+      the ``_bloom.json`` sidecar, not the manifest: at real sizing they
+      are megabytes, and an inline copy would make every manifest read
+      re-parse them (an 11 MB manifest put +0.3 s on a point lookup). A
+      reader without a file's entry scans the file, so sidecar
+      staleness is harmless and history entries never record bitsets.
+    - ``staged``: the write-audit-publish registry (``{audit_id: [file,
+      ...]}``, see :func:`stage_append`): files parked in the table dir
+      that NO read sees until :func:`publish_staged` moves them into
+      ``files``; only empty batches are filtered out.
+    - ``constraints``: the CHECK-constraint registry (``{name:
+      sql_expr}``, see :func:`add_constraint`).
+    - ``clustered``: the clustering state (``{"by": [col, ...], "files":
+      [...]}``, see :func:`compact_table`); its file list is filtered to
+      live, and the key drops when no clustered file survives.
+    - ``column_map``, ``dropped_columns``, ``added_columns``: the column
+      mapping state (see :func:`rename_column`, :func:`drop_column`,
+      :func:`add_column`).
     """
     import json
     import os
@@ -526,36 +520,22 @@ def _commit_manifest(
                 "snapshot (nothing was published)"
             )
         live_set = set(files)
-        merged_stats = {
-            n: s for n, s in {**prev.get("stats", {}), **(stats or {})}.items()
-            if n in live_set
-        }
-        # per-file ROW COUNTS (r15, separate key from "stats" — a pseudo
-        # column inside the stats records would break the schema-set
-        # comparison of _schema_heterogeneous): carried forward for
-        # still-live files (data files are immutable), footer-read once
-        # per NEWLY-live file at commit time — so every mutation's
-        # rows_before becomes a manifest lookup (_live_row_count), not a
-        # count() job over the table (Delta/Iceberg record exactly this
-        # in their add-file actions). A file whose footer can't be read
-        # here simply stays uncovered; readers fall back per file.
-        merged_rows = {
-            n: r for n, r in prev.get("rows", {}).items() if n in live_set
-        }
-        uncounted = [n for n in files if n not in merged_rows]
-        if uncounted:
-            import pyarrow.parquet as _pq
 
-            for n in uncounted:
-                try:
-                    merged_rows[n] = int(_pq.ParquetFile(str(p / n)).metadata.num_rows)
-                except Exception:  # footer unreadable now: reader falls back
-                    _log.debug("no row count recorded for %s", p / n, exc_info=True)
+        def facts(key: str) -> dict:
+            """The live files' ``key`` entries: carried forward, then
+            taken from the new records."""
+            out = {n: v for n, v in prev.get(key, {}).items() if n in live_set}
+            out.update(
+                (n, r[key]) for n, r in (added or {}).items()
+                if n in live_set and key in (r or {})
+            )
+            return out
+
         doc = {
             "files": sorted(files),
             "version": cur + 1,
             "history": history,
-            "stats": merged_stats,
+            "stats": facts("stats"),
             # commit wall time: the anchor for time-based retention
             # (VACUUM ... RETAIN n HOURS) and DESCRIBE HISTORY's ts
             # column. Informational for OCC (the version number is the
@@ -563,8 +543,9 @@ def _commit_manifest(
             # snapshots count as older than any horizon.
             "ts": time.time(),
         }
-        if merged_rows:
-            doc["rows"] = merged_rows
+        rows = facts("rows")
+        if rows:
+            doc["rows"] = rows
         for key in _CARRIED:
             val = (replace or {}).get(key, prev.get(key))
             # live-set filters: DV entries and clustering membership
@@ -908,31 +889,30 @@ def _scan_with_dv(
 def _live_row_count(p, doc: dict, live: list[str], dv_map: dict, spark=None) -> int:
     """Live row count of a snapshot WITHOUT a Spark job (r15; guide §7
     driver cost — every mutation paid a full-table ``count()`` for its
-    ``rows_before``): base rows from the per-file ``rows`` record of
-    the parsed manifest ``doc`` (footer-read once per file at commit time; pyarrow footer
-    fallback for files predating the record), minus the snapshot's
-    distinct dead (file, pos) pairs, read on the driver by
+    ``rows_before``): base rows from the per-file ``rows`` entries of
+    the parsed manifest ``doc`` (the writer's footer record, stored by
+    :func:`_commit_manifest`; a file without an entry, such as one
+    predating the record, has its footer read here), minus the
+    snapshot's distinct dead (file, pos) pairs, read on the driver by
     :func:`_dv_dead_set` under the read path's bound,
     :data:`_DV_INLINE_CAP` pairs. Matches ``_scan_with_dv(...).count()``
     exactly: clean files count whole, dirty files subtract the distinct
     positions of the DV parquets they reference. Two cases return that
-    Spark count instead when ``spark`` is given, and raise without it:
-    a file with neither a ``rows`` record nor a readable footer, and a
-    dead set past the cap."""
-    import pyarrow.parquet as pq
-
+    Spark count instead when ``spark`` is given, and raise
+    ``ValueError`` without it: a file with neither a ``rows`` entry nor
+    a readable footer, and a dead set past the cap."""
     rows_rec = doc.get("rows", {})
     base = 0
     for n in live:
         r = rows_rec.get(n)
         if r is None:
-            try:
-                r = int(pq.ParquetFile(str(p / n)).metadata.num_rows)
-            except (OSError, ValueError):
+            rec = _footer_record(p / n)
+            if rec is None:
                 if spark is None:
-                    raise
+                    raise ValueError(f"no row count for {p / n}: pass spark to count it")
                 _log.debug("Spark counts %s: no row count for %s", p, n)
                 return _scan_with_dv(spark, p, live, doc, dv_map).count()
+            r = rec["rows"]
         base += int(r)
     live_set = set(live)
     dv_files = sorted({d for n, lst in dv_map.items() if n in live_set for d in lst})
@@ -971,7 +951,8 @@ def _adopt(p) -> dict:
         # Iceberg's migrate pays), so even adopted tables prune from
         # the manifest alone
         _commit_manifest(
-            p, files, expected_version=0, stats=_stats_for_added(p, files)
+            p, files, expected_version=0,
+            added={n: _footer_record(p / n) for n in files},
         )
     except ManifestConflictError:
         pass  # a concurrent adopter created version 1 first: read theirs
@@ -993,64 +974,52 @@ def _snapshot_for_update(p) -> dict:
 _STATS = "_stats.json"
 
 
-def _footer_all_column_stats(file_path) -> dict:
-    """``{col: [min, max] | None}`` for every leaf column of one
-    parquet file whose footer min/max are JSON-native (int/float/str/
-    bool — timestamp/date/decimal/binary stats can't round-trip the
-    manifest and can't compare against a caller's [lo, hi] anyway).
-    Columns with unusable stats map to ``None`` ("may contain
-    anything"); any footer failure maps the whole file to ``{}``.
-    Called at WRITE time by every mutation, on files the writer just
-    produced — one local footer read per new file, so the stats ride
-    the manifest commit and readers never touch data-file footers
-    (the Iceberg/Delta write-side stats collection)."""
+def _footer_record(path) -> dict | None:
+    """What a table records about the parquet file ``path``, from one
+    read of its footer: ``{"rows": n, "stats": {col: [lo, hi] | None}}``
+    with an entry for every leaf column. A column maps to ``None``
+    ("may contain anything") unless every row group has a min/max and
+    both are JSON-native (int/float/str/bool — timestamp/date/decimal/
+    binary stats can't round-trip the manifest and can't compare
+    against a caller's [lo, hi] anyway). Returns ``None``, logged at
+    debug, when the footer cannot be read.
+
+    The one footer reader for a file's facts: :func:`_write_and_rename`
+    calls it once per file it lands and the writer carries the records
+    to :func:`_commit_manifest` ``added=`` (the Iceberg/Delta
+    write-side stats collection), so readers never touch the footers of
+    engine-written files."""
     import pyarrow.parquet as pq
 
-    out: dict = {}
     try:
-        md = pq.ParquetFile(str(file_path)).metadata
-        for i in range(md.num_columns):
-            col = md.schema.column(i).name
-            lo = hi = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(i).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if (
-                ok
-                and lo is not None
-                and isinstance(lo, (int, float, str, bool))
-                and isinstance(hi, (int, float, str, bool))
-            ):
-                out[col] = [lo, hi]
-            else:
-                out[col] = None
-    except Exception:
-        return {}
-    return out
-
-
-def _stats_for_added(p, names: list[str]) -> dict:
-    """Write-time stats for files a mutation just moved into the table
-    dir: ``{file_name: {col: [min, max] | None}}``, ready for
-    :func:`_commit_manifest`'s ``stats=``."""
-    return {n: _footer_all_column_stats(p / n) for n in names}
+        with pq.ParquetFile(str(path)) as pf:
+            md = pf.metadata
+            stats: dict = {}
+            for i in range(md.num_columns):
+                chunks = [md.row_group(g).column(i).statistics for g in range(md.num_row_groups)]
+                box = None
+                if chunks and all(st is not None and st.has_min_max for st in chunks):
+                    box = [min(st.min for st in chunks), max(st.max for st in chunks)]
+                native = box and all(isinstance(v, (int, float, str, bool)) for v in box)
+                stats[md.schema.column(i).name] = box if native else None
+            return {"rows": int(md.num_rows), "stats": stats}
+    except Exception:  # any unreadable footer: the caller falls back per file
+        _log.debug("no footer record for %s", path, exc_info=True)
+        return None
 
 
 def file_column_stats(path, files: list[str], col: str) -> dict:
     """Per-file (min, max) of ``col`` for each named parquet file.
 
-    Resolution order (r11): (1) the manifest commit's ``stats`` record
-    — written by every mutation at write time (:func:`_commit_manifest`
-    ``stats=``), taken from the parsed manifest, no data-file I/O at
-    all — this is the Iceberg/Delta
-    stats-manifest read path; (2) for files the manifest doesn't cover
-    (pre-r11 tables, externally dropped-in files), the file's own
-    FOOTER (pyarrow, driver-side), cached in a ``_stats.json`` sidecar.
+    Resolution order (r11): (1) the manifest's ``stats`` entries — the
+    footer record each writer read once when it wrote the file
+    (:func:`_footer_record`, committed through :func:`_commit_manifest`
+    ``added=``), taken from the parsed manifest, no data-file I/O at
+    all — this is the Iceberg/Delta stats-manifest read path; (2) for
+    files the manifest doesn't cover (pre-r11 tables, externally
+    dropped-in files, footers unreadable at commit time), the file's
+    own footer record (pyarrow, driver-side), cached in a
+    ``_stats.json`` sidecar.
     Data files are immutable under the copy-on-write contract, so
     neither source can go stale. A file whose stats are unusable for
     the column (all-null chunk, missing column after schema evolution,
@@ -1075,6 +1044,7 @@ def _file_stats(p, doc: dict, files: list[str], col: str) -> dict:
         try:
             cache = json.loads(sidecar.read_text())
         except (OSError, ValueError):
+            _log.debug("stats sidecar %s unreadable: starting empty", sidecar, exc_info=True)
             cache = {}
     col_cache = cache.setdefault(col, {})
     dirty = False
@@ -1090,7 +1060,8 @@ def _file_stats(p, doc: dict, files: list[str], col: str) -> dict:
             continue
         # the footer, under the write path's rules: a footer failure, a
         # missing column or non-JSON-native min/max maps to "no stats"
-        entry = _footer_all_column_stats(p / name).get(col)
+        rec = _footer_record(p / name)
+        entry = rec["stats"].get(col) if rec else None
         out[name] = tuple(entry) if entry else None
         col_cache[name] = entry
         dirty = True
@@ -1102,7 +1073,8 @@ def _file_stats(p, doc: dict, files: list[str], col: str) -> dict:
 
             os.replace(str(tmp), str(sidecar))
         except (OSError, TypeError, ValueError):
-            pass  # TypeError: a non-JSON value slipped in; skip caching
+            # TypeError: a non-JSON value slipped in; skip caching
+            _log.debug("stats sidecar %s not written", sidecar, exc_info=True)
     return out
 
 
@@ -1295,6 +1267,7 @@ def _bloom_sidecar(p) -> dict:
     try:
         return json.loads(side.read_text())
     except (OSError, ValueError):
+        _log.debug("bloom sidecar %s unreadable: no bloom skipping", side, exc_info=True)
         return {}
 
 
@@ -1795,40 +1768,43 @@ def _stage_change_rows(
 
 def _write_and_rename(
     df: DataFrame, staging, dest, prefix: str, skip_empty: bool = False
-) -> list[str]:
+) -> dict:
     """Write ``df`` as parquet into ``staging`` (a directory beside the
     table, so on the same filesystem), then rename each part file into
     ``dest`` as ``{prefix}{i:05d}.parquet`` — the one way every writer
     lands files in a table. Renamed files stay invisible until a
     manifest commit lists them; a crash before it leaves orphans for
-    :func:`vacuum_orphans`. ``skip_empty`` drops part files without
-    rows. The staging directory is removed on success and on failure.
-    Returns the new names, in part order."""
+    :func:`vacuum_orphans`. Each part's footer is read once, here
+    (:func:`_footer_record`). ``skip_empty`` drops part files without
+    rows (a sparse change write emits one per empty scan partition); a
+    part whose footer cannot be read is kept unless it is zero bytes.
+    The staging directory is removed on success and on failure.
+    Returns ``{new_name: footer record}``, in part order."""
     import shutil
 
     try:
         df.write.mode("overwrite").parquet(str(staging))
-        names = []
+        records: dict = {}
         for f in sorted(staging.glob("*.parquet")):
-            if skip_empty and not (f.stat().st_size and _parquet_has_rows(f)):
+            rec = _footer_record(f)
+            if skip_empty and (rec["rows"] == 0 if rec else not f.stat().st_size):
                 continue
-            name = f"{prefix}{len(names):05d}.parquet"
+            name = f"{prefix}{len(records):05d}.parquet"
             f.rename(dest / name)
-            names.append(name)
-        return names
+            records[name] = rec
+        return records
     finally:
         shutil.rmtree(str(staging), ignore_errors=True)
 
 
-def _parquet_has_rows(f) -> bool:
-    """Footer-only row-count probe (drops empty part files a sparse
-    change write can emit — one per empty scan partition)."""
-    import pyarrow.parquet as pq
-
-    try:
-        return pq.ParquetFile(str(f)).metadata.num_rows > 0
-    except OSError:
-        return True
+def _rows_written(spark, p, records: dict) -> int:
+    """Total rows of the files of ``p`` that ``records`` (``{name:
+    footer record}``, from :func:`_write_and_rename`) describe; Spark
+    counts a file whose footer could not be read."""
+    return sum(
+        r["rows"] if r else _read_parquet(spark, p, [n]).count()
+        for n, r in records.items()
+    )
 
 
 def _cdc_range_records(entries: dict, v_from: int, v_to: int) -> list[dict] | None:
@@ -2415,17 +2391,16 @@ def append_files(
     # OCC with blind-append auto-rebase (Delta's AppendOnly resolution):
     # an append removes nothing, so a conflicting commit is resolved by
     # re-attaching our uniquely-named files to the new snapshot
-    added_stats = _stats_for_added(p, added)
 
     def attempt(doc: dict) -> dict:
         vers, live = _snapshot(doc)
         replace = {}
         if cluster_by:
             replace["clustered"] = {
-                "by": list(cluster_by), "files": clustered(doc) + added,
+                "by": list(cluster_by), "files": clustered(doc) + list(added),
             }
         _commit_manifest(
-            p, live + added, expected_version=vers, stats=added_stats,
+            p, live + list(added), expected_version=vers, added=added,
             cdc={"type": "append", "op": "WRITE"}, replace=replace,
         )
         return {"n_files_added": len(added), "n_files_total": len(live) + len(added)}
@@ -2487,7 +2462,7 @@ def _live_physical_columns(p, doc: dict, live: list[str]) -> set:
             try:
                 cols.update(pq.read_schema(str(p / n)).names)
             except OSError:
-                continue
+                _log.debug("columns of %s unknown: schema unreadable", p / n, exc_info=True)
     return cols
 
 
@@ -3027,7 +3002,7 @@ def stage_append(spark, path, df: DataFrame, audit_id: str | None = None) -> dic
         # (our files stay orphans for vacuum; the caller picks a fresh id)
         vers, live = _snapshot(doc)
         reg = registry(doc)
-        reg[audit_id] = added
+        reg[audit_id] = list(added)
         version = _commit_manifest(
             p, live, expected_version=vers,
             cdc={"type": "noop", "op": "WAP STAGE"}, replace={"staged": reg},
@@ -3066,13 +3041,13 @@ def publish_staged(spark, path, audit_id: str) -> dict:
         _enforce_constraints(
             doc, _to_logical(_read_parquet(spark, p, added, merge_schema=True), doc)
         )
-    stats = _stats_for_added(p, added)
+    records = {n: _footer_record(p / n) for n in added}
 
     def attempt(doc: dict) -> dict:
         vers, live = _snapshot(doc)
         reg, files = _without_staged(doc, audit_id)
         version = _commit_manifest(
-            p, live + files, expected_version=vers, stats=stats,
+            p, live + files, expected_version=vers, added=records,
             cdc={"type": "append", "op": "WAP PUBLISH"},
             replace={"staged": reg},
         )
@@ -3127,7 +3102,7 @@ def compact_table(
     a round-robin ``repartition``, the rewrite range-partitions on the
     columns and sorts within files, so each new file covers a TIGHT
     box on the cluster columns — and because the commit records per-
-    file min/max (``stats=``), ``read_table(prune=)`` starts skipping
+    file min/max (``added=``), ``read_table(prune=)`` starts skipping
     most files for selective reads the moment the compaction lands.
     One column gives range clustering; multiple give hierarchical
     range+sort (for genuinely independent dims, pre-compute a
@@ -3197,7 +3172,7 @@ def compact_table(
         df = df.sortWithinPartitions(*cluster_by)
     else:
         df = df.repartition(int(n_files))
-    new_names = _write_and_rename(
+    added = _write_and_rename(
         _to_physical(doc, df), pathlib.Path(str(p) + f".compact-{token}"), p,
         f"compact-{token}-",
     )
@@ -3213,20 +3188,20 @@ def compact_table(
             if prev_clu and prev_clu["by"] == list(cluster_by)
             else []
         )
-        replace["clustered"] = {"by": list(cluster_by), "files": base + new_names}
+        replace["clustered"] = {"by": list(cluster_by), "files": base + list(added)}
     version = _commit_manifest(  # ATOMIC + OCC; an unclustered FULL
         # rewrite displaces every file, so carry-forward drops any
         # previous clustering state automatically
         p,
-        untouched + new_names,
+        untouched + list(added),
         expected_version=vers,
-        stats=_stats_for_added(p, new_names),
+        added=added,
         cdc={"type": "noop", "op": "OPTIMIZE"},
         replace=replace,
     )
     return {
         "n_files_before": len(live),
-        "n_files_after": len(untouched) + len(new_names),
+        "n_files_after": len(untouched) + len(added),
         "n_files_rewritten": len(scope),
         "version": version,
     }
@@ -3417,7 +3392,7 @@ def _drop_stats_entries(p, names: list[str]) -> None:
             tmp.write_text(json.dumps(cache))
             os.replace(str(tmp), str(sidecar))
         except (OSError, ValueError, AttributeError):
-            pass
+            _log.debug("stale entries kept in %s", sidecar, exc_info=True)
 
 
 def prune_history(path, retain_versions: int) -> list[int]:
@@ -3471,7 +3446,7 @@ def _unlink_quiet(f) -> None:
     try:
         f.unlink()
     except OSError:
-        pass
+        _log.debug("%s left for vacuum: unlink failed", f, exc_info=True)
 
 
 # columns a staged changed-row artifact carries beyond the table's own:
@@ -3521,6 +3496,10 @@ def _mutate(
     and ``dv-{token}-00000.parquet``; appended part files without rows
     are dropped, and the appends tagged ``i`` (a merge's inserts) are
     the commit's ``insert_files`` CDC pointer and its ``rows_inserted``.
+    Each new file's footer is read once, as it lands; its record feeds
+    the commit, ``rows_inserted`` and ``rows_after`` (``rows_before``
+    minus the changed rows plus the appended rows), so no footer, DV
+    parquet or count is read again after the writes.
     The staging directory is removed however the call ends. A
     delete/update that changes no row commits nothing. Returns the
     stats named in ``keys`` (plus ``n_dv_files_added`` under dv)."""
@@ -3570,30 +3549,29 @@ def _mutate(
         uris = sorted({r[fcol] for r in per_file})
         affected = sorted({_uri_to_name(u) for u in uris})
         appends, changes = derive(tgt, m)
-        new_names, ins_names, written = [], [], {}
+        # {name: footer record} of every new data file, and per append
+        # tag the records and the schema they were written with
+        added, written = {}, {}
         if cow and affected:
             gone = set(affected)
             kept = _row_images(rewrite(tgt, uris)).repartition(len(affected))
             rtag = "r" if op == "merge" else ""
-            new_names += _write_and_rename(
+            added.update(_write_and_rename(
                 _to_physical(doc, kept), stage / "rewrite", p,
                 f"part-{op}-{token}-{rtag}",
-            )
+            ))
         for df, tag in appends:
             df = _to_physical(doc, df)
-            names = _write_and_rename(
+            written[tag] = (_write_and_rename(
                 df, stage / tag, p, f"part-{op}-{token}-{tag}", skip_empty=True
-            )
-            new_names += names
-            if tag == "i":
-                ins_names = names
-            written[tag] = (names, df.schema)
+            ), df.schema)
+            added.update(written[tag][0])
 
         def read_back(tag: str) -> DataFrame | None:
-            names, schema = written[tag]
-            if not names:
+            records, schema = written[tag]
+            if not records:
                 return None
-            return _to_logical(_read_parquet(spark, p, names, schema=schema), doc)
+            return _to_logical(_read_parquet(spark, p, list(records), schema=schema), doc)
 
         changes = [
             (read_back(df) if isinstance(df, str) else df, ct) for df, ct in changes
@@ -3606,9 +3584,9 @@ def _mutate(
             # one sidecar per mutation (the Delta DV granularity): the DV
             # is O(changed rows) — a change touching half the table is
             # what mode="cow" is for
-            dv_name = _write_and_rename(
+            dv_name = next(iter(_write_and_rename(
                 dead.coalesce(1), stage / "dv", p, f"dv-{token}-"
-            )[0]
+            )))
             new_dv = {n: list(lst) for n, lst in dv_prev.items()}
             for n in affected:
                 new_dv.setdefault(n, []).append(dv_name)
@@ -3617,21 +3595,27 @@ def _mutate(
             "files": _stage_change_rows(p, doc, changes, token),
             "op": op.upper(),
         }
-        if ins_names:
-            cdc["insert_files"] = ins_names
-        files = [n for n in live if n not in gone] + new_names
+        inserted = written.get("i", ({}, None))[0]
+        if inserted:
+            cdc["insert_files"] = list(inserted)
+        files = [n for n in live if n not in gone] + list(added)
+        n_changed = sum(r["count"] for r in per_file)
         n_deleted = sum(r["count"] for r in per_file if r["__action"] in ("D", "X"))
+        # every changed row leaves the table and every appended row joins
+        # it, except that a cow UPDATE writes its images into the rewrite
+        n_left = 0 if cow and op == "update" else n_changed
+        n_appended = sum(_rows_written(spark, p, recs) for recs, _ in written.values())
         st.update(
             rows_deleted=n_deleted,
-            rows_updated=sum(r["count"] for r in per_file) - n_deleted,
-            rows_after=_live_row_count(p, doc, files, new_dv, spark),
+            rows_updated=n_changed - n_deleted,
+            rows_after=rows_before - n_left + n_appended,
             n_files_rewritten=len(gone),
-            n_files_added=len(new_names),
+            n_files_added=len(added),
             n_dv_files_added=int(bool(affected) and not cow),
-            rows_inserted=_live_row_count(p, doc, ins_names, {}, spark),
+            rows_inserted=_rows_written(spark, p, inserted),
         )
         _commit_manifest(
-            p, files, expected_version=vers, stats=_stats_for_added(p, new_names),
+            p, files, expected_version=vers, added=added,
             cdc=cdc, replace=None if cow else {"dv": new_dv},
         )
     finally:
@@ -3787,6 +3771,7 @@ def _broadcast_if_small(spark, df: DataFrame) -> DataFrame:
                 break
         thr = int(raw) * mult
     except Exception:  # py4j / conf-format edge: keep the contract path
+        _log.debug("merge source broadcast: no size estimate", exc_info=True)
         return F.broadcast(df)
     cap = 8 * (thr if thr > 0 else 10 * 1024 * 1024)
     if est >= (1 << 60):
@@ -4142,14 +4127,14 @@ def overwrite_table(spark, path, df: DataFrame) -> dict:
     df = _to_physical(doc, df)
     _reject_dropped_collisions(doc, df)
     token = uuid.uuid4().hex[:12]
-    new_names = _write_and_rename(
+    added = _write_and_rename(
         df, pathlib.Path(str(p) + f".overwrite-{token}"), p, f"overwrite-{token}-"
     )
     version = _commit_manifest(  # ATOMIC + OCC; old files stay for vacuum
         p,
-        new_names,
+        list(added),
         expected_version=vers,
-        stats=_stats_for_added(p, new_names),
+        added=added,
         # commit-time CDC: an overwrite's change set is the WHOLE old
         # snapshot as deletes + the new files as inserts (Delta CDF's
         # overwrite semantics) — recorded as a pointer, served by
@@ -4157,12 +4142,10 @@ def overwrite_table(spark, path, df: DataFrame) -> dict:
         # is the change set's true size, but NO exceptAll shuffle
         cdc={"type": "replace", "op": "OVERWRITE"},
     )
-    # fresh files carry no DVs: count from the footers just committed
-    rows_after = _live_row_count(p, doc, new_names, {})
     return {
         "n_files_before": len(live),
-        "n_files_after": len(new_names),
-        "rows_after": int(rows_after),
+        "n_files_after": len(added),
+        "rows_after": _rows_written(spark, p, added),
         "version": version,
     }
 
@@ -4235,15 +4218,19 @@ def restore_table(path, version: int | None = None, spark=None, timestamp=None) 
                 f"snapshot violates CURRENT CHECK constraints — drop the "
                 f"constraint first if the rollback is intentional ({e})"
             ) from None
-    # files returning to the live list lost their stats entries at the
-    # commit that removed them (stats never outgrow O(live files));
-    # re-collect from footers so the restored table keeps pruning
-    statless = [n for n in files if n not in doc.get("stats", {})]
+    # files returning to the live list lost their stats and rows entries
+    # at the commit that removed them (neither outgrows O(live files));
+    # re-read their footers so the restored table keeps pruning and
+    # counting from the manifest
+    returning = [
+        n for n in files
+        if n not in doc.get("stats", {}) or n not in doc.get("rows", {})
+    ]
     new_version = _commit_manifest(
         p,
         list(files),
         expected_version=vers,
-        stats=_stats_for_added(p, statless) if statless else None,
+        added={n: _footer_record(p / n) for n in returning},
         # commit-time CDC: a restore's change set is the INVERSE of
         # the range it undoes — recorded as a pointer, composed at
         # read time from the undone range's own records (zero change
@@ -4311,7 +4298,11 @@ def clone_table(path, target) -> dict:
         dst,
         live,
         expected_version=0,
-        stats=doc.get("stats", {}),
+        # the source's per-file facts: the files are the same bytes
+        added={
+            n: {k: doc[k][n] for k in ("rows", "stats") if n in doc.get(k, {})}
+            for n in live
+        },
         # staged WAP batches stay with the source table
         replace={k: doc.get(k) for k in _CARRIED if k != "staged"},
     )

@@ -1089,7 +1089,7 @@ def layout_optimize_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame
     moment the whole table is rewritten anyway, so it is free to also
     SORT it -- range-partition + sortWithinPartitions gives each new
     file a tight min/max box, the commit carries those boxes
-    (stats=), and every subsequent selective read prunes from the
+    (added=), and every subsequent selective read prunes from the
     manifest alone. This is Delta's OPTIMIZE ZORDER / Iceberg's
     sort-order rewrite expressed as repartitionByRange, the plan a
     1000-executor cluster wants (the sort is per-file, the partition

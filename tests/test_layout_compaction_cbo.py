@@ -222,7 +222,7 @@ def test_delete_rows_crash_before_manifest_commit_is_invisible(spark, tmp_path, 
 
     real_commit = layout._commit_manifest
 
-    def boom(p, files, expected_version=None, stats=None, **kw):
+    def boom(p, files, expected_version=None, added=None, **kw):
         raise OSError("injected: crash at manifest commit")
 
     monkeypatch.setattr(layout, "_commit_manifest", boom)
@@ -394,7 +394,7 @@ def test_append_files_crash_before_commit_is_invisible(spark, tmp_path, monkeypa
 
     real_commit = layout._commit_manifest
 
-    def boom(p, files, expected_version=None, stats=None, **kw):
+    def boom(p, files, expected_version=None, added=None, **kw):
         raise RuntimeError("crash before manifest commit")
 
     monkeypatch.setattr(layout, "_commit_manifest", boom)

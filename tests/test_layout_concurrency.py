@@ -47,11 +47,11 @@ def _arm_interloper(monkeypatch, interlope):
     real = layout._commit_manifest
     state = {"armed": True}
 
-    def wrapper(p, files, expected_version=None, stats=None, **kw):
+    def wrapper(p, files, expected_version=None, **kw):
         if state["armed"]:
             state["armed"] = False
             interlope()
-        return real(p, files, expected_version=expected_version, stats=stats, **kw)
+        return real(p, files, expected_version=expected_version, **kw)
 
     monkeypatch.setattr(layout, "_commit_manifest", wrapper)
 

@@ -13,9 +13,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from dbt_slabbing_spark.operators.layout import (
-    _commit_manifest,
     _footer_schema,
+    _load,
     _read_parquet,
+    ensure_manifest,
 )
 
 # one column of every type the parity promise covers, as NOT NULL
@@ -89,7 +90,12 @@ def test_disagreeing_merged_footers_keep_spark_inference(spark, tmp_path, caplog
 
 
 def test_commit_logs_an_unreadable_footer(tmp_path, caplog):
+    # the adoption commit's one footer reader logs once, and the commit
+    # records no facts for the file, so readers fall back per file
     (tmp_path / "bad.parquet").write_bytes(b"not parquet")
     with caplog.at_level(logging.DEBUG, logger="dbt_slabbing_spark"):
-        _commit_manifest(tmp_path, ["bad.parquet"])
-    assert "no row count recorded" in caplog.text
+        assert ensure_manifest(tmp_path) == ["bad.parquet"]
+    assert caplog.text.count("no footer record") == 1
+    doc = _load(tmp_path)
+    assert "bad.parquet" not in doc["stats"]
+    assert "bad.parquet" not in doc.get("rows", {})

@@ -180,7 +180,7 @@ def test_merge_crash_before_commit_is_invisible(spark, tmp_path, monkeypatch):
     )
     real_commit = layout._commit_manifest
 
-    def boom(p, files, expected_version=None, stats=None, **kw):
+    def boom(p, files, expected_version=None, added=None, **kw):
         raise OSError("injected: crash at manifest commit")
 
     monkeypatch.setattr(layout, "_commit_manifest", boom)

@@ -10,12 +10,16 @@ mutation, so a future change can't quietly re-introduce per-commit
 table scans (measured since every scan takes its schema from the file
 footers and reads its DV dead set on the driver: delete_cow 6,
 update_cow 6, update_dv 6, insert-only merge_cow 10, delete_dv(no-match)
-0 — budgets leave one job of AQE headroom), and (c) that building a read
-of a DV-carrying snapshot runs no job before the fetch.
+0 — budgets leave one job of AQE headroom), (c) that building a read
+of a DV-carrying snapshot runs no job before the fetch, and (d) a
+footer-open budget: each file an operation writes has its footer read
+once, and the commit reads none.
 """
 
 from __future__ import annotations
 
+import collections
+import os
 import shutil
 import tempfile
 
@@ -24,14 +28,17 @@ from pyspark.sql import functions as F
 
 from dbt_slabbing_spark.catalog import table
 from dbt_slabbing_spark.operators.layout import (
+    _commit_manifest,
     _dv_at_version,
     _live_row_count,
     _load,
     append_files,
+    compact_table,
     delete_rows,
     ensure_manifest,
     manifest_versions,
     merge_rows,
+    overwrite_table,
     read_changes,
     read_table,
     update_rows,
@@ -234,3 +241,87 @@ def test_no_match_dv_delete_after_clause_merge_runs_no_job(spark, tab):
     )
     assert res["rows_deleted"] == 0
     assert n == 0, f"no-match DV delete ran {n} jobs (expected 0)"
+
+
+def _count_footer_opens(monkeypatch) -> collections.Counter:
+    """Count pyarrow footer opens per file. An existing file is keyed by
+    what a rename keeps (device, inode, mtime, size), so a staged part
+    and the table file it is renamed to count as one file; a missing
+    one by its path."""
+    import pyarrow.parquet as pq
+
+    opens: collections.Counter = collections.Counter()
+
+    def counting(real):
+        def wrapper(source, *a, **kw):
+            try:
+                s = os.stat(source)
+                opens[(s.st_dev, s.st_ino, s.st_mtime_ns, s.st_size)] += 1
+            except (OSError, TypeError):
+                opens[str(source)] += 1
+            return real(source, *a, **kw)
+
+        return wrapper
+
+    for name in ("ParquetFile", "read_metadata", "read_schema"):
+        monkeypatch.setattr(pq, name, counting(getattr(pq, name)))
+    return opens
+
+
+def _table_files(t) -> dict:
+    import pathlib
+
+    out = {}
+    for f in pathlib.Path(t).rglob("*.parquet"):
+        s = f.stat()
+        out[str(f)] = (s.st_dev, s.st_ino, s.st_mtime_ns, s.st_size)
+    return out
+
+
+def test_each_written_file_is_opened_once(spark, tab, monkeypatch):
+    src = _upsert_source(spark)
+    ops = [
+        ("append", lambda: append_files(spark, tab, src.coalesce(2))),
+        ("merge_cow", lambda: merge_rows(spark, tab, src, on="event_id", mode="cow")),
+        ("delete_dv", lambda: delete_rows(spark, tab, "event_type = 'view'", mode="dv")),
+        (
+            "update_cow",
+            lambda: update_rows(spark, tab, "event_type = 'error'", {"value": "value + 1.0"}),
+        ),
+        (
+            "update_dv",
+            lambda: update_rows(
+                spark, tab, "event_type = 'click'", {"value": "value * 2.0"}, mode="dv"
+            ),
+        ),
+        ("merge_dv", lambda: merge_rows(spark, tab, src, on="event_id", mode="dv")),
+        ("compact", lambda: compact_table(spark, tab)),
+        ("overwrite", lambda: overwrite_table(spark, tab, read_table(spark, tab))),
+    ]
+    wrong = {}
+    for label, run in ops:
+        before = _table_files(tab)
+        opens = _count_footer_opens(monkeypatch)
+        run()
+        monkeypatch.undo()
+        written = {f: k for f, k in _table_files(tab).items() if f not in before}
+        assert written, f"{label} wrote no file"
+        wrong.update(
+            {f"{label}: {f}": opens[k] for f, k in written.items() if opens[k] != 1}
+        )
+    assert not wrong, f"written files not opened exactly once: {wrong}"
+
+
+def test_commit_opens_no_data_file(tmp_path, monkeypatch):
+    # the records are the commit's only source of per-file facts: these
+    # files do not even exist
+    opens = _count_footer_opens(monkeypatch)
+    rec = {"rows": 3, "stats": {"k": [1, 3], "s": None}}
+    _commit_manifest(
+        tmp_path, ["a.parquet", "b.parquet"], expected_version=0,
+        added={"a.parquet": rec, "b.parquet": None},
+    )
+    doc = _load(tmp_path)
+    assert doc["rows"] == {"a.parquet": 3}
+    assert doc["stats"] == {"a.parquet": rec["stats"]}
+    assert not opens

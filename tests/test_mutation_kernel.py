@@ -5,8 +5,8 @@ staging directory beside the table and, for MERGE, a cached source.
 These tests force a failure between staging and the commit, and check
 that each (op, mode) pair releases both and publishes nothing. They
 also pin each pair's returned stats key set and its `rows_after`
-against a real count, and the row-count fallback for a file whose
-footer cannot be read.
+against a real count, with the DV inline cap at its default and at 1,
+and the row-count fallback for a file whose footer cannot be read.
 """
 
 from __future__ import annotations
@@ -113,15 +113,28 @@ def test_constraint_rejected_merge_releases_source(spark, target, mode):
     _assert_released(spark, target, before)
 
 
-@pytest.mark.parametrize("mode", ["cow", "dv"])
-@pytest.mark.parametrize("op", list(OPS))
-def test_success_stats(spark, target, op, mode):
+def _check_success_stats(spark, target, op, mode):
     spark.catalog.clearCache()
     st = OPS[op](spark, target, mode)
     assert set(st) == KEYS[op] | ({"n_dv_files_added"} if mode == "dv" else set())
     assert st["rows_after"] == read_table(spark, target).count()
     assert _siblings(target) == []
     assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+@pytest.mark.parametrize("op", list(OPS))
+def test_success_stats(spark, target, op, mode):
+    _check_success_stats(spark, target, op, mode)
+
+
+@pytest.mark.parametrize("mode", ["cow", "dv"])
+@pytest.mark.parametrize("op", list(OPS))
+def test_success_stats_past_the_dv_cap(spark, target, monkeypatch, op, mode):
+    # every dead set past the DV inline cap: the scan falls back to the
+    # anti-join, and rows_after must still equal the real count
+    monkeypatch.setattr(L, "_DV_INLINE_CAP", 1)
+    _check_success_stats(spark, target, op, mode)
 
 
 @pytest.mark.parametrize("mode", ["cow", "dv"])
