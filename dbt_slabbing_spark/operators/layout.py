@@ -425,8 +425,8 @@ def _commit_manifest(
     carried entry can never go stale), and entries of files leaving the
     live list drop out, so neither key grows past O(live files). A
     record may hold only one of the two facts, and a file without a
-    record gets no entry: readers fall back per file (a footer read in
-    :func:`_live_row_count` and :func:`file_column_stats`). The commit
+    record gets no entry: readers fall back per file to its footer
+    (:func:`_live_row_count`, :func:`_column_boxes`). The commit
     itself opens no data file: under the lock it only reads and writes
     ``_manifest.json``. Readers take both facts from the document their
     operation already parsed (:func:`_load`), so every mutation's
@@ -752,6 +752,16 @@ def _dv_dead_set(p, dv_files: list[str], dirty, cap: int) -> set | None:
     return dead
 
 
+def _live_dead_set(p, live: list[str], dv_map: dict) -> set | None:
+    """:func:`_dv_dead_set` of every DV parquet that ``dv_map`` gives the
+    files ``live``, under :data:`_DV_INLINE_CAP`; an empty set, with no
+    file opened, when none of them carries one."""
+    dirty = [n for n in live if dv_map.get(n)]
+    return _dv_dead_set(
+        p, sorted({d for n in dirty for d in dv_map[n]}), dirty, _DV_INLINE_CAP
+    )
+
+
 def _scan_with_dv(
     spark,
     p,
@@ -761,6 +771,7 @@ def _scan_with_dv(
     merge_schema: bool = True,
     keep_file_col: bool = False,
     keep_pos_col: bool = False,
+    dead: set | None = None,
 ) -> DataFrame:
     """Scan ``live`` data files with their deletion vectors applied —
     the ONE read path every manifest consumer (read_table, DELETE,
@@ -784,7 +795,9 @@ def _scan_with_dv(
 
     Building the frame runs no Spark job when the footers record the
     scan schema (:func:`_read_parquet`) and the dead set is within
-    :data:`_DV_INLINE_CAP`."""
+    :data:`_DV_INLINE_CAP`. ``dead`` is a dead set the caller already
+    read for a superset of ``live`` (:func:`_live_dead_set`); without
+    one the scan reads its own."""
     # the logical schema of a manifest table is TABLE metadata, not a
     # footer-sampling accident: when live files may disagree on
     # columns (schema-evolved table), force the merged read so the
@@ -794,12 +807,9 @@ def _scan_with_dv(
     # cheap single-footer schema.
     if not merge_schema and _schema_heterogeneous(doc, live):
         merge_schema = True
-    live_set = set(live)
-    dv_files = sorted(
-        {d for n, lst in dv_map.items() if n in live_set for d in lst}
-    )
+    dirty = [n for n in live if dv_map.get(n)]
     df = _read_parquet(spark, p, live, merge_schema)
-    if not dv_files and not keep_pos_col:
+    if not dirty and not keep_pos_col:
         if keep_file_col:
             df = df.withColumn("_file", F.input_file_name())
         return _to_logical(df, doc)
@@ -824,7 +834,7 @@ def _scan_with_dv(
         + (["_file"] if keep_file_col else [])
         + (["__dv_name", "__dv_pos"] if keep_pos_col else [])
     )
-    if not dv_files:
+    if not dirty:
         return _to_logical(_scan(live).select(*keep), doc)
     # the anti-join is paid ONLY by files that actually carry a DV —
     # clean files scan plain, exactly Delta's per-file DV application;
@@ -834,7 +844,6 @@ def _scan_with_dv(
     # so no per-row path-string projection or string join key ever
     # touches the scan; plan size is O(dirty files), bounded by the
     # OPTIMIZE cadence that materializes DVs away.
-    dirty = [n for n in live if dv_map.get(n)]
     clean = [n for n in live if not dv_map.get(n)]
     # small DVs (the targeted-delete norm — big deletes take
     # mode="cow") inline as a NOT-IN literal filter, which stays inside
@@ -842,7 +851,11 @@ def _scan_with_dv(
     # dirty file is read on the driver, with no Spark job. Only a
     # snapshot whose TOTAL dead-position count exceeds the cap pays the
     # broadcast anti-join (measured 0.5 s per 2.5M-row file).
-    dead = _dv_dead_set(p, dv_files, dirty, _DV_INLINE_CAP)
+    if dead is None:
+        dead = _live_dead_set(p, live, dv_map)
+    else:
+        in_scan = set(dirty)
+        dead = {fp for fp in dead if fp[0] in in_scan}
     parts = []
     if dead is not None:
         # ONE multi-file scan over every dirty file (a per-file union
@@ -860,7 +873,7 @@ def _scan_with_dv(
         # practice by the OPTIMIZE cadence that materializes DVs):
         # per-file broadcast anti-joins on the long position key
         dv_union = spark.read.schema(_DV_SCHEMA).parquet(
-            *[str(p / d) for d in dv_files]
+            *[str(p / d) for d in sorted({d for n in dirty for d in dv_map[n]})]
         )
         for n in dirty:
             dead_pos = (
@@ -886,7 +899,9 @@ def _scan_with_dv(
     return _to_logical(out, doc)
 
 
-def _live_row_count(p, doc: dict, live: list[str], dv_map: dict, spark=None) -> int:
+def _live_row_count(
+    p, doc: dict, live: list[str], dv_map: dict, spark=None, dead: set | None = None
+) -> int:
     """Live row count of a snapshot WITHOUT a Spark job (r15; guide §7
     driver cost — every mutation paid a full-table ``count()`` for its
     ``rows_before``): base rows from the per-file ``rows`` entries of
@@ -900,7 +915,9 @@ def _live_row_count(p, doc: dict, live: list[str], dv_map: dict, spark=None) -> 
     positions of the DV parquets they reference. Two cases return that
     Spark count instead when ``spark`` is given, and raise
     ``ValueError`` without it: a file with neither a ``rows`` entry nor
-    a readable footer, and a dead set past the cap."""
+    a readable footer, and a dead set past the cap. ``dead`` is the
+    snapshot's dead set when the caller already read it
+    (:func:`_live_dead_set`)."""
     rows_rec = doc.get("rows", {})
     base = 0
     for n in live:
@@ -914,11 +931,8 @@ def _live_row_count(p, doc: dict, live: list[str], dv_map: dict, spark=None) -> 
                 return _scan_with_dv(spark, p, live, doc, dv_map).count()
             r = rec["rows"]
         base += int(r)
-    live_set = set(live)
-    dv_files = sorted({d for n, lst in dv_map.items() if n in live_set for d in lst})
-    if not dv_files:
-        return base
-    dead = _dv_dead_set(p, dv_files, [n for n in live if dv_map.get(n)], _DV_INLINE_CAP)
+    if dead is None:
+        dead = _live_dead_set(p, live, dv_map)
     if dead is not None:
         return base - len(dead)
     if spark is None:
@@ -971,9 +985,6 @@ def _snapshot_for_update(p) -> dict:
     return _adopt(p)
 
 
-_STATS = "_stats.json"
-
-
 def _footer_record(path) -> dict | None:
     """What a table records about the parquet file ``path``, from one
     read of its footer: ``{"rows": n, "stats": {col: [lo, hi] | None}}``
@@ -1009,82 +1020,48 @@ def _footer_record(path) -> dict | None:
 
 
 def file_column_stats(path, files: list[str], col: str) -> dict:
-    """Per-file (min, max) of ``col`` for each named parquet file.
-
-    Resolution order (r11): (1) the manifest's ``stats`` entries — the
-    footer record each writer read once when it wrote the file
-    (:func:`_footer_record`, committed through :func:`_commit_manifest`
-    ``added=``), taken from the parsed manifest, no data-file I/O at
-    all — this is the Iceberg/Delta stats-manifest read path; (2) for
-    files the manifest doesn't cover (pre-r11 tables, externally
-    dropped-in files, footers unreadable at commit time), the file's
-    own footer record (pyarrow, driver-side), cached in a
-    ``_stats.json`` sidecar.
-    Data files are immutable under the copy-on-write contract, so
-    neither source can go stale. A file whose stats are unusable for
-    the column (all-null chunk, missing column after schema evolution,
-    non-JSON-native type) maps to ``None`` — callers must treat that
-    as "may contain anything".
+    """Per-file (min, max) of ``col`` for each named parquet file: the
+    manifest's ``stats`` entry — the footer record the writer read once
+    when it wrote the file (:func:`_footer_record`, committed through
+    :func:`_commit_manifest` ``added=``) — else, for a file the
+    manifest has no entry for, its own footer record
+    (:func:`_column_boxes`). A file whose stats are unusable for the
+    column (all-null chunk, missing column after schema evolution,
+    non-JSON-native type, unreadable footer) maps to ``None`` — callers
+    must treat that as "may contain anything".
 
     Returns ``{file_name: (min, max) | None}``."""
     import pathlib
 
     p = pathlib.Path(str(path))
-    return _file_stats(p, _load(p), files, col)
+    boxes = _column_boxes(p, _load(p), files)
+    return {n: tuple(b[col]) if b.get(col) else None for n, b in boxes.items()}
 
 
-def _file_stats(p, doc: dict, files: list[str], col: str) -> dict:
-    """:func:`file_column_stats` against the parsed manifest ``doc``."""
-    import json
-
-    manifest_stats = doc.get("stats", {})
-    sidecar = p / _STATS
-    cache: dict = {}
-    if sidecar.exists():
-        try:
-            cache = json.loads(sidecar.read_text())
-        except (OSError, ValueError):
-            _log.debug("stats sidecar %s unreadable: starting empty", sidecar, exc_info=True)
-            cache = {}
-    col_cache = cache.setdefault(col, {})
-    dirty = False
-    out: dict = {}
-    for name in files:
-        entry = manifest_stats.get(name)
-        if entry is not None and col in entry:
-            st = entry[col]
-            out[name] = tuple(st) if st else None
-            continue
-        if name in col_cache:
-            out[name] = tuple(col_cache[name]) if col_cache[name] else None
-            continue
-        # the footer, under the write path's rules: a footer failure, a
-        # missing column or non-JSON-native min/max maps to "no stats"
-        rec = _footer_record(p / name)
-        entry = rec["stats"].get(col) if rec else None
-        out[name] = tuple(entry) if entry else None
-        col_cache[name] = entry
-        dirty = True
-    if dirty:
-        try:  # best-effort cache: losing it only costs a re-read
-            tmp = p / (_STATS + ".tmp")
-            tmp.write_text(json.dumps(cache))
-            import os
-
-            os.replace(str(tmp), str(sidecar))
-        except (OSError, TypeError, ValueError):
-            # TypeError: a non-JSON value slipped in; skip caching
-            _log.debug("stats sidecar %s not written", sidecar, exc_info=True)
+def _column_boxes(p, doc: dict, files: list[str]) -> dict:
+    """``{file: {physical column: [min, max] | None}}`` for ``files``:
+    each file's ``stats`` entry in the parsed manifest ``doc``, else its
+    footer record (one read; ``{}`` when the footer is unreadable).
+    Data files are immutable, so neither source can go stale."""
+    stats = doc.get("stats", {})
+    out = {}
+    for n in files:
+        rec = stats.get(n)
+        if rec is None:
+            foot = _footer_record(p / n)
+            rec = foot["stats"] if foot else {}
+        out[n] = rec
     return out
 
 
 def prune_file_list(path, files: list[str], col: str, lo, hi) -> list[str]:
     """Files from ``files`` that MAY contain rows with ``col`` in
-    [lo, hi] (inclusive), by footer min/max overlap — the file-level
-    skipping a clustered layout (write_hilbert_clustered /
+    [lo, hi] (inclusive), by min/max overlap (:func:`_may_hold`) — the
+    file-level skipping a clustered layout (write_hilbert_clustered /
     write_zordered / repartitionByRange writers) exists to enable.
-    Files without usable stats are kept (conservative). Distinct from
-    Spark's own row-group pruning: skipped files never enter the plan
+    Files without usable stats, or with stats of another type than the
+    bounds, are kept (conservative). Distinct from Spark's own
+    row-group pruning: skipped files never enter the plan
     at all — no tasks, no footer reads on executors, no listing
     amplification. ``col`` is a LOGICAL name: stats are keyed by the
     frozen physical footer names, so a renamed column translates
@@ -1092,30 +1069,84 @@ def prune_file_list(path, files: list[str], col: str, lo, hi) -> list[str]:
     import pathlib
 
     p = pathlib.Path(str(path))
-    return _prune_files(p, _load(p), files, col, lo, hi)
+    return _may_hold(p, _load(p), files, [(col, ">=", lo), (col, "<=", hi)])
 
 
-def _prune_files(p, doc: dict, files: list[str], col: str, lo, hi) -> list[str]:
-    """:func:`prune_file_list` against the parsed manifest ``doc``."""
-    stats = _file_stats(p, doc, files, _phys_col(doc, col))
-    keep = []
-    for name in files:
-        st = stats.get(name)
-        if st is None or not (st[1] < lo or st[0] > hi):
-            keep.append(name)
+def _may_hold(p, doc: dict, files: list[str], conjuncts) -> list[str]:
+    """The files of ``files`` that MAY hold a row satisfying every
+    ``(logical col, op, literal)`` conjunct, ``op`` one of ``= < <= >
+    >=``: the one file-skipping rule of reads (``prune=``, ``point=``),
+    DELETE, UPDATE, MERGE and ``OPTIMIZE WHERE`` (Delta's data
+    skipping). Skipped files are neither scanned nor rewritten, so at
+    100 TB a day-targeted DELETE on a clustered table scans O(day), not
+    O(table).
+
+    A file drops only when its min/max (:func:`_column_boxes`) proves a
+    conjunct false for every row, or when its bloom bitset
+    (:func:`create_bloom_index`) proves an ``=`` value absent. It stays
+    when it has no usable stats, or when the literal is not
+    int/float/str or is a different type from the stats. The bitsets
+    hash Spark's string form of each value, which is ``str(literal)``
+    only for an int or str literal on a column whose stats have that
+    very type (``3.0`` probes "3.0" where an int column hashed "3"), so
+    only such files are probed. A kept subset whose physical columns
+    differ from those of ``files`` (schema evolution) returns
+    ``files``: a predicate on a column that only the skipped files
+    carry would not resolve."""
+    if not conjuncts or not files:
+        return list(files)
+    boxes = _column_boxes(p, doc, files)
+
+    def refuted(box, op: str, lit) -> bool:
+        kind = str if isinstance(lit, str) else (int, float)
+        if not box or not all(isinstance(v, kind) for v in (lit, *box)):
+            return False
+        lo, hi = box
+        return (
+            (op == "=" and (hi < lit or lo > lit))
+            or (op == "<" and lo >= lit)
+            or (op == "<=" and lo > lit)
+            or (op == ">" and hi <= lit)
+            or (op == ">=" and hi < lit)
+        )
+
+    phys = [(col, _phys_col(doc, col), op, lit) for col, op, lit in conjuncts]
+    keep = [
+        n for n in files
+        if not any(refuted(boxes[n].get(c), op, lit) for _, c, op, lit in phys)
+    ]
+    for col, c, op, lit in phys:
+        probe = [
+            n for n in keep
+            if op == "=" and type(lit) in (int, str) and boxes[n].get(c)
+            and all(type(v) is type(lit) for v in boxes[n][c])
+        ]
+        if probe:
+            miss = set(probe) - set(_bloom_prune(p, doc, probe, col, lit))
+            keep = [n for n in keep if n not in miss]
+    if keep and len(keep) < len(files):
+        def columns(names: list[str]) -> set:
+            return set().union(*(boxes[n] for n in names))
+
+        if columns(keep) != columns(files):
+            return list(files)
     return keep
 
 
-def _predicate_conjuncts(pred: str) -> list[tuple[str, str, object]] | None:
+def _predicate_conjuncts(pred) -> list[tuple[str, str, object]] | None:
     """Conservative ``(col, op, literal)`` conjuncts derivable from a
-    predicate STRING for file-level pruning: top-level AND conjuncts
-    of the forms ``col <op> lit`` / ``lit <op> col`` with ``op`` in
-    {=, <, <=, >, >=} and a numeric or single-quoted-string literal.
-    Returns None (derive nothing) when the predicate contains
-    top-level OR / NOT / BETWEEN or unbalanced quoting — soundness
-    over coverage: a conjunct we can't read contributes no pruning,
-    and a structure we can't read disables pruning entirely."""
+    predicate STRING for file-level pruning (:func:`_may_hold`):
+    top-level AND conjuncts of the forms ``col <op> lit`` / ``lit <op>
+    col`` with ``op`` in {=, <, <=, >, >=} and a numeric or
+    single-quoted-string literal. Returns None (derive nothing) when
+    the predicate contains top-level OR / NOT / BETWEEN or unbalanced
+    quoting, and ``[]`` for a Column predicate — soundness over
+    coverage: a conjunct we can't read contributes no pruning, and a
+    structure we can't read disables pruning entirely."""
     import re as _re
+
+    if not isinstance(pred, str):
+        return []
 
     # split on top-level AND, bail on top-level OR/NOT/BETWEEN
     parts, buf, depth, quote = [], [], 0, None
@@ -1190,62 +1221,6 @@ def _predicate_conjuncts(pred: str) -> list[tuple[str, str, object]] | None:
     return out
 
 
-def _candidate_files(p, doc: dict, files: list[str], predicate) -> list[str]:
-    """Files that MAY hold rows satisfying ``predicate`` — the
-    mutation-scan twin of :func:`prune_file_list` (Delta's DELETE/
-    UPDATE/MERGE file pruning): a file is skipped only when a derived
-    ``col <op> literal`` conjunct is provably FALSE for its whole
-    min/max range, so skipped files can hold NO matching row — they
-    are neither scanned nor rewritten. At 100 TB this is what turns a
-    day-targeted DELETE on a clustered table from an O(table) scan
-    into an O(day) one. Column-object predicates and shapes the
-    conservative parser can't read prune nothing (full candidate
-    list)."""
-    if not isinstance(predicate, str):
-        return list(files)
-    conjs = _predicate_conjuncts(predicate)
-    if not conjs:
-        return list(files)
-    keep = list(files)
-    for col, op, lit in conjs:
-        stats = _file_stats(p, doc, keep, _phys_col(doc, col))
-        nxt = []
-        for name in keep:
-            st = stats.get(name)
-            if st is None or st[0] is None:
-                nxt.append(name)
-                continue
-            lo, hi = st
-            if isinstance(lit, str) != isinstance(lo, str):
-                nxt.append(name)  # incomparable types: keep
-                continue
-            false_everywhere = (
-                (op == "=" and (hi < lit or lo > lit))
-                or (op == "<" and lo >= lit)
-                or (op == "<=" and lo > lit)
-                or (op == ">" and hi <= lit)
-                or (op == ">=" and hi < lit)
-            )
-            if not false_everywhere:
-                nxt.append(name)
-        keep = nxt
-    # equality conjuncts additionally probe the bloom index when one
-    # exists (driver-side, microseconds, no-op otherwise): range stats
-    # cut by clustered dims, blooms cut by high-cardinality lookup
-    # keys — a point DELETE on a bloom-indexed key scans O(probe hits)
-    for col, op, lit in conjs:
-        if op == "=":
-            keep = _bloom_prune(p, doc, keep, col, lit)
-    # schema-evolution guard: a pruned subset must still expose every
-    # column the full live set does, or a predicate referencing a
-    # column that lives only in pruned-away files fails to resolve —
-    # in that case prune nothing (sound, just not faster)
-    if keep and len(keep) < len(files):
-        if _live_physical_columns(p, doc, keep) != _live_physical_columns(p, doc, files):
-            return list(files)
-    return keep
-
-
 _BLOOM = "_bloom.json"
 
 #: Max distinct dead positions, summed over every dirty file of a scan,
@@ -1269,6 +1244,17 @@ def _bloom_sidecar(p) -> dict:
     except (OSError, ValueError):
         _log.debug("bloom sidecar %s unreadable: no bloom skipping", side, exc_info=True)
         return {}
+
+
+def _write_bloom_sidecar(p, side: dict) -> None:
+    """Replace the ``_bloom.json`` sidecar with ``side`` atomically
+    (write a temporary file, then rename it over the sidecar)."""
+    import json
+    import os
+
+    tmp = p / (_BLOOM + ".tmp")
+    tmp.write_text(json.dumps(side))
+    os.replace(str(tmp), str(p / _BLOOM))
 
 
 def _bloom_positions(value_col: Column, m: int, k: int) -> list[Column]:
@@ -1429,7 +1415,6 @@ def create_bloom_index(
 
     NULLs never enter a bloom (SQL equality never matches NULL).
     Returns ``{"n_files_indexed", "n_files_total", "version"}``."""
-    import json
     import pathlib
 
     if m_bits % 8 or m_bits <= 0:
@@ -1502,11 +1487,7 @@ def create_bloom_index(
     try:
         side = _bloom_sidecar(p)
         side.setdefault(col, {}).update(entries)
-        tmp = p / (_BLOOM + ".tmp")
-        tmp.write_text(json.dumps(side))
-        import os
-
-        os.replace(str(tmp), str(p / _BLOOM))
+        _write_bloom_sidecar(p, side)
     finally:
         _manifest_unlock(p, fd)
 
@@ -1547,8 +1528,8 @@ def prune_files_bloom(spark, path, files: list[str], col: str, value) -> list[st
 def _bloom_prune(p, doc: dict, files: list[str], col: str, value) -> list[str]:
     """:func:`prune_files_bloom` against the parsed manifest ``doc``."""
     cfg = doc.get("bloom_cfg", {}).get(col)
-    entries = _bloom_sidecar(p).get(col, {})
-    if not cfg or not entries:
+    entries = _bloom_sidecar(p).get(col, {}) if cfg else {}
+    if not entries:
         return files
     positions = _probe_positions_py(value, cfg["m"], cfg["k"])
     return [
@@ -1618,8 +1599,8 @@ def read_table(
 
     ``prune=(col, lo, hi)`` — or a LIST of such triples for
     multi-column skipping — additionally drops live files whose
-    committed min/max (or footer, for pre-r11 tables) proves they hold
-    no row with ``col`` in [lo, hi] (:func:`prune_file_list`) —
+    min/max proves they hold no row with ``col`` in [lo, hi]
+    (:func:`_may_hold`, the rule of :func:`prune_file_list`) —
     file-level skipping BEFORE the plan. Multiple triples intersect
     (a file survives only if EVERY range may match), which is what
     makes the Hilbert/z-order writers pay off: their whole purpose is
@@ -1630,11 +1611,11 @@ def read_table(
     to the unpruned filtered read.
 
     ``point=(col, value)`` — or a LIST of such pairs — skips files
-    whose bloom-index bitset proves ``col = value`` matches no row
-    (:func:`prune_files_bloom`, built by :func:`create_bloom_index`).
-    Same superset guarantee as ``prune`` and composable with it: range
-    stats cut by the CLUSTERED dims, blooms cut by high-cardinality
-    lookup keys the layout isn't sorted on.
+    whose min/max or bloom-index bitset (:func:`create_bloom_index`)
+    proves ``col = value`` matches no row. Same superset guarantee as
+    ``prune`` and composable with it: range stats cut by the CLUSTERED
+    dims, blooms cut by high-cardinality lookup keys the layout isn't
+    sorted on.
 
     ``timestamp=`` (epoch seconds or ISO-8601 string) is ``TIMESTAMP
     AS OF``: resolves to the latest snapshot committed at or before
@@ -1679,9 +1660,7 @@ def _read_version(
     if not merge_schema and _schema_heterogeneous(doc, live):
         merge_schema = True
     dv_map = _dv_at_version(doc, version)
-    dv_needed = sorted(
-        {d for n, lst in dv_map.items() if n in set(live) for d in lst}
-    )
+    dv_needed = sorted({d for n in live for d in dv_map.get(n, ())})
     missing = [
         n for n in list(live) + dv_needed if not (p / n).exists()
     ]
@@ -1689,23 +1668,16 @@ def _read_version(
         raise FileNotFoundError(
             f"snapshot {version} references vacuumed files: {missing}"
         )
+
+    def specs(arg) -> list:  # one tuple, or a list of them
+        return [arg] if arg and isinstance(arg[0], str) else list(arg or ())
+
     full = live
-    if prune is not None and live:
-        specs = (
-            [prune]
-            if prune and isinstance(prune[0], str)
-            else [tuple(s) for s in prune]
-        )
-        for spec in specs:
-            live = _prune_files(p, doc, live, *spec)
-    if point is not None and live:
-        pspecs = (
-            [point]
-            if point and isinstance(point[0], str)
-            else [tuple(s) for s in point]
-        )
-        for col, value in pspecs:
-            live = _bloom_prune(p, doc, live, col, value)
+    live = _may_hold(
+        p, doc, live,
+        [c for col, lo, hi in specs(prune) for c in ((col, ">=", lo), (col, "<=", hi))]
+        + [(col, "=", value) for col, value in specs(point)],
+    )
     if not live and full:
         # every file provably irrelevant: empty frame over ALL
         # snapshot files + limit(0) — metadata-cheap (no tasks
@@ -2543,8 +2515,6 @@ def rename_column(path, old: str, new: str) -> dict:
     caller drops and re-adds them with the new name). Renaming onto an
     existing logical name, or a column that doesn't exist, raises.
     Returns ``{"old", "new", "physical", "version"}``."""
-    import json
-    import os
     import pathlib
 
     p = pathlib.Path(path)
@@ -2609,9 +2579,7 @@ def rename_column(path, old: str, new: str) -> dict:
             side = _bloom_sidecar(p)
             if old in side:
                 side[new] = side.pop(old)
-                tmp = p / (_BLOOM + ".tmp")
-                tmp.write_text(json.dumps(side))
-                os.replace(str(tmp), str(p / _BLOOM))
+                _write_bloom_sidecar(p, side)
         finally:
             _manifest_unlock(p, fd)
     return {"old": old, "new": new, "physical": physical, "version": version}
@@ -3112,7 +3080,7 @@ def compact_table(
 
     ``where=<predicate>`` scopes the rewrite (Delta's ``OPTIMIZE t
     WHERE ...``): only files that MAY hold matching rows
-    (:func:`_candidate_files`) are compacted/clustered; untouched
+    (:func:`_may_hold`) are compacted/clustered; untouched
     files keep their bytes, stats, DV entries and clustering
     membership. Compacting one day of a day-clustered table is
     O(day), not O(table). ``scope_files=[...]`` scopes by explicit
@@ -3145,14 +3113,13 @@ def compact_table(
     # keep their bytes, stats, and DV entries
     if where and scope_files is not None:
         raise ValueError("pass where= or scope_files=, not both")
-    scope = (
-        [n for n in live if n in set(scope_files)]
-        if scope_files is not None
-        else _candidate_files(p, doc, live, where)
-        if where
-        else list(live)
-    )
-    untouched = [n for n in live if n not in set(scope)]
+    if scope_files is not None:
+        wanted = set(scope_files)
+        scope = [n for n in live if n in wanted]
+    else:
+        scope = _may_hold(p, doc, live, _predicate_conjuncts(where))
+    in_scope = set(scope)
+    untouched = [n for n in live if n not in in_scope]
     if not scope:
         return {
             "n_files_before": len(live),
@@ -3183,8 +3150,9 @@ def compact_table(
         # clustered rewrite keeps previously-clustered untouched files
         # in the state when the key matches
         prev_clu = doc.get("clustered")
+        kept = set(untouched)
         base = (
-            [n for n in prev_clu["files"] if n in set(untouched)]
+            [n for n in prev_clu["files"] if n in kept]
             if prev_clu and prev_clu["by"] == list(cluster_by)
             else []
         )
@@ -3351,7 +3319,7 @@ def vacuum_orphans(
             f.unlink()
             removed.append(f.name)
     if removed:
-        _drop_stats_entries(p, removed)
+        _drop_bloom_entries(p, removed)
     # commit-time CDC files: one referenced by ANY remaining history
     # entry stays readable (read_changes can serve any un-pruned
     # range); the rest — crash orphans and files whose entries
@@ -3371,28 +3339,21 @@ def vacuum_orphans(
     return sorted(removed)
 
 
-def _drop_stats_entries(p, names: list[str]) -> None:
-    """Drop vacuumed files from the ``_stats.json`` sidecar (best
+def _drop_bloom_entries(p, names: list[str]) -> None:
+    """Drop vacuumed files from the ``_bloom.json`` sidecar (best
     effort — a stale entry is harmless, it just describes a file no
-    read will ever list; see :func:`file_column_stats`)."""
-    import json
-    import os
-
+    read will ever list)."""
     gone = set(names)
-    for fname in (_STATS, _BLOOM):
-        sidecar = p / fname
-        if not sidecar.exists():
-            continue
-        try:
-            cache = json.loads(sidecar.read_text())
-            for col_cache in cache.values():
-                for n in gone:
-                    col_cache.pop(n, None)
-            tmp = p / (fname + ".tmp")
-            tmp.write_text(json.dumps(cache))
-            os.replace(str(tmp), str(sidecar))
-        except (OSError, ValueError, AttributeError):
-            _log.debug("stale entries kept in %s", sidecar, exc_info=True)
+    side = _bloom_sidecar(p)
+    if not any(gone & set(bits) for bits in side.values()):
+        return
+    try:
+        _write_bloom_sidecar(p, {
+            col: {n: h for n, h in bits.items() if n not in gone}
+            for col, bits in side.items()
+        })
+    except OSError:
+        _log.debug("stale entries kept in %s", p / _BLOOM, exc_info=True)
 
 
 def prune_history(path, retain_versions: int) -> list[int]:
@@ -3511,7 +3472,9 @@ def _mutate(
     keys = keys if cow else keys + ("n_dv_files_added",)
     vers, live = _snapshot(doc)
     dv_prev = _dv_at_version(doc)
-    rows_before = _live_row_count(p, doc, live, dv_prev, spark)
+    # the old DV parquets are read once, for rows_before and the scan
+    prev_dead = _live_dead_set(p, live, dv_prev)
+    rows_before = _live_row_count(p, doc, live, dv_prev, spark, prev_dead)
     st = {
         "rows_before": rows_before, "rows_deleted": 0, "rows_updated": 0,
         "rows_inserted": 0, "rows_after": rows_before, "n_files_total": len(live),
@@ -3528,7 +3491,7 @@ def _mutate(
         return result()
     tgt = _scan_with_dv(
         spark, p, cand or live, doc, dv_prev, merge_schema=False,
-        keep_file_col=cow, keep_pos_col=not cow,
+        keep_file_col=cow, keep_pos_col=not cow, dead=prev_dead,
     )
     if not cand:
         tgt = tgt.limit(0)
@@ -3710,7 +3673,7 @@ def delete_rows(
         # prove the predicate false everywhere are neither scanned nor
         # rewritten (a day-targeted DELETE on a clustered table scans
         # O(day), not O(table))
-        _candidate_files(p, doc, _snapshot(doc)[1], predicate),
+        _may_hold(p, doc, _snapshot(doc)[1], _predicate_conjuncts(predicate)),
         ("rows_before", "rows_deleted", "rows_after", "n_files_total",
          "n_files_rewritten"),
         changed=lambda tgt: tgt.filter(cond).withColumn("__action", F.lit("D")),
@@ -3721,28 +3684,6 @@ def delete_rows(
         ),
         derive=lambda tgt, m: ([], [(_row_images(m), "delete")]),
     )
-
-
-def _merge_candidates(p, doc: dict, live, keys, ranges: dict) -> list[str]:
-    """Target files that MAY hold a source join key — Delta's MERGE
-    file pruning: the per-key ``ranges`` (min, max) of the (batch-sized)
-    source, from :func:`merge_rows`'s one source pass, prune target
-    files via write-time stats BEFORE any target scan. Conservative per
-    key (whole-source range, intersected across keys); files without
-    stats, NULL-only ranges, and non-JSON-native key types prune
-    nothing. At 100 TB a record-key MERGE on a clustered/bucketed key
-    scans only the files overlapping the batch's key range."""
-    keep = list(live)
-    for k in keys:
-        lo, hi = ranges[k]
-        if lo is None or not isinstance(lo, (int, float, str)):
-            continue
-        keep = _prune_files(p, doc, keep, k, lo, hi)
-    if keep and len(keep) < len(live):
-        # same schema-evolution guard as _candidate_files
-        if _live_physical_columns(p, doc, keep) != _live_physical_columns(p, doc, live):
-            return list(live)
-    return keep
 
 
 def _broadcast_if_small(spark, df: DataFrame) -> DataFrame:
@@ -4065,7 +4006,7 @@ def merge_rows(
     src = source.cache()
     try:
         # ONE pass over the (cached) source answers the duplicate-key
-        # gate AND the per-key min/max ranges _merge_candidates prunes with
+        # gate AND the per-key min/max ranges the target files prune by
         aggs = [F.max("_c").alias("_maxdup")]
         for k in keys:
             aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
@@ -4077,14 +4018,19 @@ def merge_rows(
         )
         if (ks["_maxdup"] or 0) > 1:
             raise ValueError("merge source has duplicate record keys")
-        ranges = {k: (ks[f"__lo_{k}"], ks[f"__hi_{k}"]) for k in keys}
-        # source-key range pruning is sound ONLY without NOT MATCHED BY
-        # SOURCE clauses (those must see every unmatched target row)
+        ranges = [
+            c for k in keys
+            for c in ((k, ">=", ks[f"__lo_{k}"]), (k, "<=", ks[f"__hi_{k}"]))
+        ]
+        # Delta's MERGE file pruning: a target file whose stats miss the
+        # (batch-sized) source's key range holds no match. Sound ONLY
+        # without NOT MATCHED BY SOURCE clauses (those must see every
+        # unmatched target row)
         cand = (
             list(live)
             if when_not_matched_by_source_delete is not None
             or when_not_matched_by_source_update is not None
-            else _merge_candidates(p, doc, live, keys, ranges)
+            else _may_hold(p, doc, live, ranges)
         )
         return _mutate(
             spark, p, "merge", mode, retain, doc, cand,
@@ -4393,8 +4339,8 @@ def update_rows(
     return _mutate(
         spark, p, "update", mode, retain, doc,
         # file pruning (Delta's UPDATE file skipping): candidates only —
-        # see _candidate_files; rows_before always counts the FULL table
-        _candidate_files(p, doc, _snapshot(doc)[1], predicate),
+        # see _may_hold; rows_before always counts the FULL table
+        _may_hold(p, doc, _snapshot(doc)[1], _predicate_conjuncts(predicate)),
         ("rows_before", "rows_updated", "rows_after", "n_files_total",
          "n_files_rewritten", "n_files_added"),
         changed=lambda tgt: tgt.filter(cond).withColumn("__action", F.lit("U")),
@@ -4448,7 +4394,8 @@ def maintain_table(
     actions: list[str] = []
     clu = doc.get("clustered")
     if clu:
-        unclustered = [n for n in live if n not in set(clu["files"])]
+        clustered = set(clu["files"])
+        unclustered = [n for n in live if n not in clustered]
         if len(unclustered) >= min_unclustered:
             # each step is its own OCC commit and a conflict aborts
             # THAT STEP ONLY (maintenance always loses to live writers

@@ -15,6 +15,12 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+def _next_job_id(spark) -> int:
+    """The id the session's scheduler gives its next job."""
+    n = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return int(n if isinstance(n, int) else n.get())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("dbt_slabbing_spark_tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))

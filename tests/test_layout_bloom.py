@@ -178,3 +178,23 @@ def test_python_probe_matches_spark_xxhash64(spark):
     ).select(*_bloom_positions(F.col("v"), m, k)).collect()
     for v, row in zip(values, rows):
         assert _probe_positions_py(v, m, k) == list(row), f"mismatch for {v!r}"
+
+
+def test_float_literal_on_int_key_is_not_bloom_skipped(spark, user_table):
+    """The bitsets hash Spark's string form of each int ("3"), so a
+    float literal ("3.0") proves nothing: a read or DELETE with
+    ``user_id = <float>`` keeps every file that holds the key."""
+    target, rows = user_table
+    create_bloom_index(spark, target, "user_id")
+    probe = min(r["user_id"] for r in rows.values())
+    want = {e for e, r in rows.items() if r["user_id"] == probe}
+    got = {
+        r["event_id"]
+        for r in read_table(spark, target, point=("user_id", float(probe)))
+        .filter(F.col("user_id") == probe)
+        .collect()
+    }
+    assert got == want
+    res = delete_rows(spark, target, f"user_id = {probe}.0", mode="dv")
+    assert res["rows_deleted"] == len(want)
+    assert read_table(spark, target).filter(F.col("user_id") == probe).count() == 0

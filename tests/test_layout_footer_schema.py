@@ -18,6 +18,7 @@ from dbt_slabbing_spark.operators.layout import (
     _read_parquet,
     ensure_manifest,
 )
+from tests.conftest import _next_job_id
 
 # one column of every type the parity promise covers, as NOT NULL
 # literals (the footer records nullable=false) ...
@@ -30,11 +31,6 @@ _TYPED = """SELECT 1 AS i, CAST(2 AS BIGINT) AS l, 'x' AS s, 1.5D AS d,
 _NULLABLE = f"""SELECT * FROM ({_TYPED}) UNION ALL SELECT NULL, NULL, NULL,
   NULL, NULL, NULL, NULL, NULL, NULL, array(NULL), map('b', NULL),
   named_struct('x', NULL, 'y', NULL)"""
-
-
-def _next_job_id(spark) -> int:
-    n = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-    return int(n if isinstance(n, int) else n.get())
 
 
 def _spark_files(spark, sql, d):

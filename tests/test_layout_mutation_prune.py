@@ -1,5 +1,5 @@
-"""Mutation-scan file pruning (`_candidate_files` / `_merge_candidates`
-— Delta's DELETE/UPDATE/MERGE file skipping): the matching scan runs
+"""Mutation-scan file pruning (`_may_hold` — Delta's DELETE/UPDATE/MERGE
+file skipping): the matching scan runs
 over candidate files only, skipped files are neither scanned nor
 rewritten, results and row counts stay exact, and the conservative
 parser prunes nothing it can't prove.

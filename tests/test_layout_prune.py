@@ -2,8 +2,8 @@
 (`operators/layout.py::file_column_stats` / `prune_file_list` /
 `read_table(prune=)`). The registry gate (layout_manifest_prune_read)
 hash-checks the end-to-end read; these tests pin the stats mechanics —
-footer-derived min/max, sidecar caching, conservative handling of
-stat-less files, prune-to-empty schema preservation."""
+manifest or footer min/max, conservative handling of stat-less files
+and of bounds of another type, prune-to-empty schema preservation."""
 
 from __future__ import annotations
 
@@ -147,7 +147,7 @@ def test_non_json_native_stats_are_conservative(spark, tmp_path):
     # answered from the manifest alone: no sidecar is ever created
     mf = json.loads((work / layout._MANIFEST).read_text())
     assert mf["stats"]["f.parquet"]["ts"] is None
-    assert not (work / layout._STATS).exists()
+    assert not (work / "_stats.json").exists()
 
 
 def test_corrupt_footer_is_statless_not_fatal(ranged_table):
@@ -186,7 +186,7 @@ def test_append_commit_carries_stats_and_forwards(spark, tmp_path):
     assert prune_file_list(target, live, "v", 0.0, 50.0) == [
         n for n in live if tuple(doc["stats"][n]["v"]) == (0.0, 9.0)
     ]
-    assert not (pathlib.Path(target) / layout._STATS).exists()
+    assert not (pathlib.Path(target) / "_stats.json").exists()
 
 
 def test_compaction_recomputes_commit_stats(spark, tmp_path):
@@ -253,29 +253,63 @@ def test_multi_column_prune_intersects(spark, tmp_path):
     )
 
 
-def test_sidecar_cache_serves_second_call(ranged_table, monkeypatch):
-    """Pre-r11 fallback: a manifest WITHOUT a stats record (older
-    tables) still prunes via footer reads cached in the sidecar."""
+def test_manifest_without_stats_prunes_from_footers(spark, ranged_table):
+    """A manifest WITHOUT a stats record (hand-edited or older tables)
+    still prunes correctly, from each file's footer."""
     live = ensure_manifest(ranged_table)
     mf = pathlib.Path(ranged_table) / layout._MANIFEST
     doc = json.loads(mf.read_text())
-    doc.pop("stats", None)  # simulate a pre-r11 manifest
+    doc.pop("stats", None)
     mf.write_text(json.dumps(doc))
-    file_column_stats(ranged_table, live, "v")  # populate sidecar
-    sidecar = pathlib.Path(ranged_table) / layout._STATS
-    assert sidecar.exists()
-    cached = json.loads(sidecar.read_text())["v"]
-    assert cached["f1.parquet"] == [10.0, 19.0]
-
-    import pyarrow.parquet as pq
-
-    def boom(*a, **k):  # any footer re-read would blow up
-        raise AssertionError("footer re-read despite warm cache")
-
-    monkeypatch.setattr(pq, "ParquetFile", boom)
     stats = file_column_stats(ranged_table, live, "v")
-    assert stats["f0.parquet"] == (0.0, 9.0)
+    assert stats["f1.parquet"] == (10.0, 19.0)
     assert stats["fnull.parquet"] is None
+    assert set(prune_file_list(ranged_table, live, "v", 12.0, 14.0)) == {
+        "f1.parquet",
+        "fnull.parquet",
+    }
+    got = read_table(spark, ranged_table, prune=("v", 12.0, 14.0)).filter(
+        F.col("v").between(12.0, 14.0)
+    )
+    assert sorted(r["k"] for r in got.collect()) == [12, 13, 14]
+    assert not (pathlib.Path(ranged_table) / "_stats.json").exists()
+
+
+def test_bounds_of_another_type_keep_every_file(spark, tmp_path):
+    """Int bounds on a string column cannot be compared with its
+    min/max: every file is kept, and the read equals the unpruned one."""
+    from dbt_slabbing_spark.operators.layout import append_files
+
+    target = str(tmp_path / "t")
+    for lo in (0, 10):
+        df = spark.createDataFrame(
+            [(i, f"s{i:02d}") for i in range(lo, lo + 10)], "k int, s string"
+        )
+        append_files(spark, target, df.coalesce(1))
+    live = ensure_manifest(target)
+    assert prune_file_list(target, live, "s", 0, 5) == live
+    got = read_table(spark, target, prune=("s", 0, 5))
+    assert sorted(got.collect()) == sorted(read_table(spark, target).collect())
+
+
+def test_point_lookup_skips_by_min_max(spark, tmp_path):
+    """read_table(point=) on a key without a bloom index still skips
+    every file whose min/max excludes the value; the rows are those of
+    the plain filter."""
+    from dbt_slabbing_spark.operators.layout import append_files
+
+    target = str(tmp_path / "t")
+    for lo in (0, 10, 20):
+        df = spark.createDataFrame(
+            [(i, float(i)) for i in range(lo, lo + 10)], "k int, v double"
+        )
+        append_files(spark, target, df.coalesce(1))
+    got = read_table(spark, target, point=("k", 13))
+    scanned = {r[0] for r in got.select(F.input_file_name()).distinct().collect()}
+    assert len(scanned) == 1
+    assert got.filter(F.col("k") == 13).collect() == (
+        read_table(spark, target).filter(F.col("k") == 13).collect()
+    )
 
 
 def test_missing_column_is_statless(ranged_table):
@@ -294,28 +328,21 @@ def test_vacuum_drops_stats_entries(spark, ranged_table):
     import os
     import time
 
-    live = ensure_manifest(ranged_table)
-    # pre-r11 table: no commit-carried stats, so every file's stats
-    # land in the sidecar (r11 tables only sidecar-cache files the
-    # manifest doesn't cover)
+    ensure_manifest(ranged_table)
+    # a table without commit-carried stats
     mf = pathlib.Path(ranged_table) / layout._MANIFEST
     doc = json.loads(mf.read_text())
     doc.pop("stats", None)
     mf.write_text(json.dumps(doc))
-    file_column_stats(ranged_table, live, "v")  # warm sidecar
     orphan = pathlib.Path(ranged_table) / "orphan.parquet"
-    # give the orphan footer stats too, then age it past the grace
+    # an orphan with footer stats, aged past the grace
     import shutil
 
     shutil.copy(str(pathlib.Path(ranged_table) / "f0.parquet"), str(orphan))
-    file_column_stats(ranged_table, ["orphan.parquet"], "v")
     old = time.time() - 3600.0
     os.utime(orphan, (old, old))
     removed = layout.vacuum_orphans(ranged_table)
     assert removed == ["orphan.parquet"]
-    cache = json.loads((pathlib.Path(ranged_table) / layout._STATS).read_text())
-    assert "orphan.parquet" not in cache["v"]
-    assert "f0.parquet" in cache["v"]  # live entries survive
 
 
 def test_compact_cluster_by_improves_pruning(spark, tmp_path):
@@ -349,7 +376,7 @@ def test_compact_cluster_by_improves_pruning(spark, tmp_path):
     # commit-carried stats cover the rewritten files (no sidecar)
     doc = json.loads((p / layout._MANIFEST).read_text())
     assert set(doc["stats"]) == set(doc["files"])
-    assert not (p / layout._STATS).exists()
+    assert not (p / "_stats.json").exists()
     # content unchanged by the clustered rewrite
     after = sorted(r["k"] for r in read_table(spark, target).collect())
     assert after == before

@@ -13,7 +13,8 @@ update_cow 6, update_dv 6, insert-only merge_cow 10, delete_dv(no-match)
 0 — budgets leave one job of AQE headroom), (c) that building a read
 of a DV-carrying snapshot runs no job before the fetch, and (d) a
 footer-open budget: each file an operation writes has its footer read
-once, and the commit reads none.
+once, the commit reads none, and a DV mutation reads each existing DV
+parquet once.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ from dbt_slabbing_spark.operators.layout import (
     read_table,
     update_rows,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _next_job_id
 
 
 @pytest.fixture()
@@ -54,11 +55,6 @@ def tab(spark, tmp_path):
     )
     append_files(spark, work, ev.coalesce(2))
     return work
-
-
-def _next_job_id(spark) -> int:
-    n = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
-    return int(n if isinstance(n, int) else n.get())
 
 
 def _jobs(spark, fn):
@@ -310,6 +306,27 @@ def test_each_written_file_is_opened_once(spark, tab, monkeypatch):
             {f"{label}: {f}": opens[k] for f, k in written.items() if opens[k] != 1}
         )
     assert not wrong, f"written files not opened exactly once: {wrong}"
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda spark, t: delete_rows(spark, t, "event_type = 'click'", mode="dv"),
+        lambda spark, t: update_rows(
+            spark, t, "event_type = 'click'", {"value": "value * 2.0"}, mode="dv"
+        ),
+    ],
+    ids=["delete_dv", "update_dv"],
+)
+def test_dv_mutation_reads_each_old_dv_file_once(spark, tab, monkeypatch, run):
+    # rows_before and the target scan share one read of the dead set
+    delete_rows(spark, tab, "event_type = 'view'", mode="dv")
+    old_dv = {f: k for f, k in _table_files(tab).items() if "/dv-" in f}
+    assert old_dv
+    opens = _count_footer_opens(monkeypatch)
+    run(spark, tab)
+    monkeypatch.undo()
+    assert {f: opens[k] for f, k in old_dv.items()} == {f: 1 for f in old_dv}
 
 
 def test_commit_opens_no_data_file(tmp_path, monkeypatch):
