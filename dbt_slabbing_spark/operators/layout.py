@@ -1085,14 +1085,11 @@ def _may_hold(p, doc: dict, files: list[str], conjuncts) -> list[str]:
     conjunct false for every row, or when its bloom bitset
     (:func:`create_bloom_index`) proves an ``=`` value absent. It stays
     when it has no usable stats, or when the literal is not
-    int/float/str or is a different type from the stats. The bitsets
-    hash Spark's string form of each value, which is ``str(literal)``
-    only for an int or str literal on a column whose stats have that
-    very type (``3.0`` probes "3.0" where an int column hashed "3"), so
-    only such files are probed. A kept subset whose physical columns
-    differ from those of ``files`` (schema evolution) returns
-    ``files``: a predicate on a column that only the skipped files
-    carry would not resolve."""
+    int/float/str or is a different type from the stats (the bloom
+    probe's own type rule is :func:`_bloom_prune`'s). A kept subset
+    whose physical columns differ from those of ``files`` (schema
+    evolution) returns ``files``: a predicate on a column that only the
+    skipped files carry would not resolve."""
     if not conjuncts or not files:
         return list(files)
     boxes = _column_boxes(p, doc, files)
@@ -1110,20 +1107,14 @@ def _may_hold(p, doc: dict, files: list[str], conjuncts) -> list[str]:
             or (op == ">=" and hi < lit)
         )
 
-    phys = [(col, _phys_col(doc, col), op, lit) for col, op, lit in conjuncts]
+    phys = [(_phys_col(doc, col), op, lit) for col, op, lit in conjuncts]
     keep = [
         n for n in files
-        if not any(refuted(boxes[n].get(c), op, lit) for _, c, op, lit in phys)
+        if not any(refuted(boxes[n].get(c), op, lit) for c, op, lit in phys)
     ]
-    for col, c, op, lit in phys:
-        probe = [
-            n for n in keep
-            if op == "=" and type(lit) in (int, str) and boxes[n].get(c)
-            and all(type(v) is type(lit) for v in boxes[n][c])
-        ]
-        if probe:
-            miss = set(probe) - set(_bloom_prune(p, doc, probe, col, lit))
-            keep = [n for n in keep if n not in miss]
+    for col, op, lit in conjuncts:
+        if op == "=":
+            keep = _bloom_prune(p, doc, boxes, keep, col, lit)
     if keep and len(keep) < len(files):
         def columns(names: list[str]) -> set:
             return set().union(*(boxes[n] for n in names))
@@ -1514,29 +1505,44 @@ def prune_files_bloom(spark, path, files: list[str], col: str, value) -> list[st
     """Subset of ``files`` that may contain ``col = value``, per the
     manifest's bloom index (superset guarantee: files without an entry
     — appended since the last refresh, or no index on ``col`` — are
-    KEPT). The probe's bit positions are computed DRIVER-SIDE in pure
-    Python (:func:`_probe_positions_py`, reference XXH64 — parity with
-    the build side's JVM ``xxhash64`` is test-pinned), so a point
-    lookup decides its file list in microseconds with no Spark job.
-    ``spark`` is unused (kept for API stability)."""
+    KEPT, and so is every file :func:`_bloom_prune` may not probe
+    with ``value``'s type). The probe's bit positions are computed
+    DRIVER-SIDE in pure Python (:func:`_probe_positions_py`, reference
+    XXH64 — parity with the build side's JVM ``xxhash64`` is
+    test-pinned), so a point lookup decides its file list in
+    microseconds with no Spark job. ``spark`` is unused (kept for API
+    stability)."""
     import pathlib
 
     p = pathlib.Path(path)
-    return _bloom_prune(p, _load(p), files, col, value)
+    doc = _load(p)
+    return _bloom_prune(p, doc, _column_boxes(p, doc, files), files, col, value)
 
 
-def _bloom_prune(p, doc: dict, files: list[str], col: str, value) -> list[str]:
-    """:func:`prune_files_bloom` against the parsed manifest ``doc``."""
+def _bloom_prune(p, doc: dict, boxes: dict, files: list[str], col: str, value) -> list[str]:
+    """The files of ``files`` whose bloom bitset does not prove ``col =
+    value`` absent, against the parsed manifest ``doc`` and the files'
+    stats ``boxes`` (:func:`_column_boxes`). The bitsets hash Spark's
+    string form of each value, which is ``str(value)`` only for an int
+    or str value on a column whose stats have that very type (``3.0``
+    would probe "3.0" where an int column hashed "3"), so only such
+    files are probed; every other file is kept."""
     cfg = doc.get("bloom_cfg", {}).get(col)
-    entries = _bloom_sidecar(p).get(col, {}) if cfg else {}
-    if not entries:
-        return files
+    if not cfg or type(value) not in (int, str):
+        return list(files)
+    entries = _bloom_sidecar(p).get(col, {})
+    c = _phys_col(doc, col)
     positions = _probe_positions_py(value, cfg["m"], cfg["k"])
-    return [
-        n
-        for n in files
-        if n not in entries or _bloom_has(entries[n], positions)
-    ]
+
+    def absent(n: str) -> bool:
+        box = boxes[n].get(c)
+        return (
+            n in entries and bool(box)
+            and all(type(v) is type(value) for v in box)
+            and not _bloom_has(entries[n], positions)
+        )
+
+    return [n for n in files if not absent(n)]
 
 
 def _parse_ts(ts) -> float:
@@ -1908,19 +1914,21 @@ def _changes(
     # restore).
     entries = {int(h["version"]): h for h in doc.get("history", [])}
     recs = _cdc_range_records(entries, v_from, v_to)
-    if recs is None and with_commit_version and f_from <= f_to and same_dv:
-        # pre-r14 history but append-only net effect: every transition
-        # only adds files, so the delta-encoded entries themselves are
-        # exact per-commit append records
-        if all(v in entries for v in range(int(v_from), int(v_to))):
-            recs = [
-                {
-                    "version": v,
-                    "added": entries[v].get("added", []),
-                    "cdc": {"type": "append"},
-                }
-                for v in range(int(v_from), int(v_to))
-            ]
+    span = range(int(v_from), int(v_to))
+    if recs is None and with_commit_version and all(
+        v in entries and "files" not in entries[v] and not entries[v].get("removed")
+        and _dv_at_version(doc, v) == _dv_at_version(doc, v + 1)
+        for v in span
+    ):
+        # pre-r14 history in which EVERY transition only added files
+        # and left the deletion vectors alone, so the delta-encoded
+        # entries themselves are exact per-commit append records (a
+        # range that merely nets out append-only, e.g. compact then
+        # restore, would list each row once per re-adding commit)
+        recs = [
+            {"version": v, "added": entries[v].get("added", []), "cdc": {"type": "append"}}
+            for v in span
+        ]
     if recs is not None:
         return _compose_changes(
             spark, p, doc, entries, recs, sorted(f_to), keys, with_commit_version
@@ -3702,16 +3710,11 @@ def _broadcast_if_small(spark, df: DataFrame) -> DataFrame:
         est = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        raw = str(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        ).lower().rstrip("b")
-        mult = 1
-        for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-            if raw.endswith(suf):
-                raw, mult = raw[:-1], m
-                break
-        thr = int(raw) * mult
-    except Exception:  # py4j / conf-format edge: keep the contract path
+        # the session's own parse of the conf (any size suffix), bytes
+        thr = int(
+            spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        )
+    except Exception:  # py4j edge: keep the contract path
         _log.debug("merge source broadcast: no size estimate", exc_info=True)
         return F.broadcast(df)
     cap = 8 * (thr if thr > 0 else 10 * 1024 * 1024)

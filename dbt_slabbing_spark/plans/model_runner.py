@@ -4,14 +4,20 @@
 This is the "dbt SQL → Spark SQL" translation path stated as the
 project's north star (BASELINE.json): a dbt project is, mechanically, a
 set of SELECT statements wired by ref(); on Spark each model becomes a
-temp view (ephemeral materialization) or a persisted table, and
-Catalyst sees the WHOLE chain — views inline into one optimized plan,
-so staging models cost nothing at runtime (no intermediate
-materialization unless asked for).
+temp view (an ephemeral model) or a persisted table, and Catalyst sees
+the WHOLE chain — views inline into one optimized plan, so staging
+models cost nothing at runtime (nothing is materialized unless asked
+for).
+
+Persisted models — ``run_models(materialize="manifest")``,
+``run_incremental`` and ``run_snapshot`` — are manifest tables
+(:mod:`..operators.layout`), published by exactly one atomic commit
+per model per run: readers see the previous build until the commit
+and the new one after it, and a failed run publishes nothing.
 
 Deliberately minimal: ref/source resolution, cycle detection,
-topological execution, view/table materialization. No jinja beyond the
-two macros — config blocks, tests and snapshots live a layer above.
+topological execution, the ``is_incremental()`` / ``this`` macros, and
+dbt's schema tests (``run_tests``). No other jinja.
 """
 
 from __future__ import annotations
@@ -81,18 +87,18 @@ def run_models(
     ``materialize='view'`` registers each model as a temp view —
     downstream models and Catalyst inline them (one fused plan).
     ``materialize='cache'`` additionally caches hot intermediate models
-    (the Spark analogue of a dbt table materialization for iterative
+    (the Spark analogue of a dbt table model for iterative
     use of the same upstream).
-    ``materialize='manifest'`` is dbt's persisted ``table``
-    materialization over GOVERNED tables: each model full-refreshes
+    ``materialize='manifest'`` is dbt's persisted ``table`` model
+    over GOVERNED tables: each model full-refreshes
     into a manifest table under ``base_dir/<name>`` via
     ``overwrite_table`` — one atomic commit per model, the previous
     build stays time-travelable/restorable, and downstream models read
     the committed snapshot (physical barrier between models, the
-    trade dbt's table materialization makes deliberately).
+    trade dbt's table models make deliberately).
     """
     if materialize not in ("view", "cache", "manifest"):
-        raise ModelError(f"unknown materialization {materialize!r}")
+        raise ModelError(f"unknown materialize={materialize!r}")
     if materialize == "manifest":
         if not base_dir:
             raise ModelError("materialize='manifest' needs base_dir")
@@ -122,6 +128,16 @@ _IS_INCR_RE = re.compile(
 )
 
 
+def _built(target_path: str) -> bool:
+    """Whether ``target_path`` holds a committed build: a manifest table
+    with at least one live file (a plain parquet directory is adopted).
+    A first build that died before its commit leaves a table without
+    one, so the next run builds it from scratch again."""
+    from ..operators.layout import ensure_manifest
+
+    return pathlib.Path(target_path).exists() and bool(ensure_manifest(target_path))
+
+
 def run_incremental(
     spark: SparkSession,
     model_sql: str,
@@ -129,93 +145,55 @@ def run_incremental(
     sources: dict[str, DataFrame],
     unique_key: str | None = None,
     order_col: str | None = None,
-    materialization: str = "swap",
 ) -> DataFrame:
-    """dbt-style INCREMENTAL materialization — the 100 TB workhorse:
+    """dbt-style INCREMENTAL model — the 100 TB workhorse:
     recompute only new rows, never the history.
 
     Macros supported, with dbt semantics:
     - ``{% if is_incremental() %} … {% endif %}`` — the block is
       STRIPPED on the first run (full build) and inlined when the
-      target exists; the block's WHERE clause restricts the scan to
-      rows past the model's high watermark, so at scale the predicate
-      prunes partitions and cost tracks the DELTA, not the history;
+      target holds a committed build (:func:`_built`); the block's
+      WHERE clause restricts the scan to rows past the model's high
+      watermark, so at scale the predicate prunes partitions and cost
+      tracks the DELTA, not the history;
     - ``{{ this }}`` → the existing target (for
       ``WHERE ts > (SELECT max(ts) FROM {{ this }})``) — only valid
       inside the is_incremental block.
 
-    Append-only when ``unique_key`` is None; otherwise upsert by key
-    (latest-change-wins via ``order_col`` CDC compaction first).
-
-    ``materialization`` picks the upsert's storage contract:
-
-    - ``"swap"`` (default, the historical behavior): the merged result
-      rewrites the WHOLE target to a staging dir then swaps in — a
-      failed run never corrupts the target, but every incremental run
-      pays O(target) rewrite, which is exactly what an incremental
-      model exists to avoid.
-    - ``"manifest_dv"``: the target is a manifest table
-      (:mod:`..operators.layout`) and the upsert routes through
-      ``merge_rows(mode="dv")`` — matched rows die by deletion vector,
-      the delta appends as fresh files, ZERO target files are
-      rewritten, and the commit is atomic/OCC (real transactionality,
-      not the staging-swap approximation). The steady-state cost is
-      O(delta), the shape a 100 TB incremental mart needs; DV debt is
-      reclaimed by the table's normal OPTIMIZE/maintenance cadence.
-      Append-only models (``unique_key=None``) become manifest
-      appends.
+    The target is a manifest table (:mod:`..operators.layout`) and
+    every run publishes its result with ONE atomic commit, like
+    ``run_models(materialize="manifest")``. The first build and
+    append-only runs (``unique_key`` None) are ``append_files`` of the
+    delta, O(delta). Upsert runs (latest-change-wins via ``order_col``
+    CDC compaction first) are ``overwrite_table`` of ``upsert(this,
+    delta)``, where ``this`` is the one snapshot read that also backs
+    ``{{ this }}``. A run that fails before its commit leaves the
+    target as it was, and displaced files stay on disk for time travel
+    until ``vacuum_orphans``, so frames returned by earlier runs stay
+    readable. The O(delta) deletion-vector upsert is
+    ``merge_rows(mode="dv")`` / SQL ``MERGE INTO``; a plain parquet
+    target from before the manifest layer is adopted as version 1.
     """
-    import shutil
-
+    from ..operators.layout import append_files, overwrite_table, read_table
     from ..operators.merge import dedup_updates, upsert
 
-    target = pathlib.Path(target_path)
-    if materialization not in ("swap", "manifest_dv"):
-        raise ModelError(f"unknown materialization {materialization!r}")
-    manifest_mode = materialization == "manifest_dv"
-    if manifest_mode:
-        from ..operators.layout import append_files, merge_rows, read_table
-
-    exists = target.exists()
+    exists = _built(target_path)
     for name, df in sources.items():
         df.createOrReplaceTempView(f"src_{name}")
     sql = _SOURCE_RE.sub(lambda m: f"src_{m.group(1)}", model_sql)
     sql = _IS_INCR_RE.sub((lambda m: m.group(1)) if exists else "", sql)
     if exists:
-        this_df = (
-            read_table(spark, str(target))
-            if manifest_mode
-            else spark.read.parquet(str(target))
-        )
-        this_df.createOrReplaceTempView("_incr_this")
-    sql = _THIS_RE.sub("_incr_this", sql)
-    delta = spark.sql(sql)
+        this = read_table(spark, target_path)
+        this.createOrReplaceTempView("_incr_this")
+    delta = spark.sql(_THIS_RE.sub("_incr_this", sql))
 
-    if manifest_mode:
-        if not exists:
-            append_files(spark, str(target), delta)
-        elif unique_key is not None:
-            if order_col is not None:
-                delta = dedup_updates(delta, unique_key, order_col)
-            merge_rows(spark, str(target), delta, on=unique_key, mode="dv")
-        else:
-            append_files(spark, str(target), delta)
-        return read_table(spark, str(target))
-
-    if not exists:
-        delta.write.mode("overwrite").parquet(str(target))
+    if not exists or unique_key is None:
+        append_files(spark, target_path, delta)
     else:
-        if unique_key is not None:
-            if order_col is not None:
-                delta = dedup_updates(delta, unique_key, order_col)
-            merged = upsert(spark.read.parquet(str(target)), delta, unique_key)
-        else:
-            merged = spark.read.parquet(str(target)).unionByName(delta)
-        staging = str(target) + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(str(target))
-        pathlib.Path(staging).rename(target)
-    return spark.read.parquet(str(target))
+        if order_col is not None:
+            delta = dedup_updates(delta, unique_key, order_col)
+        overwrite_table(spark, target_path, upsert(this, delta, unique_key))
+    return read_table(spark, target_path)
 
 
 def run_snapshot(
@@ -226,8 +204,8 @@ def run_snapshot(
     tracked_cols: list[str],
     snapshot_time: str,
 ) -> DataFrame:
-    """dbt-style SNAPSHOT materialization ('check' strategy): capture a
-    mutable source table's state as an SCD2 history.
+    """dbt-style SNAPSHOT ('check' strategy): capture a mutable source
+    table's state as an SCD2 history.
 
     First run seeds every source row as the current version
     (valid_from = snapshot_time, open valid_to). Later runs diff the
@@ -241,52 +219,37 @@ def run_snapshot(
 
     The SCD2 fold itself is ``operators/merge.py::scd2_apply`` — same
     versioning semantics as the CDC path, one code path to trust. The
-    rewrite is staging-then-swap like ``run_incremental``.
+    target is a manifest table published by ONE ``overwrite_table``
+    commit per run, like ``run_incremental``: a run that fails before
+    its commit leaves the whole history readable, which matters here
+    because snapshot history is NOT recomputable from the source.
 
     100 TB story: the diff is one key-equality join of source vs the
     CURRENT slice (is_current pushes to the scan), and history grows
-    only by actual changes. Completes the materialization set:
+    only by actual changes. Completes dbt's set of model kinds:
     view/ephemeral, cache/table, incremental, snapshot.
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
+    from ..operators.layout import overwrite_table, read_table
     from ..operators.merge import scd2_apply
 
-    target = pathlib.Path(target_path)
-    old = pathlib.Path(str(target) + ".old")
-    if old.exists() and not target.exists():
-        # Crash landed between the two renames of a previous swap:
-        # .old is the only copy of the SCD2 history — recover it.
-        old.rename(target)
     snap_ts = F.lit(snapshot_time).cast("timestamp")
     cols = [unique_key, *tracked_cols]
-    if not target.exists():
-        seeded = source.select(*cols).select(
+    if _built(target_path):
+        changes = source.select(*cols).withColumn("_snap_at", snap_ts)
+        out = scd2_apply(
+            read_table(spark, target_path), changes, unique_key, "_snap_at", tracked_cols
+        )
+    else:
+        out = source.select(*cols).select(
             "*",
             snap_ts.alias("valid_from"),
             F.lit("9999-12-31 00:00:00").cast("timestamp").alias("valid_to"),
             F.lit(True).alias("is_current"),
         )
-        seeded.write.mode("overwrite").parquet(str(target))
-        return spark.read.parquet(str(target))
-
-    dim = spark.read.parquet(str(target))
-    changes = source.select(*cols).withColumn("_snap_at", snap_ts)
-    merged = scd2_apply(dim, changes, unique_key, "_snap_at", tracked_cols)
-    staging = str(target) + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    # Crash-safe swap: at every instant either `target` or `target.old`
-    # holds the full pre-swap history (recovered at entry above) —
-    # unlike incremental marts, snapshot history is NOT recomputable
-    # from the source, so a plain rmtree+rename window would lose it.
-    if old.exists():
-        shutil.rmtree(str(old))
-    target.rename(old)
-    pathlib.Path(staging).rename(target)
-    shutil.rmtree(str(old))
-    return spark.read.parquet(str(target))
+    overwrite_table(spark, target_path, out)
+    return read_table(spark, target_path)
 
 
 def run_tests(

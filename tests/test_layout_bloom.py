@@ -198,3 +198,15 @@ def test_float_literal_on_int_key_is_not_bloom_skipped(spark, user_table):
     res = delete_rows(spark, target, f"user_id = {probe}.0", mode="dv")
     assert res["rows_deleted"] == len(want)
     assert read_table(spark, target).filter(F.col("user_id") == probe).count() == 0
+
+
+def test_prune_files_bloom_probes_only_its_own_type(spark, user_table):
+    """``prune_files_bloom`` takes the probe rule of reads and DELETE:
+    a float value on an int key proves nothing, so every file stays,
+    while the int value still narrows to the key's one file."""
+    target, rows = user_table
+    create_bloom_index(spark, target, "user_id")
+    live = _live(target)
+    probe = min(r["user_id"] for r in rows.values())
+    assert prune_files_bloom(spark, target, live, "user_id", float(probe)) == live
+    assert len(prune_files_bloom(spark, target, live, "user_id", probe)) == 1

@@ -265,6 +265,30 @@ def test_fallback_on_unrecorded_history(spark, tmp_path):
     assert "Except" in _plan(ch)  # the fallback IS the diff
 
 
+def test_unrecorded_compact_restore_range_lists_no_row_twice(spark, tmp_path):
+    """Record-less history whose range only NETS OUT append-only
+    (compact, then restore the pre-compaction files): no row changed,
+    so the commit-versioned feed is empty like the plain one — the
+    per-commit append records would list every row once for the
+    compacted file and once more for its restored originals."""
+    from dbt_slabbing_spark.operators.layout import restore_table
+
+    t = str(tmp_path / "t")
+    p = pathlib.Path(t)
+    for rows in ([(1, 1.0)], [(2, 2.0)]):
+        append_files(spark, t, _mk(spark, rows).coalesce(1))
+    v0 = manifest_versions(t)[-1]
+    compact_table(spark, t)  # the two files become one
+    restore_table(t, version=v0, spark=spark)
+    v2 = manifest_versions(t)[-1]
+    doc = json.loads((p / _MANIFEST).read_text())
+    for h in doc["history"]:
+        h.pop("cdc", None)
+    (p / _MANIFEST).write_text(json.dumps(doc))
+    assert read_changes(spark, t, v0, v2).collect() == []
+    assert read_changes(spark, t, v0, v2, with_commit_version=True).collect() == []
+
+
 def test_change_file_lifecycle(spark, tmp_path):
     """Staged change files live under _changes/, survive vacuum while
     their history entry is retained, and reclaim once pruned."""

@@ -208,8 +208,6 @@ def test_snapshot_materialization_builds_scd2_history(spark, tmp_path):
     out2 = run_snapshot(
         spark, src([(1, "gold"), (3, "basic")]), p, "id", ["segment"], "2024-02-01 00:00:00"
     )
-    # collect NOW: each run swaps the target dir, invalidating lazy
-    # frames returned by earlier runs (staging-then-swap semantics)
     rows = {(r["id"], r["segment"], r["is_current"]): r for r in out2.collect()}
     n2 = len(rows)
     assert (1, "basic", False) in rows and (1, "gold", True) in rows
@@ -227,59 +225,115 @@ def test_snapshot_materialization_builds_scd2_history(spark, tmp_path):
     assert out3.filter("valid_from >= '2024-03-01'").count() == 0
 
 
-def test_snapshot_swap_crash_recovery(spark, tmp_path):
-    """A crash between the two renames of the staging swap must not
-    lose SCD2 history (it is not recomputable from the source): if
-    `target.old` exists and `target` is missing, the next run recovers
-    the history and applies its changes on top — never re-seeds."""
-    import pathlib
-
+def test_failed_snapshot_run_keeps_history(spark, tmp_path, monkeypatch):
+    """A run that dies before its commit publishes nothing: the SCD2
+    history (not recomputable from the source) still reads in full,
+    and the re-run applies its changes on top of it — never re-seeds."""
+    from dbt_slabbing_spark.operators import layout
+    from dbt_slabbing_spark.operators.layout import read_table
     from dbt_slabbing_spark.plans.model_runner import run_snapshot
 
-    p = pathlib.Path(tmp_path / "snap")
+    p = str(tmp_path / "snap")
 
     def src(rows):
         return spark.createDataFrame(rows, "id long, segment string")
 
-    run_snapshot(spark, src([(1, "basic")]), str(p), "id", ["segment"], "2024-01-01 00:00:00")
-    run_snapshot(spark, src([(1, "gold")]), str(p), "id", ["segment"], "2024-02-01 00:00:00")
+    run_snapshot(spark, src([(1, "basic"), (2, "gold")]), p, "id", ["segment"], "2024-01-01 00:00:00")
+    history = sorted(map(tuple, read_table(spark, p).collect()))
+    assert len(history) == 2
 
-    # simulate the crash window: target renamed aside, new not yet in place
-    p.rename(p.with_suffix(".old"))
-    assert not p.exists()
+    def crash(*a, **k):
+        raise RuntimeError("killed before the commit")
 
-    out = run_snapshot(
-        spark, src([(1, "platinum")]), str(p), "id", ["segment"], "2024-03-01 00:00:00"
+    with monkeypatch.context() as m:
+        m.setattr(layout, "_commit_manifest", crash)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_snapshot(spark, src([(1, "gold")]), p, "id", ["segment"], "2024-02-01 00:00:00")
+    assert sorted(map(tuple, read_table(spark, p).collect())) == history
+
+    out = run_snapshot(spark, src([(1, "gold")]), p, "id", ["segment"], "2024-02-01 00:00:00")
+    rows = {(r["id"], r["segment"], r["is_current"]) for r in out.collect()}
+    assert rows == {(1, "basic", False), (1, "gold", True), (2, "gold", True)}
+
+
+def test_failed_first_build_is_built_again(spark, tmp_path, monkeypatch):
+    """A first build that dies before its commit leaves no build, so
+    the re-run is a first build again (``is_incremental()`` false), not
+    an incremental run over an empty target."""
+    from dbt_slabbing_spark.operators import layout
+    from dbt_slabbing_spark.plans.model_runner import run_incremental
+
+    target = str(tmp_path / "incr")
+    model = """
+        SELECT k FROM src_rows
+        {% if is_incremental() %} WHERE k > (SELECT max(k) FROM {{ this }}) {% endif %}
+    """
+    src = {"rows": spark.createDataFrame([(1,), (2,)], "k int")}
+    commit = layout._commit_manifest
+
+    def crash(p, files, *a, **k):
+        if files:  # the data commit; the new table's empty version 1 lands
+            raise RuntimeError("killed before the commit")
+        return commit(p, files, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(layout, "_commit_manifest", crash)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_incremental(spark, model, target, src)
+    out = run_incremental(spark, model, target, src)
+    assert sorted(r["k"] for r in out.collect()) == [1, 2]
+
+
+def test_earlier_run_frames_still_read(spark, tmp_path):
+    """A frame returned by run N collects its own rows after run N+1:
+    each run commits a new snapshot and leaves the files of the old one
+    in place for time travel."""
+    from dbt_slabbing_spark.plans.model_runner import run_incremental, run_snapshot
+
+    snap = str(tmp_path / "snap")
+    seg = "id long, segment string"
+    s1 = run_snapshot(
+        spark, spark.createDataFrame([(1, "basic")], seg), snap, "id", ["segment"],
+        "2024-01-01 00:00:00",
     )
-    rows = {(r["segment"], r["is_current"]) for r in out.collect()}
-    # full 3-version history survived: the recovery used .old, not a re-seed
-    assert rows == {("basic", False), ("gold", False), ("platinum", True)}
-    assert not p.with_suffix(".old").exists()  # cleaned up after the swap
-
-
-def test_snapshot_leftover_old_dir_is_replaced(spark, tmp_path):
-    """A crash AFTER the staging rename but before deleting .old leaves
-    both dirs; the next run must prefer `target` (the newer state) and
-    clear the stale .old."""
-    import pathlib
-    import shutil
-
-    from dbt_slabbing_spark.plans.model_runner import run_snapshot
-
-    p = pathlib.Path(tmp_path / "snap")
-
-    def src(rows):
-        return spark.createDataFrame(rows, "id long, segment string")
-
-    run_snapshot(spark, src([(1, "basic")]), str(p), "id", ["segment"], "2024-01-01 00:00:00")
-    shutil.copytree(p, p.with_suffix(".old"))  # stale leftover
-    run_snapshot(spark, src([(1, "gold")]), str(p), "id", ["segment"], "2024-02-01 00:00:00")
-    out = run_snapshot(
-        spark, src([(1, "gold")]), str(p), "id", ["segment"], "2024-03-01 00:00:00"
+    run_snapshot(
+        spark, spark.createDataFrame([(1, "gold")], seg), snap, "id", ["segment"],
+        "2024-02-01 00:00:00",
     )
-    rows = {(r["segment"], r["is_current"]) for r in out.collect()}
-    assert rows == {("basic", False), ("gold", True)}
-    assert not p.with_suffix(".old").exists()
+    assert [(r["id"], r["segment"], r["is_current"]) for r in s1.collect()] == [
+        (1, "basic", True)
+    ]
+
+    model = "SELECT k, v FROM src_rows"
+    kv = "k int, v string"
+    for key, incr in ((None, "incr_append"), ("k", "incr_upsert")):
+        target = str(tmp_path / incr)
+        i1 = run_incremental(
+            spark, model, target, {"rows": spark.createDataFrame([(1, "a")], kv)}, key
+        )
+        i2 = run_incremental(
+            spark, model, target, {"rows": spark.createDataFrame([(1, "b"), (2, "c")], kv)}, key
+        )
+        assert sorted(map(tuple, i1.collect())) == [(1, "a")]
+        want = [(1, "b"), (2, "c")] if key else [(1, "a"), (1, "b"), (2, "c")]
+        assert sorted(map(tuple, i2.collect())) == want
+
+
+@pytest.mark.parametrize(
+    "gate,budget",
+    [("model_incremental_hourly_mart", 12), ("model_snapshot_customer_segments", 8)],
+)
+def test_model_gate_job_budget(spark, gate, budget):
+    """Spark jobs of one warm gate call plus its collect: two runs of
+    the model, each published by ONE manifest commit."""
+    from dbt_slabbing_spark.queries import registry
+    from tests.conftest import _next_job_id
+
+    fn = registry()[gate].fn
+    fn(spark, SF_SMOKE).collect()  # warm: catalog, footers, codegen
+    before = _next_job_id(spark)
+    fn(spark, SF_SMOKE).collect()
+    assert _next_job_id(spark) - before <= budget
 
 
 def test_run_tests_counts_failures_on_hand_built_fixture(spark):
@@ -329,66 +383,3 @@ def test_run_tests_counts_failures_on_hand_built_fixture(spark):
 
     with _pytest.raises(ModelError):
         run_tests(spark, {"child": child}, {"child": {"id": ["bogus_test"]}})
-
-
-def test_incremental_manifest_dv_materialization(spark, tmp_path):
-    """materialization="manifest_dv": the incremental upsert routes
-    through merge_rows(mode="dv") over a manifest table — re-delivered
-    keys UPDATE without rewriting a single target data file, and the
-    final content matches the swap materialization exactly."""
-    import pathlib
-
-    from dbt_slabbing_spark.plans.model_runner import run_incremental
-
-    cols = "k int, v string, seq int"
-    base = spark.createDataFrame([(1, "a", 0), (2, "b", 0), (3, "c", 0)], cols)
-    updates = spark.createDataFrame(
-        [(2, "B", 1), (2, "B2", 2), (4, "d", 1)], cols
-    )
-    model = "SELECT k, v, seq FROM src_changes"
-
-    t_dv = str(tmp_path / "incr_dv")
-    t_swap = str(tmp_path / "incr_swap")
-    for t, mat in ((t_dv, "manifest_dv"), (t_swap, "swap")):
-        run_incremental(
-            spark, model, t, sources={"changes": base},
-            unique_key="k", order_col="seq", materialization=mat,
-        )
-    ident = {
-        f.name: f.stat().st_mtime_ns
-        for f in pathlib.Path(t_dv).glob("append-*.parquet")
-    }
-    outs = {}
-    for t, mat in ((t_dv, "manifest_dv"), (t_swap, "swap")):
-        outs[mat] = run_incremental(
-            spark, model, t, sources={"changes": updates},
-            unique_key="k", order_col="seq", materialization=mat,
-        )
-    # zero target data files rewritten under manifest_dv
-    assert {
-        f.name: f.stat().st_mtime_ns
-        for f in pathlib.Path(t_dv).glob("append-*.parquet")
-    } == ident
-    got = sorted(map(tuple, outs["manifest_dv"].collect()))
-    want = sorted(map(tuple, outs["swap"].collect()))
-    assert got == want == [(1, "a", 0), (2, "B2", 2), (3, "c", 0), (4, "d", 1)]
-
-
-def test_incremental_manifest_dv_append_only(spark, tmp_path):
-    """manifest_dv without unique_key: plain manifest appends."""
-    from dbt_slabbing_spark.plans.model_runner import run_incremental
-
-    cols = "k int, v string"
-    model = "SELECT k, v FROM src_rows"
-    target = str(tmp_path / "incr_dv_append")
-    run_incremental(
-        spark, model, target,
-        sources={"rows": spark.createDataFrame([(1, "a")], cols)},
-        materialization="manifest_dv",
-    )
-    out = run_incremental(
-        spark, model, target,
-        sources={"rows": spark.createDataFrame([(2, "b")], cols)},
-        materialization="manifest_dv",
-    )
-    assert sorted(map(tuple, out.collect())) == [(1, "a"), (2, "b")]
