@@ -9,11 +9,14 @@ partitioned by ``o_orderdate`` month); nothing here assumes local files.
 from __future__ import annotations
 
 import os
+import stat
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -40,6 +43,30 @@ DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 BOUNDED_DIM_TABLES = frozenset({"region", "nation"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: The session confs that decide the schema Spark infers for a parquet
+#: file: the inputs of Spark 4.1's ``ParquetToSparkSchemaConverter`` and
+#: ``ParquetUtils.inferSchema``. A pinned schema is keyed on their values
+#: (and on nothing else of the session, so toggling an unrelated conf
+#: keeps the pin).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.variant.allowReadingShredded",
+)
+
+#: Most pinned schemas kept per process; the oldest goes first.
+_SCHEMA_MEMO_CAP = 512
+_schema_memo: dict[tuple, StructType] = {}
+_schema_memo_lock = threading.Lock()
 
 
 def _ensure_workers_can_import(spark: SparkSession) -> None:
@@ -75,6 +102,35 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     sc._dbt_slabbing_pyfiled = True
 
 
+def _read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local file's schema
+    once per process. The first read of a file runs Spark's inference
+    job and keeps the schema Spark inferred; a later read of the same
+    unchanged file under the same schema confs passes that schema to
+    the reader, so it plans without a job. The key is the file's real
+    path, inode, size and mtime plus the values of
+    :data:`_SCHEMA_CONFS`, so a replaced or rewritten file, or a changed
+    conf, is inferred again. Relative paths, directories, URIs and paths
+    that cannot be stat'ed are read as plain ``spark.read.parquet``."""
+    try:
+        st = os.stat(path)
+    except (OSError, TypeError, ValueError):
+        st = None
+    if st is None or not os.path.isabs(path) or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    key = (os.path.realpath(path), st.st_ino, st.st_size, st.st_mtime_ns, confs)
+    schema = _schema_memo.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_memo_lock:
+        _schema_memo[key] = df.schema
+        while len(_schema_memo) > _SCHEMA_MEMO_CAP:
+            del _schema_memo[next(iter(_schema_memo))]
+    return df
+
+
 def table(
     spark: SparkSession,
     sf_dir: str,
@@ -82,6 +138,14 @@ def table(
     spread: bool | tuple[str, ...] = False,
 ) -> DataFrame:
     """Read one TESTDATA table as a DataFrame.
+
+    The scan's schema is pinned per process (:func:`_read_parquet_file`):
+    the first read of a table file runs Spark's one schema-inference
+    job, and every later read of the unchanged file plans with no job.
+    The pin is keyed on the file's real path, inode, size and mtime and
+    on the parquet schema confs (:data:`_SCHEMA_CONFS`), so a file
+    replaced at the same path, or a changed conf such as
+    ``binaryAsString``, is inferred again.
 
     ``events.ts`` has shipped in two physical encodings across testdata
     generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized
@@ -115,10 +179,9 @@ def table(
     _ensure_workers_can_import(spark)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df = _normalize_event_time(df)
+        df = _normalize_event_time(_read_parquet_file(spark, f"{sf_dir}/{name}.parquet"))
     else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet_file(spark, f"{sf_dir}/{name}.parquet")
     if spread:
         df = _spread_small_scan(spark, sf_dir, name, df, spread)
     return df
@@ -197,7 +260,9 @@ def _normalize_event_time(df: DataFrame) -> DataFrame:
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read every TESTDATA table. Lazy — no jobs run until an action."""
+    """Read every TESTDATA table. The first read of each table file in
+    a process runs one schema-inference job; later calls over unchanged
+    files run none (see :func:`table`)."""
     return {name: table(spark, sf_dir, name) for name in TABLES}
 
 

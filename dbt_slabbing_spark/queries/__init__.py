@@ -92,13 +92,11 @@ _MODULES = (
 )
 
 # The driver's correctness gate checks the registry PREFIX (50 entries),
-# so the prefix is rotated each round toward "driver rows <= 1 round
-# old for the whole registry". Round-14 prefix (VERDICT r13 'Next
-# round #3'): the ONE gate added this round (never-driver-checked
-# outranks stale-but-green: the commit-time CDC extraction gate),
-# then EXACTLY the 49 r8-stale rows `python tools/rotation_audit.py`
-# queued at round start, in audit order. After this round max
-# staleness is r9 and every row has a driver row <= 5 rounds old.
+# and `registry()` lists these names first, then every other query in
+# module order. The prefix is the queue `python tools/rotation_audit.py
+# --queue 50` proposed when it was last rotated: never-driver-checked
+# gates first (`layout_cdc_commit_time`), then the stalest green rows,
+# in audit order. Rotate it by replacing the tuple with a fresh queue.
 _PRIORITY = (
     "layout_cdc_commit_time",  # round-14 gate, never driver-checked
     "agg_heavy_hitters_mg",

@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import _read_parquet_file
 from ..pipelines.ground_truths import GT_TYPES, SCOPES, ground_truth_labels, read_mapping
 from ..pipelines.mapping import BENIGN_MARKERS, MALIGNANT_MARKERS, attach_truth_labels
 from . import register
@@ -85,7 +86,7 @@ def _clinical_inputs(spark: SparkSession) -> dict[str, DataFrame]:
 
         return load_clinical_tables(spark, REF_ZIP)
     return {
-        name: spark.read.parquet(os.path.join(FIXTURES_DIR, f"{name}.parquet"))
+        name: _read_parquet_file(spark, os.path.join(FIXTURES_DIR, f"{name}.parquet"))
         for name in ("screening", "tomo_lesions", "mri_lesions")
     }
 
@@ -94,7 +95,7 @@ def _mapping_records(spark: SparkSession) -> DataFrame:
     """Golden mapping as records: JSON source when present, fixture else."""
     if os.path.exists(REF_MAPPING):
         return read_mapping(spark, REF_MAPPING)
-    return spark.read.parquet(os.path.join(FIXTURES_DIR, "mapping_records.parquet"))
+    return _read_parquet_file(spark, os.path.join(FIXTURES_DIR, "mapping_records.parquet"))
 
 
 def _fold_cte(prefix: str, table_file: str, lat_col: str, outcome_col: str) -> str:

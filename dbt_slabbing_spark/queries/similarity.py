@@ -174,12 +174,13 @@ def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The guard is the contract: this query IS an n²/2 BroadcastNestedLoop
     # scan (the exactness oracle next to the LSH twin below). The ceiling
     # makes the scale misuse loud instead of an executor-melting surprise.
-    # r14: spread (guide §2.5) — the n²/2 pair scan streamed from ONE
-    # scan task; spreading the probe side runs it 16-wide (noop A/B:
-    # 29.4 s → 2.6 s). The exact-scan guard and O(n²) contract unchanged.
-    emb = require_exact_scan_small(
-        table(spark, sf_dir, "embeddings", spread=True), what="sim_neardup_pairs"
-    )
+    # The guard counts the plain scan: 2 jobs, where counting the
+    # repartitioned frame takes 3. r14: spread (guide §2.5) — the n²/2
+    # pair scan streamed from ONE scan task; spreading the probe side
+    # runs it 16-wide (noop A/B: 29.4 s → 2.6 s). The exact-scan guard
+    # and O(n²) contract unchanged.
+    require_exact_scan_small(table(spark, sf_dir, "embeddings"), what="sim_neardup_pairs")
+    emb = table(spark, sf_dir, "embeddings", spread=True)
     # Precompute each vector's norm ONCE (n rows) instead of inside the
     # pair expression (n²/2 pairs × 2 norms): the naive cosine() does
     # THREE 64-element folds per pair; this does one. Bit-identical —

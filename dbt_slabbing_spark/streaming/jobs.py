@@ -136,11 +136,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events.ts ships as either TIMESTAMP(NANOS) or NTZ micros depending
     # on the testdata generation; normalize to a session-TZ TIMESTAMP so
     # watermarks accept it (see catalog._normalize_event_time).
-    from ..catalog import _ensure_workers_can_import, _normalize_event_time
+    from ..catalog import _ensure_workers_can_import, _normalize_event_time, _read_parquet_file
 
     _ensure_workers_can_import(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = _read_parquet_file(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.format("parquet")
         .schema(schema)

@@ -321,7 +321,7 @@ def test_earlier_run_frames_still_read(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "gate,budget",
-    [("model_incremental_hourly_mart", 12), ("model_snapshot_customer_segments", 8)],
+    [("model_incremental_hourly_mart", 11), ("model_snapshot_customer_segments", 7)],
 )
 def test_model_gate_job_budget(spark, gate, budget):
     """Spark jobs of one warm gate call plus its collect: two runs of
